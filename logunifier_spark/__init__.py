@@ -6,8 +6,8 @@ Spark DataFrame pipeline over multi-turn agent transcripts
 (conv_id, turn_idx, role, text, tool, ts).
 
 Architecture (Spark-first, NOT a port):
-  - parsing      : per-executor-compiled vectorized grok/regex + logfmt engine
-                   inside Arrow-batched pandas UDFs (zero per-row Python)
+  - parsing      : per-executor-compiled grok bank, batch logfmt tokenizer
+                   and RE2-gated timestamp layouts inside one Arrow UDF
   - normalize    : native pyspark.sql.functions column expressions
                    (level map, emoji markers, validate-and-fix defaults)
   - enrich       : broadcast join against a pattern→label lookup table

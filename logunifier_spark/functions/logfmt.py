@@ -8,13 +8,16 @@ trash was caught and no `msg` key exists the trash is promoted to `msg`;
 key aliases are normalized (ts/timestamp/time/t→ts, msg/message→msg,
 err/error→error, traceid/tid→traceID, spanid→spanID, usr/user→user).
 
-Pure Python, stateful per line — called row-wise inside an Arrow-batched
-pandas UDF (only logfmt-keyed rows pay this cost; grok rows use vectorized
-str.extract)."""
+`decode` is pure Python and stateful per line: it is the reference.
+`decode_batch` tokenizes a whole batch in one regex pass and hands back
+only the lines that need `decode`'s state (bare words, duplicate keys,
+escapes); a hypothesis test pins the two equal (test_logfmt.py)."""
 
 from __future__ import annotations
 
 import re
+
+import numpy as np
 
 KEY_TS = "ts"
 KEY_LEVEL = "level"
@@ -206,3 +209,60 @@ def decode(line: str) -> tuple[dict[str, str], list[str]]:
             result[KEY_TRASH] = " ".join(trash)
             errors.append("log fmt trash caught")
     return result, errors
+
+
+# decode_batch: lines joined by _SEP and tokenized by one findall. The token
+# grammar is _TOKEN_RE's with _SEP excluded from every class and matched as
+# a token of its own, and without escapes (lines with a backslash take
+# `decode`), so within a line it scans exactly like _TOKEN_RE.
+_SEP = "\x00"
+_BATCH_TOKEN_RE = re.compile(
+    r'[ \t\r\n]*'
+    r'(?:([^ \t\r\n="\x00]*)(=)'       # 1: key (may be empty), 2: '='
+    r'(?:"([^"\x00]*)"?'                # 3: quoted value
+    r'|([^ \t\r\n\x00]*))'              # 4: bare value (may be empty)
+    r'|([^ \t\r\n="\x00]+)'            # 5: bare word
+    r'|(\x00)'                          # 6: line separator
+    r'|")',                             # stray quote: consumed, no token
+)
+
+
+def decode_batch(lines) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """`decode` over many lines at once, for the lines it can do without
+    per-line state. Returns (line, key, value, exact): one entry per decoded
+    pair, in line then pair order, with aliased keys; and the positions of
+    the lines left for `decode` (a bare word, a repeated key after aliasing,
+    a backslash, the separator character, or no key=value pair). A decoded
+    line's pairs are `decode(line)`'s result, in order, with no errors."""
+    lines = np.asarray(lines, dtype=object)
+    special = np.fromiter((("\\" in s) or (_SEP in s) for s in lines), bool,
+                          len(lines))
+    cand = np.flatnonzero(~special)
+    # a no-op stray-quote token keeps the columns defined for empty input
+    toks = _BATCH_TOKEN_RE.findall(_SEP.join(lines[cand].tolist())) or [("",) * 6]
+    key, eq, quoted, bare, word, sep = zip(*toks)
+
+    def flag(col) -> np.ndarray:
+        return np.fromiter(map(bool, col), bool, len(col))
+
+    row = np.cumsum(flag(sep))           # token -> position in cand
+    kv = np.flatnonzero(flag(eq))
+    krow = row[kv]
+    bad = np.bincount(krow, minlength=cand.size) == 0
+    bad[row[flag(word)]] = True
+    # aliased keys as integer codes (by hashing), to find repeats per line
+    raw = np.array(key, dtype=object)[kv]
+    aliased = {k: normalize_key(k) for k in set(raw)}
+    codes = {a: c for c, a in enumerate(dict.fromkeys(aliased.values()))}
+    code_of = {k: codes[a] for k, a in aliased.items()}
+    code = np.fromiter(map(code_of.__getitem__, raw), np.int64, kv.size)
+    width = max(1, len(codes))
+    pair = np.sort(krow * width + code)
+    bad[pair[1:][pair[1:] == pair[:-1]] // width] = True
+
+    keep = np.flatnonzero(~bad[krow])
+    sel = kv[keep]
+    vals = np.array(quoted, dtype=object)[sel] + np.array(bare, dtype=object)[sel]
+    exact = np.sort(np.concatenate([np.flatnonzero(special), cand[bad]]))
+    names = np.array(list(codes), dtype=object)
+    return cand[krow[keep]], names[code[keep]], vals, exact

@@ -187,12 +187,15 @@ def unify(
         "_text": text,
         "log_pattern_key": resolve_pattern_key(F.col("tool")),
     })
+    is_ecs = F.col("log_pattern_key") == "Ecs"
+    # the envelope never reads _parsed on Ecs rows (ecs_or below), so their
+    # text is not shipped to the Python worker
     df = df.withColumns({
-        "_parsed": parse_turns(F.col("_text"), F.col("log_pattern_key")),
-        "_j": F.when(F.col("log_pattern_key") == "Ecs", parse_ecs_json(F.col("_text"))),
+        "_parsed": parse_turns(F.when(~is_ecs, F.col("_text")),
+                               F.col("log_pattern_key")),
+        "_j": F.when(is_ecs, parse_ecs_json(F.col("_text"))),
     })
 
-    is_ecs = F.col("log_pattern_key") == "Ecs"
     j = F.col("_j")
     p = F.col("_parsed")
     # ecs rows: invalid JSON → pre-parse process error → Parse() early-exit

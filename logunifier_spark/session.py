@@ -49,7 +49,7 @@ def get_spark(app_name: str = "logunifier-spark",
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # bigger Arrow batches amortize the Python round-trip for the
-        # vectorized parse UDF (str.extract dominates; batch setup is fixed)
+        # parse UDF (its per-batch setup is a fixed cost)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
