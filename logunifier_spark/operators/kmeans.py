@@ -3,8 +3,9 @@ mixture balancing / semantic dedup shards.
 
 Classic Lloyd iterations in the scalable broadcast-centroids shape:
 
-  - centroids live on the DRIVER (k x dim ints, a few KiB) and enter the
-    plan as literals, so cell assignment is a zero-shuffle projection —
+  - centroids live on the DRIVER (k x dim ints, a few KiB) and ride in
+    the assignment kernel's closure, so cell assignment is a zero-shuffle
+    projection —
     the corpus is scanned once per iteration and never joined/multiplied;
   - the per-iteration update shuffles only k*dim (cid, pos, partial-sum)
     rows after map-side combine, independent of corpus size;
@@ -21,6 +22,14 @@ the quotient are < 2^53 for any realistic corpus (|sum| <= n_rows *
 scale * max|x|; at 10^12 rows x scale 1000 that is ~10^15 < 2^53 — note
 in the docstring contract, checked nowhere hot).
 
+Assignment is one numpy kernel per Arrow batch (`assign_np_udf`, through
+kernels.vector_udf): the k-centroid distance battery as Column folds is
+interpreted per element, or, as a fused scalar tree, outgrows the JIT
+method budget and deoptimizes the whole stage (the pq.py lesson).
+Vectors that fail the reader's validity rule (NULL, wrong dimension,
+NULL or NaN element) get a NULL assignment and take no part in the
+centroid update.
+
 No reference counterpart (the reference is a log pipeline); this extends
 the training-data toolkit next to similarity.py's IVF index, sharing its
 deterministic lowest-portable-hash seeding.
@@ -28,10 +37,12 @@ deterministic lowest-portable-hash seeding.
 
 from __future__ import annotations
 
-import pandas as pd
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import ArrayType, LongType
+
+from logunifier_spark.operators.kernels import vector_udf
 
 
 def quantize(vec: Column, scale: int = 1000) -> Column:
@@ -41,63 +52,23 @@ def quantize(vec: Column, scale: int = 1000) -> Column:
         vec, lambda x: F.floor(x.cast("double") * F.lit(scale)).cast("long"))
 
 
-def _sq_dist(a: Column, cent: list[int]) -> Column:
-    """Exact int64 squared L2 distance to a driver-held centroid literal."""
-    return F.aggregate(
-        F.zip_with(a, F.array(*[F.lit(int(c)) for c in cent]),
-                   lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"), lambda acc, v: acc + v)
-
-
-def _nearest(qv: Column, cents: list[list[int]]) -> Column:
-    """(dist, cid) argmin over centroid literals as array_min of structs —
-    a pure projection; lexicographic struct order breaks ties toward the
-    smaller cid."""
-    return F.array_min(F.array(*[
-        F.struct(_sq_dist(qv, cv).alias("dist"),
-                 F.lit(cid).cast("long").alias("cluster"))
-        for cid, cv in enumerate(cents)
-    ]))
-
-
-#: past this many centroids the Column struct-fold battery's generated
-#: code outgrows the JIT method budget and the whole fused stage runs
-#: deoptimized (the pq.py lesson: 10-26 s vs 1.3 s at sf0.1) — switch to
-#: one numpy Arrow kernel per batch, bit-identical integer math.
-COLUMN_BATTERY_MAX_K = 16
-
-
-def assign_np_udf(cents: list[list[int]], scale: int, with_dist: bool = False):
-    """array<float> embedding -> nearest-centroid id (or struct with the
-    int64 squared distance), one numpy batch per Arrow chunk. Bit-identical
-    to `_nearest` over `quantize`: same float64 quantization (pq._quant_np),
-    exact int64 squared-L2, argmin ties to the smaller cid. The UDF takes
-    the RAW vector column (a quantize() HOF as UDF arg breaks
-    ExtractPythonUDFs — CLAUDE.md) and quantizes inside."""
+def assign_np_udf(cents: list[list[int]], scale: int):
+    """array<float> embedding -> array<long> [cluster, dist]: the nearest
+    centroid and its int64 squared distance, one numpy batch per Arrow
+    chunk. Same quantization as `quantize` (pq._quant_np), exact int64
+    squared-L2, argmin ties to the smaller cid. The UDF takes the RAW
+    vector column (a quantize() HOF as a UDF argument breaks
+    ExtractPythonUDFs) and quantizes inside. Invalid vectors get NULL."""
     # function-level import: pq imports quantize from this module
     from logunifier_spark.operators.pq import _quant_np, _sub_assign
 
     dim = len(cents[0])
 
-    if with_dist:
-        @pandas_udf("struct<dist:long, cluster:long>")
-        def _assign_d(v: pd.Series) -> pd.DataFrame:
-            if len(v) == 0:
-                return pd.DataFrame({"dist": [], "cluster": []},
-                                    dtype="int64")
-            ids, dmin = _sub_assign(_quant_np(v, scale), cents, 0, dim)
-            return pd.DataFrame({"dist": dmin, "cluster": ids})
+    def _assign(mat: np.ndarray) -> np.ndarray:
+        ids, dmin = _sub_assign(_quant_np(mat, scale), cents, 0, dim)
+        return np.column_stack([ids, dmin])
 
-        return _assign_d
-
-    @pandas_udf("long")
-    def _assign(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype="int64")
-        ids, _ = _sub_assign(_quant_np(v, scale), cents, 0, dim)
-        return pd.Series(ids)
-
-    return _assign
+    return vector_udf(_assign, dim, ArrayType(LongType()))
 
 
 def seed_centroids(corpus: DataFrame, k: int, id_col: str = "vec_id",
@@ -145,13 +116,9 @@ def kmeans_centroids(corpus: DataFrame, k: int = 8, iters: int = 2,
                                quantize(F.col(vec_col), scale).alias("_q"))
     cents = seed_centroids(corpus, k, id_col, vec_col, scale)
     for _ in range(iters):
-        if k > COLUMN_BATTERY_MAX_K:
-            assigned = q.select(
-                "_q", assign_np_udf(cents, scale)(F.col(vec_col))
-                .alias("cluster"))
-        else:
-            assigned = q.select(
-                "_q", _nearest(F.col("_q"), cents)["cluster"].alias("cluster"))
+        assigned = q.select(
+            "_q", F.element_at(assign_np_udf(cents, scale)(F.col(vec_col)), 1)
+            .alias("cluster"))
         upd = (assigned
                .select("cluster", F.posexplode("_q").alias("pos", "v"))
                .groupBy("cluster", "pos")
@@ -159,6 +126,10 @@ def kmeans_centroids(corpus: DataFrame, k: int = 8, iters: int = 2,
                .collect())
         by_cid: dict[int, list[tuple[int, int, int]]] = {}
         for r in upd:
+            # invalid vectors have no cluster: no part in the update (a
+            # Spark filter on it would evaluate the UDF a second time)
+            if r["cluster"] is None:
+                continue
             by_cid.setdefault(int(r["cluster"]), []).append(
                 (int(r["pos"]), int(r["s"]), int(r["n"])))
         cents = [
@@ -174,21 +145,14 @@ def kmeans_fixed_point(corpus: DataFrame, k: int = 8, iters: int = 2,
                        vec_col: str = "embedding") -> DataFrame:
     """Train via `kmeans_centroids`, then return one row per input row:
     (id, cluster, dist) with the FINAL assignment and its squared
-    distance, all BIGINT."""
+    distance, all BIGINT (both NULL for an invalid vector)."""
     cents = kmeans_centroids(corpus, k, iters, scale, id_col, vec_col)
-    if k > COLUMN_BATTERY_MAX_K:
-        # fan_out: the Arrow UDF stage otherwise serializes onto one task
-        # for a one-file corpus (same rationale as the training passes)
-        from logunifier_spark.operators.dedup import fan_out
-        near_df = fan_out(corpus).select(
-            F.col(id_col),
-            assign_np_udf(cents, scale, with_dist=True)(F.col(vec_col))
-            .alias("_nc"))
-        return near_df.select(F.col(id_col),
-                              F.col("_nc.cluster").alias("cluster"),
-                              F.col("_nc.dist").alias("dist"))
-    q = corpus.select(F.col(id_col),
-                      quantize(F.col(vec_col), scale).alias("_q"))
-    near = _nearest(F.col("_q"), cents)
-    return q.select(F.col(id_col), near["cluster"].alias("cluster"),
-                    near["dist"].alias("dist"))
+    # fan_out: the Arrow UDF stage otherwise serializes onto one task
+    # for a one-file corpus (same rationale as the training passes)
+    from logunifier_spark.operators.dedup import fan_out
+    near_df = fan_out(corpus).select(
+        F.col(id_col),
+        assign_np_udf(cents, scale)(F.col(vec_col)).alias("_nc"))
+    return near_df.select(F.col(id_col),
+                          F.element_at("_nc", 1).alias("cluster"),
+                          F.element_at("_nc", 2).alias("dist"))

@@ -17,40 +17,41 @@ DuckDB side re-trains ALL m codebooks via the parameterized
 unrolled-Lloyd CTE generator (duck_oracles._kmeans_ctes with
 per-subspace prefixes) and must agree bit-for-bit.
 
-Engine shape — this is the module's one deliberate departure from the
-pure-Column kmeans.py path, and it is measured: evaluating m*k
-centroid distances per row as Column expressions is either m*k
-interpreted HOF folds (zip_with/aggregate lambdas run on the
-interpreted path per element) or a fused scalar tree that blows the
-JIT method budget (CLAUDE.md's 400-node lesson) — both measured
-10-20 s for a 5k x 64 corpus at sf0.1. The same math as ONE
-Arrow-batched numpy UDF (quantize, broadcast (n,k,d) diff, argmin) is
-vectorized C per batch and runs the whole encode in well under a
-second. Training assigns ALL m subspaces in one scan (one UDF), the
-update is a single posexplode + hash aggregate keyed (subspace,
-cluster, pos) — map-side combined to m*k*(D/m) rows regardless of
-corpus size — and seeding is ONE collect of the k lowest-hash full
-vectors, sliced driver-side. Per iteration: one scan, one tiny
-shuffle, exactly like kmeans.py, but m models at once.
+Engine shape, measured: evaluating m*k centroid distances per row as
+Column expressions is either m*k interpreted HOF folds (zip_with/
+aggregate lambdas run on the interpreted path per element) or a fused
+scalar tree that blows the JIT method budget (the 400-node lesson) —
+both measured 10-20 s for a 5k x 64 corpus at sf0.1. The same math as ONE
+Arrow-batched numpy kernel (quantize, broadcast (n,k,d) diff, argmin;
+`kernels.vector_udf`) is vectorized C per batch and runs the whole
+encode in well under a second. Vectors that fail the reader's validity
+rule (NULL, wrong dimension, NULL or NaN element) get NULL codes and
+take no part in training. Training assigns ALL m subspaces in one scan
+(one UDF), the update is a single posexplode + hash aggregate keyed
+(subspace, cluster, pos) — map-side combined to m*k*(D/m) rows
+regardless of corpus size — and seeding is ONE collect of the k
+lowest-hash full vectors, sliced driver-side. Per iteration: one scan,
+one tiny shuffle, exactly like kmeans.py, but m models at once.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import ArrayType, LongType
 
+from logunifier_spark.operators.kernels import vector_udf
 from logunifier_spark.operators.kmeans import quantize
 
+_LONGS = ArrayType(LongType())
 
-def _quant_np(vecs: pd.Series, scale: int) -> np.ndarray:
-    """(n, dim) int64 — numpy mirror of kmeans.quantize: float32 ->
-    float64 -> *scale -> floor. Bit-identical to the Column form (same
-    IEEE ops in the same order)."""
-    a = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-    return np.floor(a * scale).astype(np.int64)
+
+def _quant_np(mat: np.ndarray, scale: int) -> np.ndarray:
+    """(n, dim) int64 — numpy mirror of kmeans.quantize over the reader's
+    float64 matrix: *scale -> floor. Bit-identical to the Column form
+    (same IEEE ops in the same order)."""
+    return np.floor(mat * scale).astype(np.int64)
 
 
 def _sub_assign(q: np.ndarray, cents: list[list[int]], lo: int,
@@ -103,19 +104,16 @@ def pq_codebooks(corpus: DataFrame, dim: int, m: int = 8, k: int = 16,
     for _ in range(iters):
         bks = [list(map(list, b)) for b in books]
 
-        @pandas_udf("array<long>")
-        def assign_all(v: pd.Series) -> pd.Series:
-            if len(v) == 0:
-                return pd.Series([], dtype=object)
-            qn = _quant_np(v, scale)
-            ids = [(_sub_assign(qn, bks[j], j * d, (j + 1) * d)[0])
-                   for j in range(m)]
-            out = np.stack(ids, axis=1)
-            return pd.Series([row.tolist() for row in out])
+        def assign_all(mat: np.ndarray) -> np.ndarray:
+            qn = _quant_np(mat, scale)
+            return np.column_stack([_sub_assign(qn, bks[j], j * d,
+                                                (j + 1) * d)[0]
+                                    for j in range(m)])
 
         # UDF in its own projection; explode in a separate select
         # (CLAUDE.md: keep UDFs out of Generate nodes)
-        assigned = q.select("_q", assign_all(F.col(vec_col)).alias("_cl"))
+        assigned = q.select("_q", vector_udf(assign_all, dim, _LONGS)(
+            F.col(vec_col)).alias("_cl"))
         ex = assigned.select("_cl", F.posexplode("_q").alias("pos", "v"))
         jcol = F.floor(F.col("pos") / F.lit(d)).cast("int")
         upd = (ex.select(jcol.alias("j"),
@@ -127,6 +125,10 @@ def pq_codebooks(corpus: DataFrame, dim: int, m: int = 8, k: int = 16,
                  .collect())
         acc: dict[tuple[int, int], list[tuple[int, int, int]]] = {}
         for r in upd:
+            # invalid vectors have no cluster: no part in the update (a
+            # Spark filter on it would evaluate the UDF a second time)
+            if r["cluster"] is None:
+                continue
             acc.setdefault((int(r["j"]), int(r["cluster"])), []).append(
                 (int(r["pos"]), int(r["s"]), int(r["n"])))
         books = [
@@ -153,20 +155,18 @@ def pq_encode(corpus: DataFrame, dim: int, m: int = 8, k: int = 16,
     books = pq_codebooks(corpus, dim, m, k, iters, scale, id_col, vec_col)
     shifts = [1 << (bits * j) for j in range(m)]
 
-    @pandas_udf("array<long>")
-    def encode(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype=object)
-        qn = _quant_np(v, scale)
+    def encode(mat: np.ndarray) -> np.ndarray:
+        qn = _quant_np(mat, scale)
         code = np.zeros(len(qn), dtype=np.int64)
         err = np.zeros(len(qn), dtype=np.int64)
         for j in range(m):
             ids, dmin = _sub_assign(qn, books[j], j * d, (j + 1) * d)
             code += ids * shifts[j]
             err += dmin
-        return pd.Series([[int(c), int(e)] for c, e in zip(code, err)])
+        return np.column_stack([code, err])
 
-    out = corpus.select(F.col(id_col), encode(F.col(vec_col)).alias("_ce"))
+    out = corpus.select(F.col(id_col), vector_udf(encode, dim, _LONGS)(
+        F.col(vec_col)).alias("_ce"))
     return out.select(F.col(id_col),
                       F.element_at("_ce", 1).alias("code"),
                       F.element_at("_ce", 2).alias("err"))
@@ -207,20 +207,16 @@ def ivfpq_topk(corpus: DataFrame, queries: DataFrame, dim: int,
     cells = pq_codebooks(corpus, dim, 1, n_cells, iters, scale,
                          id_col, vec_col)[0]
 
-    @pandas_udf("array<long>")
-    def cell_and_codes(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype=object)
-        qn = _quant_np(v, scale)
+    def cell_and_codes(mat: np.ndarray) -> np.ndarray:
+        qn = _quant_np(mat, scale)
         cell, _ = _sub_assign(qn, cells, 0, dim)
-        cols = [cell] + [
+        return np.column_stack([cell] + [
             _sub_assign(qn, books[j], j * d, (j + 1) * d)[0]
-            for j in range(m)]
-        out = np.stack(cols, axis=1)
-        return pd.Series([row.tolist() for row in out])
+            for j in range(m)])
 
     enc = (corpus.select(F.col(id_col),
-                         cell_and_codes(F.col(vec_col)).alias("_a"))
+                         vector_udf(cell_and_codes, dim, _LONGS)(
+                             F.col(vec_col)).alias("_a"))
                  .select(F.col(id_col),
                          F.element_at("_a", 1).alias("_cell"),
                          *[F.element_at("_a", j + 2).alias(f"_c{j}")
@@ -232,11 +228,8 @@ def ivfpq_topk(corpus: DataFrame, queries: DataFrame, dim: int,
     # codegen per run — the tables are data, not plan structure.
     np_cells = np.asarray(cells, dtype=np.int64)
 
-    @pandas_udf("array<long>")
-    def query_tables(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype=object)
-        qn = _quant_np(v, scale)
+    def query_tables(mat: np.ndarray) -> np.ndarray:
+        qn = _quant_np(mat, scale)
         dc = ((qn[:, None, :] - np_cells[None, :, :]) ** 2).sum(axis=2)
         # stable ascending argsort: ties keep the smaller cid, same as
         # the (dist, cid) struct sort
@@ -247,11 +240,11 @@ def ivfpq_topk(corpus: DataFrame, queries: DataFrame, dim: int,
             sub = qn[:, j * d:(j + 1) * d]
             parts.append(((sub[:, None, :] - b[None, :, :]) ** 2)
                          .sum(axis=2))
-        out = np.concatenate(parts, axis=1)
-        return pd.Series([row.tolist() for row in out])
+        return np.concatenate(parts, axis=1)
 
     qt = queries.select(F.col(qid_col),
-                        query_tables(F.col(vec_col)).alias("_a"))
+                        vector_udf(query_tables, dim, _LONGS)(
+                            F.col(vec_col)).alias("_a"))
     qx = qt.select(
         F.col(qid_col),
         *[F.slice(F.col("_a"), nprobe + j * k_codes + 1, k_codes)

@@ -28,23 +28,26 @@ output component j and input index i (both 0-based),
 The mod-2^31 reduction precedes the multiply (CLAUDE.md: id*MULT
 overflows int64 otherwise); bit 15 avoids the LCG's weak low bits.
 
-Engine shape — one Arrow-batched numpy UDF per row batch (the
-pq.py lesson: per-component Column folds are interpreted-HOF slow and
-the fused scalar tree deopts the JIT at this term count); the matrix
-S (r x dim) is built once per executor from the hash spec, the batch
-computes floor(V * 2^bits @ S-elementwise) … concretely
+Engine shape — one Arrow-batched numpy kernel per row batch
+(`kernels.vector_udf`; the pq.py lesson: per-component Column folds are
+interpreted-HOF slow and the fused scalar tree deopts the JIT at this
+term count); the matrix S (r x dim) is built once from the hash spec
+and rides in the kernel's closure, the batch computes
 floor((v * sign) * 2^bits) summed along dim — vectorized C. No
 shuffle at all: the projection is a row-local map; the long-format
 explode stays in codegen (UDF out of the Generate node, CLAUDE.md).
+Vectors that fail the reader's validity rule (NULL, wrong dimension,
+NULL or NaN element) have no sketch rows.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import ArrayType, LongType
+
+from logunifier_spark.operators.kernels import vector_udf
 
 RP_MULT = 2_654_435_761
 RP_OFF = 12_345
@@ -70,20 +73,16 @@ def rp_project(emb: DataFrame, dim: int, r: int = 16,
     2^scale_bits (exact double). Row-local map, zero shuffles."""
     from logunifier_spark.operators.dedup import fan_out
     scale = float(1 << scale_bits)
+    signs = rp_sign_matrix(dim, r)  # (r, dim)
 
-    @pandas_udf("array<long>")
-    def _project(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype=object)
-        signs = rp_sign_matrix(dim, r)  # (r, dim), per-executor rebuild
-        v = np.stack([np.asarray(x, dtype=np.float64) for x in vecs])
+    def _project(v: np.ndarray) -> np.ndarray:
         # terms[n, j, i] = floor(v[n, i] * sign[j, i] * 2^bits) — exact
         terms = np.floor(v[:, None, :] * signs[None, :, :] * scale)
-        comps = terms.astype(np.int64).sum(axis=2)  # (n, r) exact int64
-        return pd.Series(list(comps))
+        return terms.astype(np.int64).sum(axis=2)  # (n, r) exact int64
 
     e = fan_out(emb, divisor=2).select(
-        F.col(id_col), _project(F.col(vec_col)).alias("_proj"))
+        F.col(id_col), vector_udf(_project, dim, ArrayType(LongType()))(
+            F.col(vec_col)).alias("_proj"))
     return (e.select(id_col, F.posexplode("_proj").alias("comp", "val_fp"))
              .select(F.col(id_col), F.col("comp").cast("long").alias("comp"),
                      F.col("val_fp"),

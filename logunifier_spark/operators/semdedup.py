@@ -11,9 +11,9 @@ Spark shape, built for 10^12 rows:
 
   - clustering is `kmeans.kmeans_centroids` — integer-exact Lloyd with
     driver-held centroids, so the final assignment here is a ZERO-shuffle
-    projection against centroid literals (no assignment table, no join
-    back to the corpus: the corpus is scanned once for training stats per
-    iteration and once for the pairing pass);
+    projection through the numpy assignment kernel (no assignment table,
+    no join back to the corpus: the corpus is scanned once for training
+    stats per iteration and once for the pairing pass);
   - the within-cluster self-join shuffles the corpus once on `cluster`.
     Join-key cardinality = k, so k IS the parallelism of the pairing
     stage: size k so the average cluster holds ~10^3-10^4 docs (the paper
@@ -26,11 +26,13 @@ Spark shape, built for 10^12 rows:
     assignment projection, and the filter is a broadcast semi-join on at
     most k rows.
 
-Everything stays JVM-side: quantization, distance argmin, and the cosine
-are Catalyst expressions (see kmeans.py / similarity.py for why the
+Cluster assignment is kmeans.py's integer numpy kernel and the pair
+cosine is similarity.py's Column fold (see those modules for why the
 arithmetic is engine-portable), so the whole pipeline carries a DuckDB
 value-hash oracle (duck_oracles.semdedup_pairs_sql) despite being an
-iterative algorithm.
+iterative algorithm. A vector that fails the kernel reader's validity
+rule (NULL, wrong dimension, NULL or NaN element) gets a NULL cluster
+and pairs with nothing.
 
 No reference counterpart (the reference is a log pipeline;
 /root/reference has no embedding ops) — this extends the training-data
@@ -46,14 +48,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from logunifier_spark.operators.kmeans import (
-    COLUMN_BATTERY_MAX_K,
-    _nearest,
-    assign_np_udf,
-    kmeans_centroids,
-    quantize,
-)
-from logunifier_spark.operators.similarity import dot, norm
+from logunifier_spark.operators.kmeans import assign_np_udf, kmeans_centroids
+from logunifier_spark.operators.similarity import cosine, norm
 
 #: the paper's target mean cluster population — k defaults to
 #: ceil(n / PAPER_TARGET) so per-cluster pair work stays bounded as the
@@ -101,12 +97,7 @@ def semdedup_pairs(emb: DataFrame, id_col: str = "vec_id",
         group pairs get the rep's self-cosine from the same expression).
         With the collapse ON, `max_cluster` counts DISTINCT vectors per
         cluster (the minhash hot-bucket cap rationale); `expand=False`
-        returns representative pairs only.
-      - cluster assignment switches from the Column struct-fold battery
-        to a numpy Arrow kernel once k > 16: the battery's generated
-        code grows linearly with k and deoptimizes the fused stage (the
-        pq.py JIT-budget lesson); both paths are integer-exact and
-        bit-identical (tested)."""
+        returns representative pairs only."""
     members = None
     corpus = emb
     if collapse_exact:
@@ -115,27 +106,17 @@ def semdedup_pairs(emb: DataFrame, id_col: str = "vec_id",
     if k is None:
         k = auto_k(corpus.count())
     cents = kmeans_centroids(emb, k, iters, scale, id_col, vec_col)
-    # pre-project the quantized vector ONCE — inlining quantize() into
-    # _nearest would re-evaluate the transform per centroid distance.
-    # The norm is likewise per ROW here, not per pair: the interpreted
-    # aggregate fold is the pairing stage's unit cost, and norm-per-pair
-    # would triple it for identical doubles (same fold, same input).
-    if k > COLUMN_BATTERY_MAX_K:
-        # numpy kernel takes the RAW plain column (a quantize() HOF as
-        # UDF arg breaks ExtractPythonUDFs — CLAUDE.md)
-        assigned = (corpus
-                    .select(F.col(id_col), F.col(vec_col).alias("_v"))
-                    .withColumn("cluster",
-                                assign_np_udf(cents, scale)(F.col("_v")))
-                    .select(id_col, "_v", norm(F.col("_v")).alias("_nrm"),
-                            "cluster"))
-    else:
-        assigned = (corpus
-                    .select(F.col(id_col), F.col(vec_col).alias("_v"),
-                            quantize(F.col(vec_col), scale).alias("_q"))
-                    .select(id_col, "_v", norm(F.col("_v")).alias("_nrm"),
-                            _nearest(F.col("_q"), cents)["cluster"]
-                            .alias("cluster")))
+    # The norm is per ROW here, not per pair: the interpreted aggregate
+    # fold is the pairing stage's unit cost, and norm-per-pair would
+    # triple it for identical doubles (same fold, same input). The
+    # kernel takes the RAW plain column (a quantize() HOF as a UDF
+    # argument breaks ExtractPythonUDFs).
+    assigned = (corpus
+                .select(F.col(id_col), F.col(vec_col).alias("_v"))
+                .withColumn("cluster", F.element_at(
+                    assign_np_udf(cents, scale)(F.col("_v")), 1))
+                .select(id_col, "_v", norm(F.col("_v")).alias("_nrm"),
+                        "cluster"))
     if max_cluster is not None:
         small = (assigned.groupBy("cluster")
                          .agg(F.count("*").alias("_n"))
@@ -147,8 +128,8 @@ def semdedup_pairs(emb: DataFrame, id_col: str = "vec_id",
     # scan + one Exchange with a ReusedExchange on the probe side —
     # renamed projections defeat the reuse rule and read the corpus twice
     a, b = assigned.alias("a"), assigned.alias("b")
-    cos = dot(F.col("a._v"), F.col("b._v")) \
-        / (F.col("a._nrm") * F.col("b._nrm") + F.lit(1e-12))
+    cos = cosine(F.col("a._v"), F.col("b._v"), F.col("a._nrm"),
+                 F.col("b._nrm"))
     pairs = (a.join(b, on=F.col("a.cluster") == F.col("b.cluster"))
               .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
               .where(cos >= threshold)
@@ -166,8 +147,7 @@ def semdedup_pairs(emb: DataFrame, id_col: str = "vec_id",
     # same unrounded threshold, with the rep's (possibly cap-filtered)
     # cluster.
     from logunifier_spark.operators.similarity import expand_rep_pairs_vec
-    scos = dot(F.col("_v"), F.col("_v")) \
-        / (F.col("_nrm") * F.col("_nrm") + F.lit(1e-12))
+    scos = cosine(F.col("_v"), F.col("_v"), F.col("_nrm"), F.col("_nrm"))
     selfcos = (assigned
                .select(F.col(id_col).alias("_rep"), "cluster",
                        scos.alias("_c"))

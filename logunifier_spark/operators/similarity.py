@@ -1,8 +1,8 @@
 """Similarity search over embedding columns (array<float>).
 
   - brute_force_topk: exact cosine top-k against a query set — the
-    correctness baseline. Dot products via F.zip_with + F.aggregate
-    (JVM-side, codegen) — no Python.
+    correctness baseline. Each corpus vector is scored against the whole
+    query matrix in one numpy kernel per Arrow batch (`kernels.vector_udf`).
   - lsh_topk: random-hyperplane LSH-bucketed approximate variant — the
     100 TB scale path: candidates restricted to matching sign-bucket keys
     (probing all single-bit flips), so the join touches a small slice of the
@@ -14,6 +14,13 @@
     BOUNDED default (exact-vector collapse + banded sign-bit LSH candidates
     + exact cosine verify); the O(n²) cross join survives behind exact=True
     as the correctness baseline.
+
+One rule for the vector math: a vector column scored against a
+driver-held constant matrix (queries, hyperplanes, centroids) is a
+numpy kernel through the shared Arrow reader in kernels.py; joined
+(vec, vec) pairs are scored by the Column fold `cosine`. Both sum in
+index order, so every score is bit-identical to the other form and to
+the DuckDB oracles' list_sum spec.
 """
 
 from __future__ import annotations
@@ -21,11 +28,12 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import ArrayType, DoubleType, IntegerType, LongType
 from pyspark.sql.window import Window
+
+from logunifier_spark.operators.kernels import vector_udf
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -40,109 +48,45 @@ def norm(a: Column) -> Column:
                               F.lit(0.0), lambda acc, v: acc + v))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b) + F.lit(1e-12))
+def cosine(a: Column, b: Column, na: Column | None = None,
+           nb: Column | None = None) -> Column:
+    """THE Column cosine: dot / (norm * norm + eps), eps = 1e-12, as
+    interpreted index-order folds. Pass `na`/`nb` when the norms are
+    already per-row columns, so a pair join does not re-fold them per
+    pair. A NULL vector or a length mismatch (zip_with pads with null)
+    scores NULL; so does a NULL or NaN element — NaN becomes NULL here
+    because Spark orders NaN above every double and `cos >= t` would
+    hold."""
+    na = norm(a) if na is None else na
+    nb = norm(b) if nb is None else nb
+    return F.nanvl(dot(a, b) / (na * nb + F.lit(1e-12)),
+                   F.lit(None).cast("double"))
 
 
-def _vec_lengths(v: pd.Series) -> np.ndarray:
-    """Per-row vector lengths; -1 for SQL NULL rows."""
-    return np.fromiter(((-1 if x is None else len(x)) for x in v),
-                       dtype=np.int64, count=len(v))
-
-
-def _index_order_dots(v: pd.Series, cmat: np.ndarray):
+def _index_order_dots(mat: np.ndarray, cmat: np.ndarray):
     """THE shared battery recurrence for every cosine kernel in this
-    module: (dots (n,k), vnorm2 (n,), valid (n,) bool) where dots/vnorm2
-    accumulate one dimension at a time in index order — exactly the
-    `dot`/`norm` F.aggregate recurrence in float64, vectorized ACROSS
-    batch rows — so scores (including near-zero sign decisions and tie
-    breaks) stay bit-identical to the Column forms and the DuckDB
-    oracles' list_sum spec. Rows that are NULL or whose length differs
-    from cmat's dim are flagged invalid (the zip_with forms padded with
-    null and produced a NULL score); callers must mask them to None."""
-    n = len(v)
-    k, dim = cmat.shape
-    valid = _vec_lengths(v) == dim
-    dots = np.zeros((n, k))
-    vn = np.zeros(n)
-    idx = np.flatnonzero(valid)
-    if idx.size:
-        mat = np.stack([np.asarray(v.iloc[i], dtype=np.float64)
-                        for i in idx])
-        d = np.zeros((len(idx), k))
-        nv = np.zeros(len(idx))
-        for i in range(dim):   # index order == the fold's order
-            d = d + mat[:, i:i + 1] * cmat[:, i][None, :]
-            nv = nv + mat[:, i] * mat[:, i]
-        dots[idx] = d
-        vn[idx] = nv
-    return dots, vn, valid
+    module: (dots (n,k), vnorm2 (n,)) where dots/vnorm2 accumulate one
+    dimension at a time in index order — exactly the `dot`/`norm`
+    F.aggregate recurrence in float64, vectorized ACROSS batch rows — so
+    scores (including near-zero sign decisions and tie breaks) stay
+    bit-identical to the Column forms and the DuckDB oracles' list_sum
+    spec. A matmul's pairwise summation could flip them."""
+    d = np.zeros((len(mat), cmat.shape[0]))
+    nv = np.zeros(len(mat))
+    for i in range(cmat.shape[1]):   # index order == the fold's order
+        d = d + mat[:, i:i + 1] * cmat[:, i][None, :]
+        nv = nv + mat[:, i] * mat[:, i]
+    return d, nv
 
 
-def _index_order_norm2(cmat: np.ndarray) -> np.ndarray:
-    """Squared norms of the constant matrix's rows, accumulated in the
-    same per-dimension index order as `_index_order_dots`."""
+def _cosines(mat: np.ndarray, cmat: np.ndarray) -> np.ndarray:
+    """(n, k) cosines of the rows against the constant matrix's rows —
+    the numpy twin of `cosine`, same expression shape."""
+    dots, nv = _index_order_dots(mat, cmat)
     nc = np.zeros(cmat.shape[0])
     for i in range(cmat.shape[1]):
         nc = nc + cmat[:, i] * cmat[:, i]
-    return nc
-
-
-def _masked(vals: np.ndarray, valid: np.ndarray) -> pd.Series:
-    """Scalar kernel results with invalid rows as SQL NULL (object
-    dtype — float64 NaN is NOT null, and Spark sorts NaN as the
-    LARGEST double, which would poison a desc top-k window). The
-    all-valid batch — the only case on a well-formed corpus — keeps
-    the numeric dtype: object arrays cross Arrow element-by-element."""
-    if valid.all():
-        return pd.Series(vals)
-    out = vals.astype(object)
-    out[~valid] = None
-    return pd.Series(out)
-
-
-def pair_cosine(a: Column, b: Column) -> Column:
-    """Arrow-batched cosine over joined (vec, vec) pair columns —
-    BIT-IDENTICAL to the interpreted `cosine` fold (and therefore to
-    the DuckDB oracles' list_sum spec): the `_index_order_dots`
-    recurrence, grouped by pair length so mixed-dimension batches still
-    compute every well-formed pair (zip_with semantics: a NULL vector
-    or a length mismatch yields a NULL score). The HOF fold measured
-    ~50 µs/element (CLAUDE.md); on the sf0.1 brute-force battery this
-    kernel is ~6x end-to-end. Same shape as the pq.py / kmeans.py
-    large-k lesson: vector batteries belong in numpy. The UDF is built
-    at CALL time — a module-level @pandas_udf parses its DDL type
-    against the active SparkContext at import (crashes sessionless
-    imports, the verify-skill gotcha)."""
-    @pandas_udf("double")
-    def _kernel(x: pd.Series, y: pd.Series) -> pd.Series:
-        n = len(x)
-        if n == 0:
-            return pd.Series([], dtype="float64")
-        lx, ly = _vec_lengths(x), _vec_lengths(y)
-        valid = (lx >= 0) & (lx == ly)
-        out = np.empty(n, dtype=object)
-        out[:] = None
-        for length in np.unique(lx[valid]):
-            idx = np.flatnonzero(valid & (lx == length))
-            va = np.stack([np.asarray(x.iloc[i], dtype=np.float64)
-                           for i in idx])
-            vb = np.stack([np.asarray(y.iloc[i], dtype=np.float64)
-                           for i in idx])
-            dot_ = np.zeros(len(idx))
-            na = np.zeros(len(idx))
-            nb = np.zeros(len(idx))
-            for i in range(int(length)):  # index order == the fold's
-                dot_ = dot_ + va[:, i] * vb[:, i]
-                na = na + va[:, i] * va[:, i]
-                nb = nb + vb[:, i] * vb[:, i]
-            vals = dot_ / (np.sqrt(na) * np.sqrt(nb) + 1e-12)
-            if len(idx) == n:     # all-valid single-dim batch: keep the
-                return pd.Series(vals)  # numeric dtype through Arrow
-            out[idx] = vals
-        return pd.Series(out)
-
-    return _kernel(a, b)
+    return dots / (np.sqrt(nv)[:, None] * np.sqrt(nc)[None, :] + 1e-12)
 
 
 def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
@@ -151,28 +95,23 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     """Exact top-k against a SMALL query set. Returns (qid, vec_id,
     score, rank).
 
-    The query set rides into the kernel closure as a matrix (it was
-    already broadcast under the previous crossJoin form — collecting it
-    driver-side is the same size assumption, the ivf_centroids
-    pattern; the collect is one tiny job at plan-construction time).
-    Each corpus vector is scored against ALL queries in one Arrow
-    batch — a battery, the pq.py/_argmax_cell shape — then the score
-    array posexplodes JVM-side and position maps back to qid through
-    an array literal. Scale shape: the old crossJoin-HOF form ran one
-    interpreted fold PER (corpus, query) PAIR — n·q·dim lambda calls —
-    while the battery ships each corpus vector ONCE and runs dim numpy
-    ops per Arrow batch. Honest micro-bench caveat: at sf0.1 the
-    corpus is only 2k vectors, so the row is fixed-overhead bound and
-    the battery's worker spin-up + query-collect job actually LOSES
-    the interleaved A/B (~0.9 vs ~0.56 s); the win shows where it
-    matters — ann_recall (battery + numpy bucketing) 1.5→0.5 s and at
-    any corpus size where per-pair work dominates. Scores are
-    bit-identical to the `cosine` fold (the shared `_index_order_dots`
-    recurrence). Query rows with a NULL qid or NULL embedding are
-    DROPPED (the crossJoin form emitted a null-scored partition for
-    them — garbage either way); corpus rows with a NULL or
-    wrong-dimension embedding score NULL per query and fall out of the
-    rank window, exactly like the zip_with form."""
+    The query set rides into the kernel closure as a matrix (collected
+    driver-side — the ivf_centroids pattern; one tiny job at
+    plan-construction time). Each corpus vector is scored against ALL
+    queries in one Arrow batch — a battery — then the score array
+    posexplodes JVM-side and position maps back to qid through an array
+    literal. Scale shape: a crossJoin + fold runs one interpreted fold
+    PER (corpus, query) PAIR — n·q·dim lambda calls — while the battery
+    ships each corpus vector ONCE and runs dim numpy ops per Arrow
+    batch. At sf0.1 (2k vectors) the row is fixed-overhead bound: the
+    query-collect job and worker spin-up lost an interleaved A/B to the
+    crossJoin form (~0.9 vs ~0.56 s), while ann_recall went 1.5 → 0.5 s.
+    Scores are bit-identical to the `cosine` fold (the shared
+    `_index_order_dots` recurrence). Query rows with a NULL qid or NULL
+    embedding are DROPPED. Corpus rows that fail the reader's validity
+    rule (NULL, wrong dimension, NULL or NaN element) get a NULL score
+    array and are DROPPED from the output — not ranked last, as a NULL
+    score in the rank window would be."""
     from logunifier_spark.operators.dedup import fan_out
     qid_type = queries.schema[qid_col].dataType
     qrows = sorted(queries.select(qid_col, vec_col)
@@ -181,31 +120,21 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
                           .collect(),
                    key=lambda r: r[qid_col])
     qids = [r[qid_col] for r in qrows]
-    if not qids:  # empty query set: the crossJoin form returned empty
+    if not qids:  # empty query set: empty result, same schema
         return corpus.select(
             F.lit(None).cast(qid_type).alias(qid_col),
             F.col(id_col), F.lit(0.0).alias("score"),
             F.lit(0).alias("rank")).where(F.lit(False))
     qmat = np.array([[float(x) for x in r[vec_col]] for r in qrows],
                     dtype=np.float64)                       # (q, dim)
-
-    @pandas_udf("array<double>")
-    def _battery(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype="object")
-        dots, nv, valid = _index_order_dots(v, qmat)
-        nc = _index_order_norm2(qmat)
-        scores = dots / (np.sqrt(nv)[:, None] * np.sqrt(nc)[None, :] + 1e-12)
-        if valid.all():
-            return pd.Series(list(scores))
-        return pd.Series([scores[i] if valid[i] else None
-                          for i in range(len(v))])
+    battery = vector_udf(lambda mat: _cosines(mat, qmat), qmat.shape[1],
+                         ArrayType(DoubleType()))
 
     # UDF in its own projection; the posexplode runs in a SEPARATE
     # select (ExtractPythonUDFs cannot place a UDF inside a Generate
     # node — CLAUDE.md)
     c = fan_out(corpus).select(F.col(id_col),
-                               _battery(F.col(vec_col)).alias("_s"))
+                               battery(F.col(vec_col)).alias("_s"))
     # cast: F.lit of small Python ints is IntegerType — the output qid
     # must carry the QUERY frame's type regardless of row count/values
     qid_arr = F.array(*[F.lit(q) for q in qids])
@@ -238,28 +167,25 @@ def hyperplane_bucket(vec: Column, dim: int, n_bits: int = 12) -> Column:
     is bit-identical to the `dot` Column form and to the oracle's
     list_sum: a matmul's pairwise summation could flip it. n_bits
     interpreted folds per row were the dominant cost of lsh_topk at
-    sf0.1 (the pq.py lesson again). NULL / wrong-dimension vectors get
-    a NULL bucket (the fold form scored them null → null bucket) and
-    drop out of the equi-join."""
+    sf0.1 (the pq.py lesson again). Vectors that fail the reader's
+    validity rule get a NULL bucket and drop out of the equi-join."""
     planes = np.array([_hyperplane(dim, b) for b in range(n_bits)],
                       dtype=np.float64)             # (n_bits, dim)
     weights = (1 << np.arange(n_bits)).astype(np.int64)
 
-    @pandas_udf("long")
-    def _bucket(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype="int64")
-        dots, _, valid = _index_order_dots(v, planes)
-        return _masked((dots >= 0).astype(np.int64) @ weights, valid)
+    def _bucket(mat: np.ndarray) -> np.ndarray:
+        dots, _ = _index_order_dots(mat, planes)
+        return (dots >= 0).astype(np.int64) @ weights
 
-    return _bucket(vec)
+    return vector_udf(_bucket, dim, LongType())(vec)
 
 
 def lsh_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 10,
              n_bits: int = 12, id_col: str = "vec_id",
              vec_col: str = "embedding", qid_col: str = "qid") -> DataFrame:
     """Approximate top-k: join on hyperplane buckets with 1-bit probing.
-    Returns (qid, vec_id, score, rank) over the candidate set."""
+    Returns (qid, vec_id, score, rank) over the candidate set, scored by
+    the `cosine` fold on the joined pairs."""
     from logunifier_spark.operators.dedup import fan_out
     c = fan_out(corpus).select(
         F.col(id_col), F.col(vec_col).alias("_cv"),
@@ -272,7 +198,8 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 10,
                        [F.col("b0").bitwiseXOR(F.lit(1 << i)) for i in range(n_bits)]))
     q = qb.select(qid_col, "_qv", F.explode(probes).alias("bucket"))
     scored = (c.join(q, on="bucket")
-                .select(qid_col, id_col, pair_cosine(F.col("_cv"), F.col("_qv")).alias("score")))
+                .select(qid_col, id_col,
+                        cosine(F.col("_cv"), F.col("_qv")).alias("score")))
     w = Window.partitionBy(qid_col).orderBy(F.desc("score"), F.asc(id_col))
     return (scored.dropDuplicates([qid_col, id_col])
                   .withColumn("rank", F.row_number().over(w))
@@ -308,29 +235,23 @@ def _argmax_cell(vec: Column, cents: list[tuple[int, list[float]]]) -> Column:
     ivf_topk at sf0.1). Bit-identical to the previous array_max-over-
     structs form: scores accumulate per dimension in index order
     (exactly the `cosine` fold recurrence, same final
-    dot/(norm*norm + 1e-12) expression shape), and ties pick the
+    dot/(norm*norm + eps) expression shape), and ties pick the
     LARGER cid (struct comparison was lexicographic on (score, cid)) —
     the reversed-argmax picks the last maximum. Still a pure
     projection: centroids ride into the UDF closure, NO shuffle.
-    NULL / wrong-dimension vectors get a NULL cid and drop out of the
-    probe equi-join."""
+    Vectors that fail the reader's validity rule get a NULL cid and
+    drop out of the probe equi-join."""
     cids = [cid for cid, _ in cents]
     assert cids == list(range(len(cents))), "cid must equal list index"
     cmat = np.array([cv for _, cv in cents], dtype=np.float64)  # (k, dim)
     k = cmat.shape[0]
 
-    @pandas_udf("int")
-    def _assign(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype="int32")
-        dots, nv, valid = _index_order_dots(v, cmat)
-        nc = _index_order_norm2(cmat)
-        scores = dots / (np.sqrt(nv)[:, None] * np.sqrt(nc)[None, :] + 1e-12)
+    def _best(mat: np.ndarray) -> np.ndarray:
         # ties -> larger cid: argmax returns the FIRST max, so reverse
-        best = (k - 1) - np.argmax(scores[:, ::-1], axis=1)
-        return _masked(best.astype(np.int32), valid)
+        scores = _cosines(mat, cmat)
+        return ((k - 1) - np.argmax(scores[:, ::-1], axis=1)).astype(np.int32)
 
-    return _assign(vec)
+    return vector_udf(_best, cmat.shape[1], IntegerType())(vec)
 
 
 def _topn_cells(vec: Column, cents: list[tuple[int, list[float]]],
@@ -351,12 +272,15 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
              id_col: str = "vec_id", vec_col: str = "embedding",
              qid_col: str = "qid") -> DataFrame:
     """IVF coarse quantization: deterministic corpus-sample centroids held
-    as driver-side literals; cell assignment is a zero-shuffle projection
-    (array_max over broadcast-constant scores); queries probe the nprobe
+    on the driver; cell assignment is a zero-shuffle projection (one
+    numpy kernel against the centroid matrix); queries probe the nprobe
     nearest cells. The only shuffle in the plan is the cell join itself,
-    keyed on cid — the corpus is touched once, never multiplied."""
+    keyed on cid — the corpus is touched once, never multiplied.
+    Candidates are scored by the `cosine` fold on the joined pairs."""
     from logunifier_spark.operators.dedup import fan_out
     cents = ivf_centroids(corpus, n_centroids, id_col, vec_col)
+    if not cents:  # empty corpus: no cells; the exact path's empty frame
+        return brute_force_topk(corpus, queries, k, id_col, vec_col, qid_col)
     assigned = fan_out(corpus).select(
         F.col(id_col), F.col(vec_col).alias("_cv"),
         _argmax_cell(F.col(vec_col), cents).alias("cid"))
@@ -368,7 +292,7 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     # map-side hash probe
     scored = (assigned.join(F.broadcast(q), on="cid")
                       .select(qid_col, id_col,
-                              pair_cosine(F.col("_cv"), F.col("_qv")).alias("score")))
+                              cosine(F.col("_cv"), F.col("_qv")).alias("score")))
     w = Window.partitionBy(qid_col).orderBy(F.desc("score"), F.asc(id_col))
     return (scored.withColumn("rank", F.row_number().over(w))
                   .where(F.col("rank") <= k))
@@ -434,23 +358,18 @@ def _band_buckets_udf(dim: int, n_bits: int, bands: int):
     hyperplanes). ONE numpy matmul per Arrow batch — the bands×n_bits
     dot products as Column expressions would build a multi-thousand-node
     scalar tree that blows the JIT method budget and deoptimizes the
-    whole fused stage (the pq.py lesson: 10-26 s vs 1.3 s)."""
-    from pyspark.sql.functions import pandas_udf
-
+    whole fused stage (the pq.py lesson: 10-26 s vs 1.3 s). Vectors that
+    fail the reader's validity rule get NULL keys: no candidates."""
     planes = np.array([_hyperplane(dim, b) for b in range(bands * n_bits)],
                       dtype=np.float64).T          # (dim, bands*n_bits)
     weights = (1 << np.arange(n_bits)).astype(np.int64)
     offsets = (np.arange(bands, dtype=np.int64) << n_bits)
 
-    @pandas_udf("array<long>")
-    def _buckets(v: pd.Series) -> pd.Series:
-        mat = np.stack(v.to_numpy()).astype(np.float64)   # (batch, dim)
+    def _keys(mat: np.ndarray) -> np.ndarray:
         bits = (mat @ planes >= 0).astype(np.int64)
-        bits = bits.reshape(len(mat), bands, n_bits)
-        keys = bits @ weights + offsets                    # (batch, bands)
-        return pd.Series(list(keys))
+        return bits.reshape(len(mat), bands, n_bits) @ weights + offsets
 
-    return _buckets
+    return vector_udf(_keys, dim, ArrayType(LongType()))
 
 
 def vector_exact_groups(emb: DataFrame, id_col: str = "vec_id",
@@ -531,9 +450,9 @@ def embedding_neardup_pairs(emb: DataFrame, dim: int,
          exploded to (band_bucket, id) and self-joined), so candidate
          work scales ~ bands · Σ_bucket pop² instead of n²/2. Bands
          default from `auto_bands(threshold, n_bits, miss_prob)`.
-      3. exact cosine verify — the identical zip_with/aggregate double
-         fold as the brute path, so PRECISION IS EXACT; the only
-         approximation is candidate recall.
+      3. exact cosine verify — the identical `cosine` fold as the brute
+         path, so PRECISION IS EXACT; the only approximation is
+         candidate recall.
 
     RECALL BOUND (docstring contract): a pair at cosine s >= threshold
     is missed with probability <= (1 - p1^n_bits)^bands where
@@ -564,8 +483,7 @@ def embedding_neardup_pairs(emb: DataFrame, dim: int,
     dedup probe — benches time construction + execution together)."""
     from logunifier_spark.operators.dedup import fan_out
 
-    cos_ab = (dot(F.col("_va"), F.col("_vb"))
-              / (F.col("_na") * F.col("_nb") + F.lit(1e-12)))
+    cos_ab = cosine(F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb"))
 
     def _brute_pairs(base):
         """Exact all-pairs among `base` (_id, _v): fan the left side out,
@@ -644,8 +562,7 @@ def embedding_neardup_pairs(emb: DataFrame, dim: int,
         return pairs
     selfcos = (sides
                .select(F.col("_id").alias("_rep"),
-                       (dot(F.col("_v"), F.col("_v"))
-                        / (F.col("_n") * F.col("_n") + F.lit(1e-12)))
-                       .alias("cos"))
+                       cosine(F.col("_v"), F.col("_v"), F.col("_n"),
+                              F.col("_n")).alias("cos"))
                .where(F.col("cos") >= threshold))
     return expand_rep_pairs_vec(pairs, members, selfcos)

@@ -69,25 +69,27 @@ def test_kmeans_partitioning_invariant(spark):
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
-def test_numpy_assignment_bit_identical_to_column_battery(spark):
-    # the k > COLUMN_BATTERY_MAX_K switch must not change a single
-    # assignment: same quantization, same int64 L2, same smaller-cid ties
-    from logunifier_spark.operators.kmeans import (_nearest, assign_np_udf,
-                                                   quantize, seed_centroids)
+@pytest.mark.parametrize("k", [4, 20])
+def test_numpy_assignment_matches_python_argmin(spark, k):
+    # the numpy kernel against a plain-Python int64 argmin: same
+    # floor quantization, exact squared L2, ties to the smaller cid
+    from logunifier_spark.operators.kmeans import (assign_np_udf,
+                                                   seed_centroids)
     rows = _synth(n=60)
     df = spark.createDataFrame(rows, SCHEMA)
-    cents = seed_centroids(df, k=20)
-    col = df.select(
+    cents = seed_centroids(df, k=k)
+    cents[k - 1] = list(cents[0])  # a duplicate centroid forces exact ties
+    want = {}
+    for i, v in rows:
+        q = [int(np.floor(float(x) * 1000)) for x in v]
+        d = [sum((a - b) * (a - b) for a, b in zip(q, c)) for c in cents]
+        best = min(range(k), key=lambda c: (d[c], c))
+        want[i] = (best, d[best])
+    got = df.select(
         "vec_id",
-        _nearest(quantize(F.col("embedding")), cents).alias("_nc"),
-    ).selectExpr("vec_id", "_nc.cluster AS cluster", "_nc.dist AS dist")
-    np_ = df.select(
-        "vec_id",
-        assign_np_udf(cents, 1000, with_dist=True)(F.col("embedding"))
-        .alias("_nc"),
-    ).selectExpr("vec_id", "_nc.cluster AS cluster", "_nc.dist AS dist")
-    assert sorted(map(tuple, col.collect())) == sorted(map(tuple,
-                                                           np_.collect()))
+        assign_np_udf(cents, 1000)(F.col("embedding")).alias("_nc"),
+    ).selectExpr("vec_id", "_nc[0] AS cluster", "_nc[1] AS dist")
+    assert {r[0]: (r[1], r[2]) for r in got.collect()} == want
 
 
 def test_kmeans_needs_k_rows(spark):
@@ -180,8 +182,8 @@ def test_semdedup_max_cluster_prunes_hot_clusters(spark):
 
 
 def test_semdedup_numpy_path_matches_python(spark):
-    # k=20 > COLUMN_BATTERY_MAX_K exercises the numpy assignment kernel
-    # end-to-end through the pairing pass
+    # k=20: many small clusters through the numpy assignment kernel and
+    # the pairing pass
     from logunifier_spark.operators.semdedup import semdedup_pairs
     rows = _synth(n=150)
     df = spark.createDataFrame(rows, SCHEMA)
