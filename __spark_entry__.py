@@ -3,12 +3,17 @@
 entry(spark)  — flagship: full parse→normalize→enrich→route pipeline over
                 transcripts synthesized from sf0.001 events, returning
                 per-sink routed-row counts.
-queries()     — one entry per implemented operator (SURVEY.md §2); each
-                callable takes (spark, sf_dir) and returns a DataFrame.
-oracle_sql()  — DuckDB-equivalent SQL for EVERY query (no rows-only
-                entries: the approximate operators use engine-portable
+queries()     — one entry per implemented operator (SURVEY.md §2), derived
+                from this module's `q_<name>` functions: each callable
+                takes (spark, sf_dir), ships the package to the executors
+                and returns a DataFrame.
+oracle_sql()  — DuckDB-equivalent SQL for EVERY query, keyed by the same
+                <name> (the approximate operators use engine-portable
                 hash families re-implemented independently in SQL —
                 logunifier_spark/duck_oracles.py).
+
+A query is a `q_<name>` function plus an `oracle_sql()` entry; nothing
+else registers it (tools/check_oracles.py fails on a key mismatch).
 
 Pipeline queries synthesize a transcripts table from `events` with an
 INVERTIBLE generator (text embeds event_id), so the oracle can compute the
@@ -139,7 +144,6 @@ _SQL_EXPECTED_MESSAGE = f"""
 
 
 def _unified(spark: SparkSession, sf_dir: str, enrich: bool = True) -> DataFrame:
-    _ship(spark)
     from logunifier_spark.operators.enrich import default_pattern_labels
     from logunifier_spark.pipeline import unify
     t = _transcripts_from_events(spark, sf_dir)
@@ -152,25 +156,23 @@ def _unified(spark: SparkSession, sf_dir: str, enrich: bool = True) -> DataFrame
 # ---------------------------------------------------------------------------
 
 def q_pattern_histogram(spark, sf_dir):
-    u = _unified(spark, sf_dir)
-    return (u.groupBy(F.col("log_pattern_key").alias("pattern_key"))
-             .agg(F.count("*").alias("hits")))
+    from logunifier_spark.operators.aggregate import pattern_histogram
+    return pattern_histogram(_unified(spark, sf_dir))
 
 
 def q_level_histogram(spark, sf_dir):
-    u = _unified(spark, sf_dir)
-    return u.groupBy(F.col("log_level").alias("level")).agg(F.count("*").alias("hits"))
+    from logunifier_spark.operators.aggregate import level_histogram
+    return level_histogram(_unified(spark, sf_dir))
 
 
 def q_sink_counts(spark, sf_dir):
-    u = _unified(spark, sf_dir)
-    return u.groupBy("sink").agg(F.count("*").alias("routed_rows"))
+    from logunifier_spark.operators.aggregate import sink_counts
+    return sink_counts(_unified(spark, sf_dir))
 
 
 def q_sink_bytes(spark, sf_dir):
     """A2/A3 batch-size accounting parity: per-sink payload bytes
     (batch.go:113-123 sizeBytes) next to the routed-row count."""
-    _ship(spark)
     from logunifier_spark.operators.aggregate import sink_bytes
     return sink_bytes(_unified(spark, sf_dir))
 
@@ -218,7 +220,6 @@ def q_tenant_counts(spark, sf_dir):
     """Per-tenant routing (X-Scope-OrgID analog): the reference ships one
     batch per tenant (lokiclient/client.go:273-363); here tenant=org_name
     is a first-class partition key next to sink."""
-    _ship(spark)
     from logunifier_spark.operators.route import with_routing
     u = _unified(spark, sf_dir)
     t = with_routing(u, tenant=True)
@@ -229,7 +230,6 @@ def q_tenant_counts(spark, sf_dir):
 def q_stable_order(spark, sf_dir):
     """M2: stable (conv_id, turn_idx) turn ordering — the window that makes
     per-turn text equality well-defined (north-star invariant)."""
-    _ship(spark)
     from logunifier_spark.pipeline import stable_order
     u = stable_order(_unified(spark, sf_dir))
     return u.select("conv_id", "turn_idx", "turn_rank", "message")
@@ -316,7 +316,6 @@ def q_conversation_stats(spark, sf_dir):
     transcript unit): partial aggregation reduces map-side to one row per
     (conv, partition) — the shuffle carries the conversation set, not the
     turn set."""
-    _ship(spark)
     from logunifier_spark.operators.conversation import conversation_stats
     t = _transcripts_from_events(spark, sf_dir)
     s = conversation_stats(t)
@@ -331,7 +330,6 @@ def q_stitch_conversations(spark, sf_dir):
     """Ordered conversation stitching without a window or global sort:
     collect (turn_idx, text) structs per conv, array_sort INSIDE the
     group, join. Oracle: string_agg(... ORDER BY)."""
-    _ship(spark)
     from logunifier_spark.operators.conversation import stitch_conversations
     t = _transcripts_from_events(spark, sf_dir)
     return stitch_conversations(t)
@@ -341,7 +339,6 @@ def q_turn_context(spark, sf_dir):
     """SFT context assembly: each turn with its previous k=2 turns joined
     in order — per-conversation window (sorts only within a conv after
     the conv_id hash shuffle, never globally)."""
-    _ship(spark)
     from logunifier_spark.operators.conversation import turn_context
     t = _transcripts_from_events(spark, sf_dir)
     return turn_context(t, k=2).select("conv_id", "turn_idx", "context")
@@ -350,7 +347,6 @@ def q_turn_context(spark, sf_dir):
 def q_response_pairs(spark, sf_dir):
     """Instruction-pair extraction: adjacent user→agent turn pairs via
     lag() over the per-conversation window."""
-    _ship(spark)
     from logunifier_spark.operators.conversation import response_pairs
     e = _load(spark, sf_dir, "events")
     eid = F.col("event_id")
@@ -367,7 +363,6 @@ def q_salted_join(spark, sf_dir):
     """Skew-aware equi-join (operators/join.py): events' hot event_type
     keys spread over 8 deterministic salts, dim replicated per salt —
     result rows identical to the plain join (which IS the oracle)."""
-    _ship(spark)
     from logunifier_spark.operators.join import salted_join
     e = _load(spark, sf_dir, "events").select("event_id", "event_type")
     dim = spark.createDataFrame(
@@ -408,7 +403,6 @@ def q_asof_clicks(spark, sf_dir):
     entirely independent implementation of the semantics. (user_id, ts)
     is unique in `events`, so the match is well-defined without a
     tiebreak."""
-    _ship(spark)
     from logunifier_spark.operators.temporal import asof_join
     e = _load(spark, sf_dir, "events")
     left = e.where(F.col("event_type") == "purchase") \
@@ -427,7 +421,6 @@ def q_user_sessions(spark, sf_dir):
     user over `events`, rolled up to per-session stats. One shuffle on
     user_id; the lag and the running session counter share a window
     spec (single sort), the roll-up partial-aggregates."""
-    _ship(spark)
     from logunifier_spark.operators.temporal import session_stats
     e = _load(spark, sf_dir, "events")
     s = session_stats(e, "user_id", ts="ts", gap_s=3600.0)
@@ -439,7 +432,6 @@ def q_curate_corpus(spark, sf_dir):
     → language filter → quality filter → deterministic sample, verified
     END TO END by one oracle — stage-boundary bugs break the hash even
     when each stage passes in isolation."""
-    _ship(spark)
     from logunifier_spark.curate import curate
     d = _load(spark, sf_dir, "documents")
     out = curate(d, langs=("en",), min_quality=0.5, sample_rate=0.5)
@@ -451,7 +443,6 @@ def q_decontam_hits(spark, sf_dir):
     sharing any word 4-gram with the benchmark slice (doc_id % 97 == 0),
     with the distinct shared-gram count. Bench gram set is broadcast; the
     corpus side is probed map-side (no corpus shuffle)."""
-    _ship(spark)
     from logunifier_spark.operators.decontam import contaminated_ids
     d = _load(spark, sf_dir, "documents")
     bench = d.where(F.col("doc_id") % 97 == 0)
@@ -463,7 +454,6 @@ def q_chunk_windows(spark, sf_dir):
     """Token-window chunking (operators/chunk.py): 32-word windows with
     stride 24 (8-word overlap); chunk text carried as md5 so the oracle
     hash stays small."""
-    _ship(spark)
     from logunifier_spark.operators.chunk import chunk_by_tokens
     d = _load(spark, sf_dir, "documents")
     c = chunk_by_tokens(d, size=32, stride=24)
@@ -476,7 +466,6 @@ def q_gopher_stats(spark, sf_dir):
     repetition_stats): word count, mean word length, alpha-word fraction,
     duplicate-line and duplicate-2gram fractions, and the combined pass
     flag."""
-    _ship(spark)
     from logunifier_spark.operators.textstats import repetition_stats
     d = _load(spark, sf_dir, "documents")
     return repetition_stats(d).select(
@@ -489,7 +478,6 @@ def q_kmeans_clusters(spark, sf_dir):
     k=8, over int64-quantized embeddings — final per-vector assignment and
     squared distance. Deterministic end to end, so the iterative algorithm
     is value-hash oracleable (the oracle unrolls both iterations in SQL)."""
-    _ship(spark)
     from logunifier_spark.operators.kmeans import kmeans_fixed_point
     e = _load(spark, sf_dir, "embeddings")
     return kmeans_fixed_point(e, k=8, iters=2)
@@ -503,7 +491,6 @@ def q_doc_length_quantiles(spark, sf_dir):
     histogram (no per-group sort task — a dominant group costs the same
     as a balanced one). Oracle = DuckDB's NATIVE quantile_disc, an
     independent implementation of the same type-1 semantics."""
-    _ship(spark)
     from logunifier_spark.operators.stats import group_quantiles
     d = _load(spark, sf_dir, "documents")
     return group_quantiles(d, "source", "n_chars", percents=(50, 95))
@@ -517,7 +504,6 @@ def q_interval_events(spark, sf_dir):
     the O(|E|·|I|) BroadcastNestedLoopJoin Spark plans for a raw
     BETWEEN join. Oracle = DuckDB's native inequality join, an
     independent evaluation strategy for the same semantics."""
-    _ship(spark)
     from logunifier_spark.operators.temporal import interval_join
     e = _load(spark, sf_dir, "events")
     us = F.unix_micros(F.col("ts").cast("timestamp"))
@@ -541,7 +527,6 @@ def q_value_histogram(spark, sf_dir):
     stable across runs, so no data-dependent min/max scan), bucket index
     floor((x-lo)/(hi-lo)·bins) in one fixed double expression tree,
     out-of-range rows clamped into the edge buckets."""
-    _ship(spark)
     from logunifier_spark.operators.stats import group_histogram
     e = _load(spark, sf_dir, "events")
     return group_histogram(e, "event_type", "value",
@@ -556,7 +541,6 @@ def q_user_pagerank(spark, sf_dir):
     floor-division arithmetic, and the oracle unrolls each iteration as
     a SQL CTE. Per iteration: one src-keyed equi-join + one
     map-side-combinable dst aggregate."""
-    _ship(spark)
     from logunifier_spark.operators.graph import (
         pagerank_fixed_point,
         transition_edges,
@@ -574,7 +558,6 @@ def q_event_rollup(spark, sf_dir):
     — so every group shape sums associatively with no float
     order-dependence. Spark plans ROLLUP as Expand + one hash aggregate
     with map-side combine."""
-    _ship(spark)
     from logunifier_spark.operators.aggregate import rollup_report
     e = _load(spark, sf_dir, "events")
     d = e.select("event_type",
@@ -594,7 +577,6 @@ def q_kmv_users(spark, sf_dir):
     DuckDB oracle recomputes it with a single global ranking while the
     operator uses a salted two-level top-k, and the results must agree
     bit-for-bit."""
-    _ship(spark)
     from logunifier_spark.operators.stats import kmv_distinct
     e = _load(spark, sf_dir, "events")
     return kmv_distinct(e, "event_type", "user_id", k=64)
@@ -606,7 +588,6 @@ def q_rate_spikes(spark, sf_dir):
     trailing observed buckets. Integer arithmetic end to end (bucket id =
     us - us%w in int64; criterion cross-multiplied) — no float drift
     between engines."""
-    _ship(spark)
     from logunifier_spark.operators.timeseries import rate_spikes
     e = _load(spark, sf_dir, "events")
     return rate_spikes(e, "event_type", ts="ts", bucket_s=3600,
@@ -621,7 +602,6 @@ def q_event_funnel(spark, sf_dir):
     (one row per step-1 user — broadcast-sized at cluster scale); the
     step filter pushes to the scan. The oracle chains the same
     semantics as sequential CTEs."""
-    _ship(spark)
     from logunifier_spark.operators.funnel import funnel_reach
     e = _load(spark, sf_dir, "events")
     r = funnel_reach(e, ["signup", "view", "purchase"])
@@ -635,7 +615,6 @@ def q_funnel_summary(spark, sf_dir):
     construction. One aggregate over the per-user reach frame,
     unpivoted via a struct-array explode (a single job, not one count
     job per step)."""
-    _ship(spark)
     from logunifier_spark.operators.funnel import funnel_counts
     e = _load(spark, sf_dir, "events")
     return funnel_counts(e, ["signup", "view", "purchase"])
@@ -650,7 +629,6 @@ def q_cohort_retention(spark, sf_dir):
     user-keyed join, one final count. Daily buckets here (the synthetic
     corpus spans 30 days, so a daily grid exercises a real
     cohort x offset matrix; the production default is weekly)."""
-    _ship(spark)
     from logunifier_spark.operators.funnel import cohort_retention
     e = _load(spark, sf_dir, "events")
     return (cohort_retention(e, bucket_s=24 * 3600)
@@ -664,7 +642,6 @@ def q_log_templates(spark, sf_dir):
     and RE2 agree). Two codegen regexp_replace + ONE hash aggregate whose
     key cardinality is the number of distinct templates, with min(raw) as
     the deterministic family example."""
-    _ship(spark)
     from logunifier_spark.operators.templates import mine_templates
     t = _transcripts_from_events(spark, sf_dir)
     return mine_templates(t, text="text")
@@ -678,7 +655,6 @@ def q_tool_call_stats(spark, sf_dir):
     function. One malformed family per 4 rows proves the poisoned-row
     path: from_json yields an all-null struct (never throws) and the row
     lands in '_unparsed', mirrored in SQL via json_valid()."""
-    _ship(spark)
     from logunifier_spark.operators.conversation import tool_call_stats
     e = _load(spark, sf_dir, "events")
     eid = F.col("event_id")
@@ -703,7 +679,6 @@ def q_stratified_sample(spark, sf_dir):
     two-level top-k bounds every sort partition at ~group/fan rows
     (same survival argument as kmv_distinct); the oracle uses one
     global window — a different evaluation strategy."""
-    _ship(spark)
     from logunifier_spark.operators.sampling import stratified_sample
     d = _load(spark, sf_dir, "documents")
     s = stratified_sample(d, "lang", n=20)
@@ -718,7 +693,6 @@ def q_latest_events(spark, sf_dir):
     row per (user, partition), never the history; the oracle uses the
     row_number()-over-desc window form (an independent strategy) and
     must agree."""
-    _ship(spark)
     from logunifier_spark.operators.aggregate import latest_state
     e = _load(spark, sf_dir, "events")
     d = e.select(
@@ -740,7 +714,6 @@ def q_skew_report(spark, sf_dir):
     purpose; shares in exact integer ppm (rows*1e6 DIV total — float
     shares drift between engines). One count aggregate to the distinct
     key frame + the salted two-level top-k."""
-    _ship(spark)
     from logunifier_spark.operators.join import skew_report
     e = _load(spark, sf_dir, "events")
     key = (F.when(F.pmod(F.col("event_id"), F.lit(2)) == 0, F.lit("hot"))
@@ -756,7 +729,6 @@ def q_corpus_diff(spark, sf_dir):
     engine-portable md5-over-unit-separator hashes. The 'new' snapshot
     is a deterministic mutation of documents (drop %97, edit %11,
     append %13 under shifted ids)."""
-    _ship(spark)
     from logunifier_spark.operators.diff import corpus_diff
     d = _load(spark, sf_dir, "documents").select("doc_id", "text")
     did = F.col("doc_id")
@@ -780,7 +752,6 @@ def q_fuzzy_match(spark, sf_dir):
     the oracle uses a BRUTE-FORCE cross join (no blocking) — the blocked
     result must equal it exactly on this corpus (all names share a first
     letter)."""
-    _ship(spark)
     from logunifier_spark.operators.linkage import blocked_fuzzy_pairs
     e = _load(spark, sf_dir, "events")
     base = F.concat(F.lit("svc"), F.pmod(F.col("user_id"), F.lit(20)))
@@ -800,7 +771,6 @@ def q_watermark_lag(spark, sf_dir):
     (arrival proxy: event_id). This is the statistic that SIZES the
     streaming watermark delay in stream_unify; one window + one reusing
     hash aggregate, int64 micros throughout."""
-    _ship(spark)
     from logunifier_spark.operators.timeseries import watermark_lag_stats
     e = _load(spark, sf_dir, "events")
     return watermark_lag_stats(e, "event_type", arrival="event_id")
@@ -814,7 +784,6 @@ def q_zorder_layout(spark, sf_dir):
     shift/or projection (bits*cols = 16 terms, far under the JIT method
     budget) + one hash aggregate; the oracle rebuilds the interleave
     from the same per-term SQL."""
-    _ship(spark)
     from logunifier_spark.storage import zorder_key
     e = _load(spark, sf_dir, "events")
     u = F.pmod(F.col("user_id"), F.lit(256))
@@ -835,7 +804,6 @@ def q_heavy_hitters(spark, sf_dir):
     shuffle with map-side combine down to (lang, term) counts, then the
     skew-safe salted two-level top-k (no single sort partition holds a
     language's whole vocabulary); oracle = one global window."""
-    _ship(spark)
     from logunifier_spark.operators.stats import grouped_top_k
     from logunifier_spark.operators.textstats import ASCII_WS
     from logunifier_spark.operators.tfidf import TERM_RE
@@ -855,7 +823,6 @@ def q_blocklist_hits(spark, sf_dir):
     (longest) entry via max_by. URLs synthesized invertibly from
     doc_id; blocklist entries are the same three literals on both
     sides."""
-    _ship(spark)
     from logunifier_spark.operators.blocklist import blocklist_hits
     d = _load(spark, sf_dir, "documents")
     did = F.col("doc_id")
@@ -883,7 +850,6 @@ def q_conversation_qc(spark, sf_dir):
     violations (forced role repeats every 11th turn, dropped ordinals
     every 13th, empty text every 17th); one per-conv window + one
     reusing hash aggregate."""
-    _ship(spark)
     from logunifier_spark.operators.conversation import conversation_qc
     e = _load(spark, sf_dir, "events")
     eid = F.col("event_id")
@@ -910,7 +876,6 @@ def q_mixture_weights(spark, sf_dir):
     sqrt-sum runs in sorted source order on both sides (a float sum is
     order-dependent; the oracle mirrors with ORDER BY inside the
     aggregate)."""
-    _ship(spark)
     from logunifier_spark.operators.sampling import mixture_weights
     d = _load(spark, sf_dir, "documents")
     return mixture_weights(d, "source")
@@ -924,7 +889,6 @@ def q_pq_encode(spark, sf_dir):
     as prefixed unrolled-Lloyd CTE chains (duck_oracles.pq_encode_sql)
     and must match bit-for-bit — cross-engine equality over a
     multi-model iterative training."""
-    _ship(spark)
     from logunifier_spark.operators.pq import pq_encode
     e = _load(spark, sf_dir, "embeddings")
     return pq_encode(e, dim=64, m=8, k=16, iters=1)
@@ -938,7 +902,6 @@ def q_ann_ivfpq(spark, sf_dir):
     The oracle re-trains all nine models (8 codebooks + coarse) as
     prefixed unrolled-Lloyd CTE chains and computes ADC by the
     mathematically-equal reconstruction route."""
-    _ship(spark)
     from logunifier_spark.operators.pq import ivfpq_topk
     emb = _load(spark, sf_dir, "embeddings")
     q = (emb.where(F.col("vec_id") < 5)
@@ -953,7 +916,6 @@ def q_inverted_index(spark, sf_dir):
     the 30 smallest ids via the salted two-level top-k (a stopword's
     full list is the corpus itself), serialized as a comma-joined
     string for cross-engine hashability."""
-    _ship(spark)
     from logunifier_spark.operators.bm25 import inverted_index
     d = _load(spark, sf_dir, "documents")
     return inverted_index(d, max_postings=30)
@@ -967,7 +929,6 @@ def q_user_triangles(spark, sf_dir):
     power-law graphs; the closing-edge check is a pure equi-join (the
     wedge pair is ordered by the SAME orientation key). Oracle =
     id-ordered brute-force enumeration, an independent strategy."""
-    _ship(spark)
     from logunifier_spark.operators.graph import (
         transition_edges,
         triangle_counts,
@@ -985,7 +946,6 @@ def q_user_communities(spark, sf_dir):
     most-frequent-neighbor-label rounds, argmax as an all-int
     min-struct (stays a HashAggregate), every round unrolled as oracle
     CTEs."""
-    _ship(spark)
     from logunifier_spark.operators.graph import (
         label_propagation,
         transition_edges,
@@ -1002,7 +962,6 @@ def q_rolling_rates(spark, sf_dir):
     rate_spikes' observed-rows frame). Two engines' range-frame
     implementations must agree; the average is exact integer
     milli-units."""
-    _ship(spark)
     from logunifier_spark.operators.timeseries import rolling_counts
     e = _load(spark, sf_dir, "events")
     return rolling_counts(e, "event_type", bucket_s=86400, trailing=6)
@@ -1016,7 +975,6 @@ def q_bpe_train(spark, sf_dir):
     trick — identical left-to-right non-overlapping semantics in the
     JVM and DuckDB — so the WHOLE training unrolls as oracle CTEs and
     the learned merge table must match exactly."""
-    _ship(spark)
     from logunifier_spark.operators.bpe import bpe_train
     d = _load(spark, sf_dir, "documents")
     return bpe_train(d, iters=6)
@@ -1028,7 +986,6 @@ def q_pmi_collocations(spark, sf_dir):
     products are exact int64 counts cast to double; single
     correctly-rounded division + one libm ln (the tfidf float
     discipline), ranking ties by pair ascending."""
-    _ship(spark)
     from logunifier_spark.operators.tfidf import pmi_collocations
     d = _load(spark, sf_dir, "documents")
     return pmi_collocations(d, min_count=3, k=20)
@@ -1042,7 +999,6 @@ def q_bpe_token_counts(spark, sf_dir):
     replace-with-scalar-subquery steps over the boundary-marked
     char-split text: the full train->apply loop held to cross-engine
     equality."""
-    _ship(spark)
     from logunifier_spark.operators.bpe import bpe_apply, bpe_train
     d = _load(spark, sf_dir, "documents")
     rows = bpe_train(d, iters=6).orderBy("step").collect()
@@ -1058,7 +1014,6 @@ def q_cms_user_counts(spark, sf_dir):
     (user_id, est, true_n, est >= true_n always). Hash rows are
     independent 24-bit slices of ONE md5 — engine-portable, so the
     DuckDB oracle rebuilds the identical sketch."""
-    _ship(spark)
     from logunifier_spark.operators.stats import cms_estimate, cms_sketch
     e = _load(spark, sf_dir, "events")
     sk = cms_sketch(e, "user_id", d=4, w=64)
@@ -1074,7 +1029,6 @@ def q_weighted_sample(spark, sf_dir):
     proportional to length, keep-set a pure function of (id, weight).
     Salted two-level top-k; oracle = one global ranking with the
     bit-identical key expression."""
-    _ship(spark)
     from logunifier_spark.operators.sampling import weighted_sample
     d = _load(spark, sf_dir, "documents")
     out = weighted_sample(d, n=50, weight_col="n_chars")
@@ -1089,7 +1043,6 @@ def q_session_paths(spark, sf_dir):
     partition-arbitrary) + a global TakeOrdered; oracle uses DuckDB's
     ordered list() aggregate — an independent ordered-collection
     mechanism."""
-    _ship(spark)
     from logunifier_spark.operators.temporal import session_paths
     e = _load(spark, sf_dir, "events")
     return session_paths(e, "user_id", gap_s=3600.0,
@@ -1107,7 +1060,6 @@ def q_corpus_report(spark, sf_dir):
     the constant group costs distributed hash aggregates plus a rank
     over ~n/coarse_bins rows per task — NOT one global sort task (the
     round-3 scale-killer; plan-asserted in test_oracles)."""
-    _ship(spark)
     from logunifier_spark.operators.stats import group_quantiles
     from logunifier_spark.operators.textstats import token_count
     d = _load(spark, sf_dir, "documents")
@@ -1147,7 +1099,6 @@ def q_range_bounds(spark, sf_dir):
     RangePartitioner samples; this is the reproducible version a
     resumable sorted layout needs. Oracle = one brute-force global
     ranking (independent strategy)."""
-    _ship(spark)
     from logunifier_spark.operators.stats import range_bounds
     d = _load(spark, sf_dir, "documents")
     return range_bounds(d, "n_chars", parts=7, coarse_bins=64)
@@ -1160,7 +1111,6 @@ def q_normalize_text(spark, sf_dir):
     the no-op control). Two genuinely independent NFC engines must
     agree byte-for-byte: CPython unicodedata (Spark pandas UDF) vs
     DuckDB's utf8proc nfc_normalize — the md5 column is the proof."""
-    _ship(spark)
     from logunifier_spark.operators.normalize import normalize_text
     d = _load(spark, sf_dir, "documents")
     m = F.pmod(F.col("doc_id"), F.lit(3))
@@ -1184,7 +1134,6 @@ def q_quality_classifier(spark, sf_dir):
     the dot product associative (a float sum isn't even run-stable);
     the oracle re-runs the classifier from the same portable 48-bit
     md5 bucket hash."""
-    _ship(spark)
     from logunifier_spark.operators.classifier import hashed_linear_score
     d = _load(spark, sf_dir, "documents")
     return hashed_linear_score(d, n_buckets=1024, bias_milli=100)
@@ -1197,7 +1146,6 @@ def q_redact_pii(spark, sf_dir):
     invertibly from `events` so every rule fires; the oracle re-types the
     patterns as independent SQL literals — a transcription slip on either
     side breaks the value hash."""
-    _ship(spark)
     from logunifier_spark.operators.redact import redact_pii
     e = _load(spark, sf_dir, "events")
     uid, eid = F.col("user_id"), F.col("event_id")
@@ -1218,14 +1166,12 @@ def q_redact_pii(spark, sf_dir):
 # --- training-data operators ------------------------------------------------
 
 def q_dedup_exact(spark, sf_dir):
-    _ship(spark)
     from logunifier_spark.operators.dedup import exact_dedup
     d = _load(spark, sf_dir, "documents")
     return exact_dedup(d, "text", "doc_id")
 
 
 def q_ngram_jaccard(spark, sf_dir):
-    _ship(spark)
     from logunifier_spark.operators.dedup import ngram_jaccard_pairs
     d = _load(spark, sf_dir, "documents").where(F.length("text") >= 20)
     pairs = ngram_jaccard_pairs(d, "text", "doc_id", n=3, threshold=0.8)
@@ -1235,7 +1181,6 @@ def q_ngram_jaccard(spark, sf_dir):
 def q_minhash_dedup(spark, sf_dir):
     # portable Horner-mod-p hash family — value-hash-verified against an
     # independent DuckDB SQL re-implementation (duck_oracles.py)
-    _ship(spark)
     from logunifier_spark.operators.dedup import minhash_dedup
     d = _load(spark, sf_dir, "documents").where(F.length("text") >= 20)
     # max_bucket=500: the scale path (one sf0.1 bucket holds 1170 docs →
@@ -1250,7 +1195,6 @@ def q_verified_neardups(spark, sf_dir):
     sets — sketch error never decides a deletion. The oracle reuses
     the shared minhash CTE chain and verifies against its own `grams`
     CTE."""
-    _ship(spark)
     from logunifier_spark.operators.dedup import verified_neardup_pairs
     d = _load(spark, sf_dir, "documents").where(F.length("text") >= 20)
     return verified_neardup_pairs(d, "text", "doc_id",
@@ -1263,7 +1207,6 @@ def q_dedup_components(spark, sf_dir):
     minhash pair graph via iterative min-label propagation (narrow join +
     aggregate per iteration, lineage cut per step). Oracle: an INDEPENDENT
     algorithm — recursive-CTE transitive closure in DuckDB."""
-    _ship(spark)
     from logunifier_spark.operators.dedup import (
         connected_components,
         minhash_lsh_pairs,
@@ -1275,14 +1218,12 @@ def q_dedup_components(spark, sf_dir):
 
 def q_simhash_pairs(spark, sf_dir):
     # portable 60-bit simhash — value-hash-verified (duck_oracles.py)
-    _ship(spark)
     from logunifier_spark.operators.dedup import simhash_pairs
     d = _load(spark, sf_dir, "documents").where(F.length("text") >= 20)
     return simhash_pairs(d, "text", "doc_id", max_hamming=3)
 
 
 def q_ann_bruteforce(spark, sf_dir):
-    _ship(spark)
     from logunifier_spark.operators.similarity import brute_force_topk
     emb = _load(spark, sf_dir, "embeddings")
     q = (emb.where(F.col("vec_id") < 5)
@@ -1294,7 +1235,6 @@ def q_ann_bruteforce(spark, sf_dir):
 def q_ann_lsh(spark, sf_dir):
     # deterministic hyperplane constants — value-hash-verified against the
     # same constants embedded as SQL literals (duck_oracles.py)
-    _ship(spark)
     from logunifier_spark.operators.similarity import lsh_topk
     emb = _load(spark, sf_dir, "embeddings")
     q = (emb.where(F.col("vec_id") < 5)
@@ -1309,7 +1249,6 @@ def q_ann_recall(spark, sf_dir):
     number every ANN deployment needs before trusting the fast path.
     Both top-k frames are |queries|*k rows, so everything after the
     scans is broadcast-sized."""
-    _ship(spark)
     from logunifier_spark.operators.similarity import ann_recall
     emb = _load(spark, sf_dir, "embeddings")
     q = (emb.where(F.col("vec_id") < 25)
@@ -1324,7 +1263,6 @@ def q_rp_project(spark, sf_dir):
     step at billion-vector scale. Row-local numpy Arrow kernel, zero
     shuffles; exact fixed-point per-term floors make the sums
     order-free and engine-portable."""
-    _ship(spark)
     from logunifier_spark.operators.projection import rp_project
     emb = _load(spark, sf_dir, "embeddings")
     return rp_project(emb, dim=64, r=16)
@@ -1337,7 +1275,6 @@ def q_vocab_zipf(spark, sf_dir):
     the corpus-health curve that spots boilerplate floods and dedup
     failures. Only corpus-sized shuffle is the map-side-combined token
     count; ranking runs over the vocabulary (types, Heaps-bounded)."""
-    _ship(spark)
     from logunifier_spark.operators.textstats import vocab_zipf
     d = _load(spark, sf_dir, "documents")
     return vocab_zipf(d, top_k=4096)
@@ -1351,14 +1288,12 @@ def q_source_overlap(spark, sf_dir):
     fingerprint-keyed self-join over per-source DISTINCT sets;
     `max_sources` caps near-universal boilerplate grams at web scale
     (unused here: 20 sources)."""
-    _ship(spark)
     from logunifier_spark.operators.dedup import source_overlap
     d = _load(spark, sf_dir, "documents")
     return source_overlap(d, gram_len=8)
 
 
 def q_token_counts(spark, sf_dir):
-    _ship(spark)
     from logunifier_spark.operators.textstats import bpe_ish_token_count, token_count
     d = _load(spark, sf_dir, "documents")
     return d.select("doc_id",
@@ -1367,7 +1302,6 @@ def q_token_counts(spark, sf_dir):
 
 
 def q_language_histogram(spark, sf_dir):
-    _ship(spark)
     from logunifier_spark.operators.textstats import language_id
     d = _load(spark, sf_dir, "documents")
     return (d.select(language_id(F.col("text")).alias("lang"))
@@ -1379,7 +1313,6 @@ def q_fingerprint_dupes(spark, sf_dir):
     shape (textstats.fingerprint_frame): explode-positions + codegen md5
     projection + map-side-combined min — ~25x faster than the transform()
     lambda Column form, which runs interpreted per gram."""
-    _ship(spark)
     from logunifier_spark.operators.textstats import fingerprint_frame
     d = _load(spark, sf_dir, "documents")
     return (fingerprint_frame(d).groupBy("fp")
@@ -1392,7 +1325,6 @@ def q_multiline_reassembly(spark, sf_dir):
     semantics, reference journald.go:110-133). Parts synthesized from
     events: groups of 4 consecutive event_ids, ~20% of rows whole;
     groups whose last part is missing are dropped."""
-    _ship(spark)
     from logunifier_spark.operators.multiline import reassemble_partials
     e = _load(spark, sf_dir, "events")
     eid = F.col("event_id")
@@ -1419,7 +1351,6 @@ def q_docker_parse(spark, sf_dir):
     rules, parse-with-defaults ts/level, container identity + indexed
     nomad labels, ingress/used_pattern entry labels, corrupt-JSON
     tolerance."""
-    _ship(spark)
     from logunifier_spark.sources.dockerlogs import docker_to_ecs
     e = _load(spark, sf_dir, "events")
     eid = F.col("event_id")
@@ -1468,7 +1399,6 @@ def q_journald_parse(spark, sf_dir):
     """P1/P12-P14/P9: journald JSON envelope — priority→level map, facility→
     job-type map, nomad/container/systemd service-name precedence, ANSI
     strip gate, corrupt-JSON tolerance (journald.go:152-275,297-428)."""
-    _ship(spark)
     from logunifier_spark.sources.journald import journald_envelope
     e = _load(spark, sf_dir, "events")
     eid = F.col("event_id")
@@ -1518,7 +1448,6 @@ def q_journald_parse(spark, sf_dir):
 def q_line_limit(spark, sf_dir):
     """O3: Loki max-entry-size guard — oversize messages truncated to the
     limit (client.go:308-319)."""
-    _ship(spark)
     from logunifier_spark.operators.route import enforce_line_limit
     u = _unified(spark, sf_dir)
     return (enforce_line_limit(u, max_line_size=12, truncate=True)
@@ -1528,7 +1457,6 @@ def q_line_limit(spark, sf_dir):
 def q_ship_label_folds(spark, sf_dir):
     """A5: tags→labels fold as shipped to Loki (tags_<i> keys, empty values
     skipped with their index preserved, lokishipper.go:127-139)."""
-    _ship(spark)
     from logunifier_spark.pipeline import ship_labels, unify
     e = _load(spark, sf_dir, "events")
     eid = F.col("event_id")
@@ -1556,7 +1484,6 @@ def q_ship_metadata(spark, sf_dir):
     Loki next to the index labels (lokishipper.go:267-282), incl. the
     User != nil quirk: a present user object with an EMPTY name still
     ships `user` (extensions.go:126-128)."""
-    _ship(spark)
     from logunifier_spark.pipeline import ship_structured_metadata, unify
     e = _load(spark, sf_dir, "events")
     eid = F.col("event_id")
@@ -1593,7 +1520,6 @@ def q_journald_unify(spark, sf_dir):
     the metadata-override contract (journald.go:93-275) — PRIORITY-derived
     fallback levels, service/host overrides, logfmt no-kv error, corrupt
     payloads."""
-    _ship(spark)
     from logunifier_spark.pipeline import unify_journald
     e = _load(spark, sf_dir, "events")
     eid = F.col("event_id")
@@ -1634,7 +1560,6 @@ def q_journald_unify(spark, sf_dir):
 
 
 def q_quality_scores(spark, sf_dir):
-    _ship(spark)
     from logunifier_spark.operators.textstats import quality_score
     d = _load(spark, sf_dir, "documents")
     return d.select("doc_id", quality_score(F.col("text")).alias("quality"))
@@ -1661,7 +1586,6 @@ def q_embedding_neardup(spark, sf_dir):
     local[8] is 4.3 s adaptive vs 7.9 s banded vs 282 s for the r4
     uncollapsed brute — the banded path takes over only where
     approximation is actually needed."""
-    _ship(spark)
     from logunifier_spark.operators.similarity import embedding_neardup_pairs
     emb = _load(spark, sf_dir, "embeddings")
     pairs = embedding_neardup_pairs(emb, dim=64, threshold=0.45)
@@ -1673,7 +1597,6 @@ def q_tfidf_top_terms(spark, sf_dir):
     document, idf = ln((N+1)/(df+1)). One token-stream shuffle + a
     vocab-keyed join + a doc-keyed window — see the module docstring for
     the cross-engine float discipline that makes ln() value-hashable."""
-    _ship(spark)
     from logunifier_spark.operators.tfidf import tfidf_top_terms
     d = _load(spark, sf_dir, "documents")
     return tfidf_top_terms(d, k=5)
@@ -1687,7 +1610,6 @@ def q_repeated_ngrams(spark, sf_dir):
     doc-level dedup misses. Gram stream is pure JVM (md5 over sliding
     word windows); one (doc, gram) shuffle feeds both the global total
     and the join back."""
-    _ship(spark)
     from logunifier_spark.operators.dedup import repeated_ngram_stats
     d = _load(spark, sf_dir, "documents")
     return repeated_ngram_stats(d, n=3)
@@ -1700,7 +1622,6 @@ def q_unigram_logppl(spark, sf_dir):
     double sum over tokens is partial-aggregation-order-dependent and
     not even run-stable), divided back out in two correctly-rounded
     double ops."""
-    _ship(spark)
     from logunifier_spark.operators.perplexity import unigram_logppl
     d = _load(spark, sf_dir, "documents")
     return unigram_logppl(d)
@@ -1712,7 +1633,6 @@ def q_cross_doc_grams(spark, sf_dir):
     windows fingerprinted with the portable 48-bit md5-prefix hash;
     fingerprints in >= 2 distinct docs reported with doc/occurrence
     counts. One fingerprint-keyed aggregate — no pairwise work."""
-    _ship(spark)
     from logunifier_spark.operators.dedup import cross_doc_grams
     d = _load(spark, sf_dir, "documents")
     return cross_doc_grams(d, gram_len=8, min_docs=2)
@@ -1723,7 +1643,6 @@ def q_doc_duplication(spark, sf_dir):
     doc_duplication_stats): fraction (ppm, integer DIV) of each doc's
     8-token windows shared verbatim with other docs — the actionable
     drop-documents-that-are-mostly-template filter signal."""
-    _ship(spark)
     from logunifier_spark.operators.dedup import doc_duplication_stats
     d = _load(spark, sf_dir, "documents")
     return doc_duplication_stats(d, gram_len=8, min_docs=2)
@@ -1736,7 +1655,6 @@ def q_dup_runs(spark, sf_dir):
     >= 2 distinct docs certifies a duplicated substring of run+7
     tokens. Gaps-and-islands over the shared gram stream — one per-doc
     window function, never pairwise."""
-    _ship(spark)
     from logunifier_spark.operators.dedup import longest_dup_run
     d = _load(spark, sf_dir, "documents")
     return longest_dup_run(d, gram_len=8, min_docs=2)
@@ -1752,7 +1670,6 @@ def q_paragraph_dedup(spark, sf_dir):
     10-token-window segmentation fallback (same dedup semantics; real
     web text passes sep='\\n{2,}'). Two map-side-combined shuffles —
     fingerprint count + per-doc rebuild — never pairwise."""
-    _ship(spark)
     from logunifier_spark.operators.dedup import paragraph_dedup
     d = _load(spark, sf_dir, "documents")
     return paragraph_dedup(d, para_tokens=10, min_dup=2)
@@ -1765,7 +1682,6 @@ def q_winnow_fps(spark, sf_dir):
     gram_len+window-1-token run at ~2/(window+1) density. One per-doc
     window function; oracle re-derives the selection with a native SQL
     window frame."""
-    _ship(spark)
     from logunifier_spark.operators.dedup import winnow_fingerprints
     d = _load(spark, sf_dir, "documents")
     return winnow_fingerprints(d, gram_len=5, window=4)
@@ -1777,7 +1693,6 @@ def q_assign_splits(spark, sf_dir):
     affine hash — stable across runs, engines, partitionings, and
     corpus appends, which is what eval-contamination audits need. Pure
     codegen projection; oracle is the same CASE over the same hash."""
-    _ship(spark)
     from logunifier_spark.operators.sampling import assign_splits
     d = _load(spark, sf_dir, "documents")
     return assign_splits(d).select("doc_id", "split")
@@ -1790,7 +1705,6 @@ def q_bigram_logppl(spark, sf_dir):
     unigram CCNet filter toward a real LM filter. Per-row fixed-point
     floors keep the per-doc sum order-free; mixture doubles use the
     identical expression tree in both engines."""
-    _ship(spark)
     from logunifier_spark.operators.perplexity import bigram_logppl
     d = _load(spark, sf_dir, "documents")
     return bigram_logppl(d)
@@ -1803,7 +1717,6 @@ def q_source_drift(spark, sf_dir):
     change" alarm. Integer-defined fixed-point estimator, one broadcast
     of the ≤buckets-row corpus table; oracle re-derives the whole chain
     independently in SQL."""
-    _ship(spark)
     from logunifier_spark.operators.dsir import source_drift
     d = _load(spark, sf_dir, "documents")
     return source_drift(d)
@@ -1815,7 +1728,6 @@ def q_char_entropy(spark, sf_dir):
     spam/keyboard-mash filter signal. Fixed-point int64 contributions
     keep the per-doc sum order-free and engine-exact; the oracle
     re-derives the character stream with DuckDB's native indexing."""
-    _ship(spark)
     from logunifier_spark.operators.textstats import char_entropy
     d = _load(spark, sf_dir, "documents")
     return char_entropy(d)
@@ -1829,7 +1741,6 @@ def q_dsir_weights(spark, sf_dir):
     ratios make the per-doc sum order-free; the bucket hash is the
     48-bit md5-prefix family (engine-portable). The oracle re-derives
     the whole chain independently in SQL."""
-    _ship(spark)
     from logunifier_spark.operators.dsir import dsir_logweights
     d = _load(spark, sf_dir, "documents")
     return dsir_logweights(d, d.where(F.col("lang") == "en"))
@@ -1840,7 +1751,6 @@ def q_dsir_select(spark, sf_dir):
     target-like documents by log importance weight, ties by doc_id —
     TakeOrdered (per-partition heap + driver merge), rank window runs
     after .limit(k) so it is bounded at any corpus size."""
-    _ship(spark)
     from logunifier_spark.operators.dsir import dsir_topk
     d = _load(spark, sf_dir, "documents")
     return dsir_topk(d, d.where(F.col("lang") == "en"), k=50)
@@ -1859,7 +1769,6 @@ def q_bm25_search(spark, sf_dir):
     fixed-point int64 (order-free sums, exact portable rank ties). The
     oracle re-derives everything in SQL, tokenizing the queries
     independently in Python."""
-    _ship(spark)
     from logunifier_spark.operators.bm25 import bm25_topk
     d = _load(spark, sf_dir, "documents")
     return bm25_topk(d, BM25_QUERIES, top_k=10)
@@ -1877,7 +1786,6 @@ def q_semdedup_pairs(spark, sf_dir):
     (auto_k = max(8, ceil(n_distinct/4096))) and the r5 exact-clone
     collapse makes even the pinned-k soak bounded (sf1.0: 291 -> 12 s,
     identical 95,500 pairs; sampled soak oracle green)."""
-    _ship(spark)
     from logunifier_spark.operators.semdedup import semdedup_pairs
     e = _load(spark, sf_dir, "embeddings")
     return semdedup_pairs(e, k=8, iters=2, threshold=0.45)
@@ -1896,7 +1804,6 @@ def q_dedup_turns(spark, sf_dir):
 def q_ann_ivf(spark, sf_dir):
     # IVF coarse quantization, portable centroid selection — value-hash-
     # verified (duck_oracles.py)
-    _ship(spark)
     from logunifier_spark.operators.similarity import ivf_topk
     emb = _load(spark, sf_dir, "embeddings")
     q = (emb.where(F.col("vec_id") < 5)
@@ -1908,7 +1815,6 @@ def q_sample_deterministic(spark, sf_dir):
     """Deterministic hash-gate sampling: keep-set is a pure function of the
     row id — stable across runs, partitionings, cluster sizes (unlike
     df.sample, which is seed-stable only for a fixed partitioning)."""
-    _ship(spark)
     from logunifier_spark.operators.sampling import sample_deterministic
     d = _load(spark, sf_dir, "documents")
     return sample_deterministic(d, rate=0.25).select("doc_id", "source")
@@ -1922,7 +1828,6 @@ def q_epoch_shuffle(spark, sf_dir):
     invariant to it); pinned here for a stable plan, not a stable result.
     Oracle: ONE global window — an independent algorithm for the same
     permutation."""
-    _ship(spark)
     from logunifier_spark.operators.sampling import epoch_shuffle
     d = _load(spark, sf_dir, "documents")
     return epoch_shuffle(d, epoch=1, n_shards=8)
@@ -1931,7 +1836,6 @@ def q_epoch_shuffle(spark, sf_dir):
 def q_mixture_sample(spark, sf_dir):
     """Per-source pretraining-mixture reweighting: each source downsampled
     to its own rate by the portable hash gate."""
-    _ship(spark)
     from logunifier_spark.operators.sampling import mixture_sample
     d = _load(spark, sf_dir, "documents")
     rates = {"src0": 1.0, "src1": 0.5, "src2": 0.1}
@@ -1943,16 +1847,14 @@ def q_pack_sequences(spark, sf_dir):
     """Concat-and-chunk sequence packing: documents laid end-to-end in
     deterministic (shard, id) order, cut into 256-token context windows;
     sharded cumulative sums keep the window parallel at scale."""
-    _ship(spark)
     from logunifier_spark.operators.sampling import pack_sequences
     d = _load(spark, sf_dir, "documents")
     return pack_sequences(d, budget=256, n_shards=8)
 
 
 def q_media_resize(spark, sf_dir):
-    # stubbed codec (deterministic fake) — rows-only check of the
-    # mapInPandas resize plumbing
-    _ship(spark)
+    # stubbed codec (deterministic fake) through the mapInPandas resize
+    # plumbing
     from logunifier_spark.operators.multimodal import resize_images, synth_media
     m = synth_media(spark, 64)
     r = resize_images(m, 8, 6)
@@ -1962,8 +1864,7 @@ def q_media_resize(spark, sf_dir):
 
 
 def q_media_frame_sample(spark, sf_dir):
-    # deterministic synthetic media; frame-sampling plan — rows-only
-    _ship(spark)
+    # deterministic synthetic media; frame-sampling plan
     from logunifier_spark.operators.multimodal import sample_frames, synth_media
     m = synth_media(spark, 64)
     return sample_frames(m, every_ms=1000).select(
@@ -1975,7 +1876,6 @@ def q_multimodal_features(spark, sf_dir):
     # against a sealed hashlib/struct re-implementation (duck_oracles.py);
     # f0 is the raw float32 first feature (no rounding: float32 widened to
     # double is exact on both sides)
-    _ship(spark)
     from logunifier_spark.operators.multimodal import extract_features, synth_media
     m = synth_media(spark, 64)
     return (extract_features(m, dim=8, fake=True)
@@ -1993,133 +1893,15 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        # pipeline (parse→normalize→enrich→route→aggregate)
-        "pattern_histogram": q_pattern_histogram,
-        "level_histogram": q_level_histogram,
-        "sink_counts": q_sink_counts,
-        "sink_bytes": q_sink_bytes,
-        "routed_messages": q_routed_messages,
-        "parsed_timestamps": q_parsed_timestamps,
-        "emoji_histogram": q_emoji_histogram,
-        "logfmt_users": q_logfmt_users,
-        "process_errors": q_process_errors,
-        "validation_errors": q_validation_errors,
-        "stream_keys": q_stream_keys,
-        "tenant_counts": q_tenant_counts,
-        "stable_order": q_stable_order,
-        # relational capability
-        "tpch_pricing": q_tpch_pricing,
-        "top_customer_revenue": q_top_customer_revenue,
-        "region_revenue": q_region_revenue,
-        "conversation_stats": q_conversation_stats,
-        "stitch_conversations": q_stitch_conversations,
-        "turn_context": q_turn_context,
-        "response_pairs": q_response_pairs,
-        "salted_join": q_salted_join,
-        "first_event_per_user": q_first_event_per_user,
-        "event_type_stats": q_event_type_stats,
-        "asof_clicks": q_asof_clicks,
-        "interval_events": q_interval_events,
-        "kmv_users": q_kmv_users,
-        "event_rollup": q_event_rollup,
-        "user_pagerank": q_user_pagerank,
-        "value_histogram": q_value_histogram,
-        "nation_trade": q_nation_trade,
-        "user_sessions": q_user_sessions,
-        "rate_spikes": q_rate_spikes,
-        "event_funnel": q_event_funnel,
-        "funnel_summary": q_funnel_summary,
-        "cohort_retention": q_cohort_retention,
-        "log_templates": q_log_templates,
-        "tool_call_stats": q_tool_call_stats,
-        "stratified_sample": q_stratified_sample,
-        "latest_events": q_latest_events,
-        "normalize_text": q_normalize_text,
-        "quality_classifier": q_quality_classifier,
-        "skew_report": q_skew_report,
-        "corpus_diff": q_corpus_diff,
-        "fuzzy_match": q_fuzzy_match,
-        "watermark_lag": q_watermark_lag,
-        "zorder_layout": q_zorder_layout,
-        "heavy_hitters": q_heavy_hitters,
-        "blocklist_hits": q_blocklist_hits,
-        "conversation_qc": q_conversation_qc,
-        "mixture_weights": q_mixture_weights,
-        "pq_encode": q_pq_encode,
-        "ann_ivfpq": q_ann_ivfpq,
-        "inverted_index": q_inverted_index,
-        "user_triangles": q_user_triangles,
-        "bpe_train": q_bpe_train,
-        "user_communities": q_user_communities,
-        "rolling_rates": q_rolling_rates,
-        "pmi_collocations": q_pmi_collocations,
-        "bpe_token_counts": q_bpe_token_counts,
-        "cms_user_counts": q_cms_user_counts,
-        "weighted_sample": q_weighted_sample,
-        "session_paths": q_session_paths,
-        "verified_neardups": q_verified_neardups,
-        "corpus_report": q_corpus_report,
-        "range_bounds": q_range_bounds,
-        "doc_length_quantiles": q_doc_length_quantiles,
-        "curate_corpus": q_curate_corpus,
-        "decontam_hits": q_decontam_hits,
-        "chunk_windows": q_chunk_windows,
-        "gopher_stats": q_gopher_stats,
-        "kmeans_clusters": q_kmeans_clusters,
-        "redact_pii": q_redact_pii,
-        # pipeline sources / stateful ops
-        "multiline_reassembly": q_multiline_reassembly,
-        "docker_parse": q_docker_parse,
-        "journald_parse": q_journald_parse,
-        "dedup_turns": q_dedup_turns,
-        "line_limit": q_line_limit,
-        "journald_unify": q_journald_unify,
-        "ship_label_folds": q_ship_label_folds,
-        "ship_metadata": q_ship_metadata,
-        # training-data operators
-        "dedup_exact": q_dedup_exact,
-        "ngram_jaccard": q_ngram_jaccard,
-        "minhash_dedup": q_minhash_dedup,
-        "dedup_components": q_dedup_components,
-        "simhash_pairs": q_simhash_pairs,
-        "ann_bruteforce": q_ann_bruteforce,
-        "ann_lsh": q_ann_lsh,
-        "ann_recall": q_ann_recall,
-        "rp_project": q_rp_project,
-        "vocab_zipf": q_vocab_zipf,
-        "source_overlap": q_source_overlap,
-        "token_counts": q_token_counts,
-        "language_histogram": q_language_histogram,
-        "fingerprint_dupes": q_fingerprint_dupes,
-        "quality_scores": q_quality_scores,
-        "embedding_neardup": q_embedding_neardup,
-        "semdedup_pairs": q_semdedup_pairs,
-        "tfidf_top_terms": q_tfidf_top_terms,
-        "unigram_logppl": q_unigram_logppl,
-        "dsir_weights": q_dsir_weights,
-        "dsir_select": q_dsir_select,
-        "char_entropy": q_char_entropy,
-        "source_drift": q_source_drift,
-        "bigram_logppl": q_bigram_logppl,
-        "assign_splits": q_assign_splits,
-        "winnow_fps": q_winnow_fps,
-        "paragraph_dedup": q_paragraph_dedup,
-        "dup_runs": q_dup_runs,
-        "cross_doc_grams": q_cross_doc_grams,
-        "doc_duplication": q_doc_duplication,
-        "bm25_search": q_bm25_search,
-        "repeated_ngrams": q_repeated_ngrams,
-        "ann_ivf": q_ann_ivf,
-        "media_frame_sample": q_media_frame_sample,
-        "media_resize": q_media_resize,
-        "multimodal_features": q_multimodal_features,
-        # dataset curation
-        "sample_deterministic": q_sample_deterministic,
-        "epoch_shuffle": q_epoch_shuffle,
-        "mixture_sample": q_mixture_sample,
-        "pack_sequences": q_pack_sequences,
-    }
+    """Every `q_<name>` function of this module under <name>, in definition
+    order; each ships the package before it builds its plan."""
+    def shipped(fn):
+        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+            _ship(spark)
+            return fn(spark, sf_dir)
+        return run
+    return {name[2:]: shipped(fn) for name, fn in globals().items()
+            if name.startswith("q_")}
 
 
 # ---------------------------------------------------------------------------

@@ -29,15 +29,6 @@ def level_histogram(df: DataFrame) -> DataFrame:
               .agg(F.count("*").alias("hits")))
 
 
-def stream_counts(df: DataFrame) -> DataFrame:
-    """Entries per canonical label-stream key (A1), plus byte accounting
-    analog of batch.go:114-127 (sum of line BYTE lengths — octet_length,
-    matching Go's len() on a UTF-8 string)."""
-    return (df.groupBy("stream_key")
-              .agg(F.count("*").alias("entries"),
-                   F.sum(F.octet_length(F.coalesce(F.col("message"), F.lit("")))).alias("line_bytes")))
-
-
 def sink_bytes(df: DataFrame) -> DataFrame:
     """(sink, routed_rows, payload_bytes) — A2/A3 batch-size accounting
     parity: the reference sizes Loki batches by summed entry line bytes

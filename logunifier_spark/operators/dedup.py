@@ -87,15 +87,6 @@ def char_shingles(text: Column, n: int = 5) -> Column:
     return F.array_distinct(grams)
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    # same lambda-binding trick: the split-words array is computed once
-    grams = F.flatten(F.transform(F.array(F.split(_normalize(text), " ")),
-        lambda ws: F.transform(
-            F.sequence(F.lit(0), F.greatest(F.size(ws) - (n - 1), F.lit(1)) - 1),
-            lambda i: F.xxhash64(F.concat_ws(" ", F.slice(ws, i + 1, n))))))
-    return F.array_distinct(grams)
-
-
 # -------------------------------------------------------------- minhash ----
 
 _MINHASH_P = 2_147_483_647  # Mersenne prime 2^31 - 1: the portable field
@@ -179,41 +170,12 @@ def _gram_pairs(norm_u32, shingle_n: int) -> list:
     return grams_per_row
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 64) -> Column:
-    """num_hashes minhash values via the (a*x+b mod p) family over the
-    shingle hashes — one aggregate per hash function, fully native.
-
-    NOTE: prefer `minhash_signature_udf` in pipelines — a Catalyst tree of
-    64 array transforms is re-expanded at every downstream reference (e.g.
-    16 band-bucket projections), turning O(hashes·grams) into
-    O(bands·hashes·grams) per row. The Arrow UDF materializes the signature
-    once. The two paths hash grams DIFFERENTLY (xxhash64 char shingles here
-    vs portable Horner-mod-p codepoints in the UDF): signatures are NOT
-    comparable across them — pick one per corpus."""
-    # deterministic affine parameters (odd multipliers); reduce into 31-bit
-    # space BEFORE multiplying so ANSI mode can't overflow int64
-    p = F.lit(_MINHASH_P)
-    sig = F.array(*[
-        F.array_min(F.transform(
-            shingles,
-            lambda s, i=i: F.pmod(
-                F.pmod(s, p) * F.lit(2 * i + 1) + F.lit(1_000_003 * (i + 7)), p),
-        ))
-        for i in range(num_hashes)
-    ])
-    return sig
-
-
 def minhash_signature_udf(num_hashes: int = 64, shingle_n: int = 5):
     """Arrow-vectorized text → minhash signature (numpy, zero per-row Python
     in the hot loops). Normalization matches `_normalize` (lower + collapse
     whitespace); grams are distinct Horner-mod-p codepoint hashes
     (`_gram_hashes`, engine-portable); sig[i] = min over grams g of
     (g*(2i+1) + 1000003*(i+7)) mod p.
-
-    NOT interchangeable with the native-expression `minhash_signature`
-    (which hashes xxhash64 char shingles) — signatures from the two paths
-    must never be compared mid-pipeline; pick one per corpus.
 
     Shingling happens inside the UDF (rather than passing a Catalyst
     shingle array in) because a higher-order-function expression as a
@@ -570,10 +532,9 @@ def simhash_udf(shingle_n: int = 4):
     bits). Per-bit majority vote over the distinct gram pairs, packed into
     a signed long. Engine-portable — the DuckDB oracle recomputes it in SQL.
 
-    Preferred over the native-expression `simhash64` in pipelines: the
-    Catalyst version extracts bits via binary-string ops per gram per bit
-    (~64× gram-count string allocations per row — measured minutes at a few
-    thousand docs), while this is a handful of numpy passes."""
+    A Catalyst version (bit extraction via binary-string ops per gram per
+    bit, ~64× gram-count string allocations per row) measured minutes at a
+    few thousand docs; this is a handful of numpy passes."""
     from pyspark.sql.functions import pandas_udf
 
     half = SIMHASH_BITS // 2
@@ -603,53 +564,6 @@ def simhash_udf(shingle_n: int = 4):
         return pd.Series(out)
 
     return _sim
-
-
-def simhash64_udf(shingle_n: int = 4):
-    """DEPRECATED alias for :func:`simhash_udf`. Since round 2 this
-    produces 60-bit Horner-mod-p hashes, NOT the round-1 64-bit fmix64
-    hashes the name promises — signatures or block buckets persisted from
-    the old family are silently incompatible and must be recomputed. New
-    code should call simhash_udf directly (see CHANGES_r03.md)."""
-    import warnings
-
-    warnings.warn(
-        "simhash64_udf is a deprecated alias for simhash_udf and now emits "
-        "60-bit portable hashes; round-1 64-bit signatures are incompatible "
-        "— recompute persisted signatures/buckets",
-        DeprecationWarning, stacklevel=2)
-    return simhash_udf(shingle_n)
-
-
-def simhash64(text: Column, shingle_n: int = 4) -> Column:
-    """64-bit simhash over character shingles — ONE aggregate pass with a
-    64-wide array accumulator (a per-bit expression tree of 64 separate
-    aggregates blows up codegen; this stays a single higher-order function)."""
-    sh = char_shingles(text, shingle_n)
-    zero = F.array_repeat(F.lit(0).cast("long"), 64)
-    idx = F.sequence(F.lit(0), F.lit(63))
-    # bit extraction via the two's-complement binary string (F.bin) —
-    # pyspark's shiftright/shiftleft take only Python-int shift amounts
-    counts = F.aggregate(
-        sh, zero,
-        lambda acc, s: F.zip_with(
-            acc,
-            F.transform(idx, lambda i: F.when(
-                F.lpad(F.bin(s), 64, "0").substr(F.lit(64) - i, F.lit(1)) == "1",
-                F.lit(1)).otherwise(F.lit(-1)).cast("long")),
-            lambda a, b: a + b,
-        ),
-    )
-    # bit i weight; bit 63 is the sign bit of the signed long
-    powers = F.array(*[F.lit(1 << i if i < 63 else -(1 << 63)).cast("long")
-                       for i in range(64)])
-    packed = F.aggregate(
-        F.zip_with(counts, powers,
-                   lambda c, p: F.when(c > 0, p).otherwise(F.lit(0).cast("long"))),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc.bitwiseOR(v),
-    )
-    return packed
 
 
 def simhash_pairs(df: DataFrame, text_col: str = "text",

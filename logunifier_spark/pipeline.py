@@ -87,8 +87,7 @@ def _is_file_backed(df: DataFrame) -> bool:
         return True
 
 
-def _dedup_turns(df: DataFrame, keys: list[str] | None = None,
-                 probe: bool | None = None) -> DataFrame:
+def _dedup_turns(df: DataFrame, keys: list[str] | None = None) -> DataFrame:
     """JetStream duplicate-window analog (streamcfg.go:30), keyed on the
     stable turn id, built for the rare-duplicate case.
 
@@ -105,14 +104,14 @@ def _dedup_turns(df: DataFrame, keys: list[str] | None = None,
       4. dedupe only the duplicate subset with a deterministic
          max-payload-hash winner.
 
-    `probe` (default auto): for FILE-BACKED inputs an eager isEmpty probe
-    of the dup-key aggregate runs first and, when no key has duplicates
-    (the common case), returns the input untouched — one narrow
-    column-pruned read instead of the two full anti/semi scans. For
-    in-memory inputs (range/LocalRelation — benches, synthetics) the probe
-    is a net LOSS (measured +0.7 s/1M turns: a sequential job barrier vs
-    cheap regeneration), so auto skips it and keeps the fused single-job
-    plan, which is correct either way. The probe is deliberately NOT
+    Probe: for FILE-BACKED inputs an eager isEmpty probe of the dup-key
+    aggregate runs first and, when no key has duplicates (the common
+    case), returns the input untouched — one narrow column-pruned read
+    instead of the two full anti/semi scans. For in-memory inputs
+    (range/LocalRelation — benches, synthetics) the probe is a net LOSS
+    (measured +0.7 s/1M turns: a sequential job barrier vs cheap
+    regeneration), so they skip it and keep the fused single-job plan,
+    which is correct either way. The probe is deliberately NOT
     localCheckpoint'ed: checkpoint blocks die with their executor, while
     the duplicates-present path just recomputes the cheap aggregate inside
     its joins with full lineage fault tolerance. NOTE: with the probe,
@@ -136,9 +135,7 @@ def _dedup_turns(df: DataFrame, keys: list[str] | None = None,
     dup_hashes = (df.select(kh.alias("_kh")).groupBy("_kh")
                     .agg(F.count("*").alias("_n"))
                     .where(F.col("_n") > 1).select("_kh"))
-    if probe is None:
-        probe = _is_file_backed(df)
-    if probe and dup_hashes.isEmpty():
+    if _is_file_backed(df) and dup_hashes.isEmpty():
         return df
     dfh = df.withColumn("_kh", kh)
     clean = dfh.join(F.broadcast(dup_hashes), "_kh", "left_anti")

@@ -81,10 +81,10 @@ LOKI_LABEL_COLUMNS = [
 ]
 
 
-def to_ecs_struct(prefixed=lambda c: F.col(c)):
+def to_ecs_struct():
     """Nested protojson-shaped struct mirroring EcsLogEntry field names
     (extensions.go:296-305 uses proto field names: @timestamp, stack_trace)."""
-    c = prefixed
+    c = F.col
     return F.struct(
         c("id").alias("id"),
         F.date_format(c("timestamp"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSSX").alias("@timestamp"),

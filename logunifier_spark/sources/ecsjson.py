@@ -59,9 +59,3 @@ def parse_ecs_json(text: Column) -> Column:
 
 def is_bad_ecs(j: Column) -> Column:
     return j.isNull() | j["_corrupt_record"].isNotNull()
-
-
-def ecs_timestamp(j: Column) -> Column:
-    """@timestamp RFC3339Nano → TimestampType (UTC session tz). Spark's
-    to_timestamp handles offsets and ≥µs fractions natively (ns truncated)."""
-    return F.to_timestamp(j["@timestamp"])

@@ -60,9 +60,9 @@ def test_minhash_cap_observable(spark, docs):
 
 
 def test_simhash_near_dup(spark, docs):
-    from logunifier_spark.operators.dedup import simhash64, simhash_pairs
+    from logunifier_spark.operators.dedup import simhash_pairs, simhash_udf
     h = {r["doc_id"]: r["sh"] for r in
-         docs.select("doc_id", simhash64(F.col("text")).alias("sh")).collect()}
+         docs.select("doc_id", simhash_udf()(F.col("text")).alias("sh")).collect()}
     assert h[1] == h[2]  # identical text → identical simhash
     pairs = {(r["id_a"], r["id_b"]): r["hamming"]
              for r in simhash_pairs(docs, max_hamming=6).collect()}

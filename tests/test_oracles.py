@@ -1,14 +1,14 @@
 """In-suite oracle parity: a fast subset of the driver's correctness gate
 (Spark query vs independent DuckDB SQL, order-insensitive value compare) at
 sf0.001 — guards the oracle plumbing between full `tools/check_oracles.py`
-runs. The full 42-query gate runs at sf0.01 out-of-band."""
-
-import math
+runs. The full gate (every query in `queries()`) runs at sf0.01
+out-of-band."""
 
 import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
+from tools.check_oracles import _canon, _type_drift, registry_mismatch
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -26,19 +26,10 @@ FAST_QUERIES = [
 ]
 
 
-def _norm(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else f"{v:.9g}"
-    if hasattr(v, "isoformat"):
-        return v.isoformat()
-    return str(v)
-
-
-def _canon(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(tuple(_norm(r[i]) for i in order) for r in rows)
+def test_every_query_has_an_oracle():
+    """The registry is the `q_*` functions; oracle_sql() must name exactly
+    the same queries (the gate exits 1 on any difference)."""
+    assert registry_mismatch(entrymod.queries(), entrymod.oracle_sql()) == []
 
 
 @pytest.fixture(scope="module")
@@ -51,8 +42,6 @@ def duck():
 
 @pytest.mark.parametrize("name", FAST_QUERIES)
 def test_oracle_parity(spark, duck, name):
-    from tools.check_oracles import _type_drift
-
     sdf = entrymod.queries()[name](spark, SF_DIR)
     scols = sdf.columns
     srows = [tuple(r) for r in sdf.collect()]
@@ -72,8 +61,6 @@ def test_type_drift_catches_hugeint(duck):
     """Regression: an un-CAST DuckDB windowed sum() is HUGEINT, which the
     driver fetches as float64 while Spark emits BIGINT — the exact round-2
     pack_sequences failure. The local gate must flag it."""
-    from tools.check_oracles import _type_drift
-
     res = duck.sql(
         "SELECT doc_id, sum(doc_id) OVER (ORDER BY doc_id) AS cum "
         "FROM documents LIMIT 5"

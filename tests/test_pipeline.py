@@ -333,3 +333,31 @@ def test_structured_metadata_user_quirk(spark):
     assert md[1] == {"user": ""}      # User != nil quirk: empty name ships
     assert md[2] == {}                # empty trace id does NOT ship
     assert md[3] == {}
+
+
+def test_to_ecs_struct_json_uses_proto_names(spark):
+    """P18: F.to_json(to_ecs_struct()) serializes a unified row with the
+    protojson field names of EcsLogEntry (extensions.go:296-305)."""
+    import json
+
+    from logunifier_spark.schema import to_ecs_struct
+
+    ecs = ('{"@timestamp":"2023-06-07T13:08:51+01:00","message":"boom",'
+           '"log":{"level":"ERROR"},"error":{"stack_trace":"at main()"}}')
+    df = spark.createDataFrame(
+        [("c", 0, "tool", ecs, "ecs", BASE_TS),
+         ("c", 1, "user", "plain raw container line", "", BASE_TS),
+         ("c", 2, "tool", "this is not json {", "ecs", BASE_TS)],
+        TRANSCRIPT_SCHEMA)
+    docs = {r["turn_idx"]: json.loads(r["j"]) for r in unify(df).select(
+        "turn_idx", F.to_json(to_ecs_struct()).alias("j")).collect()}
+    e, n, bad = docs[0], docs[1], docs[2]
+    assert e["@timestamp"] == "2023-06-07T12:08:51.000000Z"
+    assert e["log"]["patternKey"] == "Ecs"
+    assert e["error"]["stack_trace"] == "at main()"
+    assert "timestamp" not in e and "log_pattern_key" not in e
+    assert n["log"]["patternKey"] == "Nop"
+    assert n["validationError"]["errors"].startswith("No organisation name set")
+    # rawData is kept only on rows with a process error
+    assert "rawData" not in n["processError"]
+    assert bad["processError"]["rawData"] == "this is not json {"

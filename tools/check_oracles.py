@@ -1,6 +1,7 @@
 """Local stand-in for the driver's CORRECTNESS gate: run every
 __spark_entry__.queries() entry AND its oracle_sql() on the same sf dir,
-compare row-count + column names + order-insensitive values.
+compare row-count + column names + order-insensitive values. Exits 1
+before starting Spark when the two registries name different queries.
 
 Usage: python tools/check_oracles.py [sf_dir] [query ...]
        python tools/check_oracles.py --soak [sf_dir] [query ...]
@@ -266,9 +267,22 @@ def soak_main() -> int:
     return 1 if failures else 0
 
 
+def registry_mismatch(queries, oracles) -> list[str]:
+    """One line per key in only one of queries() / oracle_sql()."""
+    return ([f"query without oracle: {k}" for k in queries if k not in oracles]
+            + [f"oracle without query: {k}" for k in oracles if k not in queries])
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+
+    queries = entrymod.queries()
+    oracles = entrymod.oracle_sql()
+    mismatch = registry_mismatch(queries, oracles)
+    if mismatch:
+        print("✗ REGISTRY MISMATCH\n    " + "\n    ".join(mismatch))
+        return 1
 
     from logunifier_spark.session import get_spark
     spark = get_spark(app_name="oracle-check", master="local[8]")
@@ -277,8 +291,6 @@ def main() -> int:
     for t in entrymod.TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    queries = entrymod.queries()
-    oracles = entrymod.oracle_sql()
     failures = []
     import time as _time
     for name, fn in queries.items():
@@ -292,12 +304,6 @@ def main() -> int:
         except Exception as e:  # noqa: BLE001
             failures.append(name)
             print(f"✗ {name}: SPARK ERROR {type(e).__name__}: {e}")
-            continue
-        if name not in oracles:
-            print(f"~ {name}: rows-only ({len(srows)} rows, cols={scols})")
-            if not srows:
-                failures.append(name)
-                print(f"  ✗ zero rows")
             continue
         try:
             res = con.sql(oracles[name])
