@@ -24,7 +24,7 @@ GRAM_BASE_2 = 137
 def _codepoints_cte(min_len: int, shingle_n: int, table: str = "documents",
                     text_col: str = "text", id_col: str = "doc_id") -> str:
     """docs → normalized string → codepoint list padded to >= shingle_n
-    (mirrors dedup._gram_hashes padding: zeros appended when the text is
+    (mirrors dedup._horner_grams padding: zeros appended when the text is
     shorter than one window)."""
     pad = ", ".join("0" for _ in range(shingle_n))
     return f"""
@@ -356,7 +356,7 @@ def ngram_jaccard_sql(min_len: int = 20, shingle_n: int = 3,
     return f"""
 WITH xreps AS (
   -- exact-duplicate collapse mirror of dedup.exact_groups
-  -- (collapse_exact=True default): the chain runs on one
+  -- (ngram_jaccard_pairs always collapses): the chain runs on one
   -- representative per distinct text; df counts distinct texts
   SELECT text, min(doc_id) AS rep FROM documents
   WHERE length(text) >= {min_len} GROUP BY text),

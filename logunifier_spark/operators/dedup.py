@@ -107,74 +107,68 @@ def _norm_series(text: pd.Series) -> pd.Series:
                 .str.encode("utf-32-le"))
 
 
-def _gram_hashes(norm_u32, shingle_n: int, base: int = _GRAM_BASE_1) -> list:
-    """Distinct n-gram hashes per row (list of int64 arrays < p) from
-    UTF-32LE-encoded normalized strings: Horner rolling hash over Unicode
-    CODEPOINTS, h = fold(h*base + cp) mod p.
+def _horner_grams(norm_u32, shingle_n: int, bases=(_GRAM_BASE_1,)) -> list:
+    """Distinct gram keys per row (list of int64 arrays) from UTF-32LE-
+    encoded normalized strings: one Horner rolling hash per base over
+    Unicode CODEPOINTS, h = fold(h*base + cp) mod p, packed 31 bits per
+    base. One base (minhash, the verify-stage gram sets) gives the hash
+    itself, < p; two (simhash) give (h1 << 31) | h2, the 62-bit gram
+    IDENTITY — portable to SQL as a single BIGINT (a list of pairs is not
+    list_distinct-able in DuckDB).
 
     This family is deliberately ENGINE-PORTABLE: the same arithmetic is
     expressible in plain SQL (DuckDB list comprehensions over unicode()
     codepoints), which is what lets the minhash/simhash pipelines carry an
-    independent value-hash oracle instead of a rows-only check. All
-    intermediates fit int64: h < p*131 + 2^21 < 2^39."""
+    independent value-hash oracle instead of a rows-only check. Texts
+    shorter than one window are zero-padded, so every row has >= 1 gram."""
     grams_per_row = []
     for bs in norm_u32:
         cps = np.frombuffer(bs, dtype="<u4").astype(np.int64)
         if len(cps) < shingle_n:
             cps = np.pad(cps, (0, shingle_n - len(cps)))
         win = np.lib.stride_tricks.sliding_window_view(cps, shingle_n)
-        # Horner WITHOUT per-step mod: codepoints < 2^21 and base^(n-1)·n·2^21
-        # < 2^63 for n ≤ 5, so one mod at the end is exact — and ~2× faster
-        # (integer division dominates the vectorized loop). Congruent to the
-        # SQL oracle's per-step (a*base + c) % p by mod homomorphism. For
-        # n > 5 the deferred form would silently wrap int64 and diverge from
-        # the oracle, so those fall back to the exact per-step mod.
-        h = np.zeros(len(win), dtype=np.int64)
-        if shingle_n <= 5:
-            for j in range(shingle_n):
-                h = h * base + win[:, j]
-            h %= _MINHASH_P
-        else:
-            for j in range(shingle_n):
-                h = (h * base + win[:, j]) % _MINHASH_P
-        grams_per_row.append(np.unique(h))
+        key = None
+        for base in bases:
+            # Horner WITHOUT per-step mod: codepoints < 2^21 and
+            # base^(n-1)·n·2^21 < 2^63 for n ≤ 5, so one mod at the end is
+            # exact — and ~2× faster (integer division dominates the
+            # vectorized loop). Congruent to the SQL oracle's per-step
+            # (a*base + c) % p by mod homomorphism. For n > 5 the deferred
+            # form would silently wrap int64 and diverge from the oracle,
+            # so those fall back to the exact per-step mod.
+            h = np.zeros(len(win), dtype=np.int64)
+            if shingle_n <= 5:
+                for j in range(shingle_n):
+                    h = h * base + win[:, j]
+                h %= _MINHASH_P
+            else:
+                for j in range(shingle_n):
+                    h = (h * base + win[:, j]) % _MINHASH_P
+            key = h if key is None else (key << np.int64(31)) | h
+        grams_per_row.append(np.unique(key))
     return grams_per_row
 
 
-def _gram_pairs(norm_u32, shingle_n: int) -> list:
-    """Distinct combined gram keys per row: (h1 << 31) | h2 where h1/h2 are
-    the two Horner-mod-p hashes of the same window (bases 131/137). The
-    combined 62-bit key is the gram IDENTITY for simhash voting — portable
-    to SQL as a single BIGINT (a list of pairs is not list_distinct-able
-    in DuckDB)."""
-    grams_per_row = []
-    for bs in norm_u32:
-        cps = np.frombuffer(bs, dtype="<u4").astype(np.int64)
-        if len(cps) < shingle_n:
-            cps = np.pad(cps, (0, shingle_n - len(cps)))
-        win = np.lib.stride_tricks.sliding_window_view(cps, shingle_n)
-        # deferred mod (see _gram_hashes): exact for n <= 5, else per-step
-        h1 = np.zeros(len(win), dtype=np.int64)
-        h2 = np.zeros(len(win), dtype=np.int64)
-        if shingle_n <= 5:
-            for j in range(shingle_n):
-                h1 = h1 * _GRAM_BASE_1 + win[:, j]
-                h2 = h2 * _GRAM_BASE_2 + win[:, j]
-            h1 %= _MINHASH_P
-            h2 %= _MINHASH_P
-        else:
-            for j in range(shingle_n):
-                h1 = (h1 * _GRAM_BASE_1 + win[:, j]) % _MINHASH_P
-                h2 = (h2 * _GRAM_BASE_2 + win[:, j]) % _MINHASH_P
-        grams_per_row.append(np.unique((h1 << np.int64(31)) | h2))
-    return grams_per_row
+def _ragged_grams(text: pd.Series, shingle_n: int, bases=(_GRAM_BASE_1,)):
+    """The gram keys of a batch as one ragged array for the sketch UDFs'
+    per-row `np.ufunc.reduceat`: (lens, flat, offsets) — each row's gram
+    count, all keys concatenated, and each row's start in `flat`. Every
+    row has >= 1 gram (`_horner_grams` pads), so no offset repeats."""
+    grams_per_row = _horner_grams(_norm_series(text), shingle_n, bases)
+    lens = np.fromiter(map(len, grams_per_row), dtype=np.int64,
+                       count=len(grams_per_row))
+    offsets = np.zeros(len(lens), dtype=np.int64)
+    np.cumsum(lens[:-1], out=offsets[1:])
+    flat = (np.concatenate(grams_per_row) if grams_per_row
+            else np.zeros(0, dtype=np.int64))
+    return lens, flat, offsets
 
 
 def minhash_signature_udf(num_hashes: int = 64, shingle_n: int = 5):
     """Arrow-vectorized text → minhash signature (numpy, zero per-row Python
     in the hot loops). Normalization matches `_normalize` (lower + collapse
     whitespace); grams are distinct Horner-mod-p codepoint hashes
-    (`_gram_hashes`, engine-portable); sig[i] = min over grams g of
+    (`_horner_grams`, engine-portable); sig[i] = min over grams g of
     (g*(2i+1) + 1000003*(i+7)) mod p.
 
     Shingling happens inside the UDF (rather than passing a Catalyst
@@ -190,20 +184,13 @@ def minhash_signature_udf(num_hashes: int = 64, shingle_n: int = 5):
 
     @pandas_udf("array<long>")
     def _sig(text: pd.Series) -> pd.Series:
-        norm = _norm_series(text)
-        grams_per_row = _gram_hashes(norm, shingle_n)
-        lens = np.fromiter(map(len, grams_per_row), dtype=np.int64,
-                           count=len(grams_per_row))
+        lens, flat, offsets = _ragged_grams(text, shingle_n)
         out = np.full((len(lens), num_hashes), p, dtype=np.int64)
-        if lens.sum():
-            flat = np.concatenate(grams_per_row)
-            nz = lens > 0
-            offsets = np.zeros(int(nz.sum()), dtype=np.int64)
-            np.cumsum(lens[nz][:-1], out=offsets[1:])
+        if len(lens):
             # one fused pass per hash function: O(total) memory
             for i in range(num_hashes):
                 row = (flat * a[i] + b[i]) % p
-                out[nz, i] = np.minimum.reduceat(row, offsets)
+                out[:, i] = np.minimum.reduceat(row, offsets)
         return pd.Series(list(out))
 
     return _sig
@@ -237,18 +224,16 @@ _OBS_SEQ = itertools.count()
 
 
 class _CapStats:
-    """Accessor for minhash_lsh_pairs' hot-bucket cap metrics. `.get`
-    (after the first action on the returned frame) is a mapping with
-    `capped_buckets` and `max_bucket_rows`. Normally it reads the free
-    ride-along Observation; when EVERY bucket was capped the survivor
-    set is empty, Spark 4.1's AQE empty-relation propagation cancels the
-    stage carrying the CollectMetrics node, and Observation.get crashes
-    on a schemaless row (same bug class as write_sinks' zero-row write)
-    — the fallback re-aggregates the bucket counts. That recompute
-    starts from the signatures' localCheckpoint (materialized by the
-    first action on the result), so it pays the band explode + count
-    aggregate again — NOT the shingle/minhash UDF chain — and only on
-    that rare all-hot path."""
+    """What a pair operator's hot-bucket cap dropped (the
+    `hot_bucket_observation` attribute of its result). `.get` (after the
+    first action on that result) is a mapping with `capped_buckets` and
+    `max_bucket_rows`. Normally it reads the free ride-along Observation;
+    when NO candidate pair survives the cap (every bucket capped, or only
+    singletons left), Spark 4.1's AQE empty-relation propagation prunes
+    the plan branch carrying the CollectMetrics node, and Observation.get
+    crashes on a schemaless row (same bug class as write_sinks' zero-row
+    write) — the fallback then re-aggregates the bucket counts, which
+    recomputes the banded frame (jobs, on that path only)."""
 
     def __init__(self, obs, raw_counts: DataFrame, max_bucket: int):
         self._obs, self._counts, self._mb = obs, raw_counts, max_bucket
@@ -274,44 +259,78 @@ class _CapStats:
                     "max_bucket_rows": int(row["max_bucket_rows"] or 0)}
 
 
+def bucket_pairs(banded: DataFrame, keys: list[str],
+                 cap: int | None) -> tuple[DataFrame, _CapStats | None]:
+    """THE capped bucket self-join of the near-duplicate pair family:
+    `banded` rows (id, *keys, *payload) → distinct (id_a, id_b) pairs
+    with id_a < id_b that share at least one bucket (`keys`), each
+    payload column carried as `<c>_a` / `<c>_b`. Returns (pairs, stats).
+
+    `cap` is the hot-bucket guard (None: exact pigeonhole): buckets
+    holding more than `cap` rows are dropped from candidate generation.
+    One hot bucket is the skewed-key case of a hash self-join — its pair
+    explosion is ONE join key, which AQE skew-splitting cannot divide, so
+    the candidate count is bounded by rows·buckets-per-row·cap instead.
+    The drop trades recall, so it is never silent: `stats` (a
+    `_CapStats`, None when uncapped) reports how many buckets were
+    capped and the largest population seen, read from an Observation on
+    the bucket-count aggregate the cap needs anyway — zero extra jobs
+    (see _CapStats for the no-survivor fallback)."""
+    stats = None
+    if cap is not None:
+        from pyspark.sql import Observation
+        raw_counts = banded.groupBy(*keys).agg(F.count("*").alias("_n"))
+        # unique per call: Observation names are global to a plan, and a
+        # hard-coded name breaks any query composing two capped pair
+        # frames (DUPLICATED_METRICS_NAME on union/join)
+        obs = Observation(f"hot_buckets_{next(_OBS_SEQ)}")
+        counts = raw_counts.observe(
+            obs,
+            F.sum((F.col("_n") > cap).cast("long")).alias("capped_buckets"),
+            F.max("_n").alias("max_bucket_rows"))
+        stats = _CapStats(obs, raw_counts, cap)
+        cool = counts.where(F.col("_n") <= cap).select(*keys)
+        banded = banded.join(cool, keys, "left_semi")
+    payload = [c for c in banded.columns if c != "id" and c not in keys]
+    a, b = banded.alias("a"), banded.alias("b")
+    pairs = (a.join(b, on=keys)
+              .where(F.col("a.id") < F.col("b.id"))
+              .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
+                      *[F.col(f"a.{c}").alias(f"{c}_a") for c in payload],
+                      *[F.col(f"b.{c}").alias(f"{c}_b") for c in payload])
+              .dropDuplicates(["id_a", "id_b"]))
+    return pairs, stats
+
+
 def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", num_hashes: int = 64,
                       bands: int = 16, shingle_n: int = 5,
                       threshold: float = 0.7,
-                      max_bucket: int | None = 10_000,
-                      broadcast_sigs: bool | None = None) -> DataFrame:
+                      max_bucket: int | None = 10_000) -> DataFrame:
     """Candidate near-duplicate pairs via banded minhash LSH, verified by
     signature agreement (estimate of Jaccard). Returns (id_a, id_b, sim).
 
     `max_bucket` (ON by default at 10k, matching simhash_pairs; pass None
     for the exact banding) caps the per-(band, bucket) population used for
-    candidate generation. On corpora with a high similarity floor
-    (templated logs), a single bucket can hold thousands of docs — sf0.1
-    bench: one bucket of 1170 docs generates 684k of the 2.3M raw
-    candidates AND pins one join task (a bucket's pair explosion is a
-    single join key, which AQE skew-splitting cannot divide); at 100 TB an
-    uncapped hot bucket is the scale-killer. A pair is lost only if ALL
-    its shared bands are hot; at the cap's scale those docs are
-    boilerplate-identical and better collapsed by exact_dedup first.
-    Callers needing the exact pigeonhole guarantee opt out with
-    max_bucket=None explicitly (default flipped in round 3 — see
-    CHANGES_r03.md). Because the cap silently trades recall, the loss is
-    made OBSERVABLE (ADVICE r3): the returned frame carries a
-    `hot_bucket_observation` attribute (a `_CapStats`; None when
-    uncapped) whose `.get`, available after the first action on the
-    result, reports `capped_buckets` (how many (band, bucket)
-    populations exceeded the cap and were dropped from candidate
-    generation) and `max_bucket_rows` (the largest population seen). It
-    rides the existing bucket-count aggregate — zero extra jobs on the
-    normal path (see _CapStats for the all-hot fallback).
+    candidate generation (`bucket_pairs`). On corpora with a high
+    similarity floor (templated logs), a single bucket can hold thousands
+    of docs — sf0.1 bench: one bucket of 1170 docs generates 684k of the
+    2.3M raw candidates AND pins one join task; at 100 TB an uncapped hot
+    bucket is the scale-killer. A pair is lost only if ALL its shared
+    bands are hot; at the cap's scale those docs are boilerplate-identical
+    and better collapsed by exact_dedup first. Callers needing the exact
+    pigeonhole guarantee opt out with max_bucket=None explicitly (default
+    flipped in round 3 — see CHANGES_r03.md). The returned frame's
+    `hot_bucket_observation` (None when uncapped) reports what the cap
+    dropped after the first action on the result.
 
-    `broadcast_sigs` (default auto from the input's Catalyst size stats):
-    when the signature table is small enough to broadcast, the two
-    verify joins become broadcast hash joins and the candidate-pair frame
-    — the LARGE side on similarity-floor corpora (sf0.1: 1.3M pairs from
-    5k docs) — flows through with NO exchange, instead of being shuffled
-    twice carrying an attached signature per row. At billions of docs the
-    auto path keeps the shuffled join."""
+    The signature table is broadcast to the two verify joins when it is
+    small enough (an automatic two-stage gate on the input's Catalyst size
+    estimate, then on the actual signature row count): the candidate-pair
+    frame — the LARGE side on similarity-floor corpora (sf0.1: 1.3M pairs
+    from 5k docs) — then flows through with NO exchange, instead of being
+    shuffled twice carrying an attached signature per row. At billions of
+    docs the gate keeps the shuffled join."""
     rows_per_band = num_hashes // bands
     sig = (fan_out(df, divisor=2)
            .select(F.col(id_col).alias("id"),
@@ -327,12 +346,11 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     # trades ~(rows × 8·num_hashes B) of executor-local storage for two
     # full re-reads of the corpus.
     sig = sig.localCheckpoint(eager=False)
-    if broadcast_sigs is None:
-        # screen on the cheap byte estimate, then decide on the ACTUAL
-        # signature row count (materializes the checkpoint we reuse anyway)
-        broadcast_sigs = (
-            _input_bytes_estimate(df) < _SIG_BROADCAST_INPUT_BYTES
-            and sig.count() * (4 * num_hashes + 16) < _SIG_BROADCAST_MAX_BYTES)
+    # screen on the cheap byte estimate, then decide on the ACTUAL
+    # signature row count (materializes the checkpoint we reuse anyway)
+    broadcast_sigs = (
+        _input_bytes_estimate(df) < _SIG_BROADCAST_INPUT_BYTES
+        and sig.count() * (4 * num_hashes + 16) < _SIG_BROADCAST_MAX_BYTES)
     # bucket array in a Project (UDF-derived `sig` referenced only via
     # attribute), exploded in a separate step: keeps the Python UDF out of
     # the Generate node, where ExtractPythonUDFs cannot place it.
@@ -352,31 +370,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
               .select("id", F.explode("bb_arr").alias("bb"))
               .select("id", F.col("bb.band").alias("band"),
                       F.col("bb.bucket").alias("bucket")))
-    hot_obs = None
-    if max_bucket is not None:
-        from pyspark.sql import Observation
-        raw_counts = (banded.groupBy("band", "bucket")
-                            .agg(F.count("*").alias("_n")))
-        # unique per call: Observation names are global to a plan, and a
-        # hard-coded name breaks any query composing two capped pair
-        # frames (DUPLICATED_METRICS_NAME on union/join — review r4)
-        obs = Observation(f"minhash_hot_buckets_{next(_OBS_SEQ)}")
-        counts = raw_counts.observe(
-            obs,
-            F.sum((F.col("_n") > max_bucket).cast("long"))
-             .alias("capped_buckets"),
-            F.max("_n").alias("max_bucket_rows"))
-        hot_obs = _CapStats(obs, raw_counts, max_bucket)
-        cool = (counts.where(F.col("_n") <= max_bucket)
-                      .select("band", "bucket"))
-        banded = banded.join(cool, ["band", "bucket"], "left_semi")
-
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cand = (a.join(b, on=["band", "bucket"], how="inner")
-              .where(F.col("a.id") < F.col("b.id"))
-              .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-              .dropDuplicates(["id_a", "id_b"]))
+    cand, hot_obs = bucket_pairs(banded, ["band", "bucket"], max_bucket)
 
     sigs = with_buckets.select("id", "sig")
     side_a = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
@@ -397,7 +391,6 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
         lambda v: v == 1))
     sim = (agree / F.lit(num_hashes)).alias("sim")
     out = pairs.select("id_a", "id_b", sim).where(F.col("sim") >= threshold)
-    # surface the cap's recall trade (see docstring); None when uncapped
     out.hot_bucket_observation = hot_obs
     return out
 
@@ -422,7 +415,7 @@ def minhash_dedup(df: DataFrame, text_col: str = "text",
     silently survive dedup, the strictly safer behavior (the sf1.0
     soak's measured failure mode). The oracle mirrors the collapse."""
     if collapse_exact:
-        _, df = exact_groups(df, text_col, id_col)
+        _, df = exact_groups(df, F.md5(F.col(text_col)), id_col)
     pairs = minhash_lsh_pairs(df, text_col, id_col, **kwargs)
     drops = pairs.select(F.col("id_b").alias(id_col)).distinct()
     return df.join(drops, on=id_col, how="left_anti")
@@ -541,26 +534,17 @@ def simhash_udf(shingle_n: int = 4):
 
     @pandas_udf("long")
     def _sim(text: pd.Series) -> pd.Series:
-        norm = _norm_series(text)
-        grams_per_row = _gram_pairs(norm, shingle_n)
-        lens = np.fromiter(map(len, grams_per_row), dtype=np.int64,
-                           count=len(grams_per_row))
+        lens, flat, offsets = _ragged_grams(
+            text, shingle_n, (_GRAM_BASE_1, _GRAM_BASE_2))
         out = np.zeros(len(lens), dtype=np.int64)
-        if lens.sum():
-            flat = np.concatenate(grams_per_row)
-            nz = lens > 0
-            offsets = np.zeros(int(nz.sum()), dtype=np.int64)
-            np.cumsum(lens[nz][:-1], out=offsets[1:])
-            packed = np.zeros(int(nz.sum()), dtype=np.int64)
+        if len(lens):
             for i in range(SIMHASH_BITS):
                 # simhash bit i: h1 bit i for i < 30, else h2 bit (i - 30)
                 src = 31 + i if i < half else i - half
                 ones = np.add.reduceat((flat >> np.int64(src)) & np.int64(1),
                                        offsets)
                 # majority vote: bit set iff ones*2 > gram count
-                packed |= ((ones * 2 > lens[nz]).astype(np.int64)
-                           << np.int64(i))
-            out[nz] = packed
+                out |= (ones * 2 > lens).astype(np.int64) << np.int64(i)
         return pd.Series(out)
 
     return _sim
@@ -568,37 +552,29 @@ def simhash_udf(shingle_n: int = 4):
 
 def simhash_pairs(df: DataFrame, text_col: str = "text",
                   id_col: str = "doc_id", max_hamming: int = 3,
-                  max_bucket: int | None = 10_000,
-                  collapse_exact: bool = True,
-                  expand: bool = True) -> DataFrame:
+                  max_bucket: int | None = 10_000) -> DataFrame:
     """Near-dup pairs with Hamming(simhash) <= max_hamming, using the
     4×15-bit block pigeonhole: any pair within distance 3 shares at least
     one exact 15-bit block — bucket-join per block, then verify.
 
-    `collapse_exact` (default ON — the round-4 soak lesson, see
-    exact_groups): the simhash is a pure function of the text, so exact
-    clones are collapsed to one representative before hashing/banding
-    and verified pairs expand back afterwards (clone pairs at hamming
-    0). On a corpus with c clones per doc this cuts candidate work by
-    c² and, under the bucket cap, makes populations count DISTINCT
-    texts (a million clones can no longer evict their block bucket).
-    `expand=False` returns representative pairs only — the OUTPUT of a
-    full expansion is itself quadratic in clone-group size (a text with
-    a million copies is ~5·10^11 within-group rows), so corpora with
-    huge clone groups should collapse-then-count, same as
-    verified_neardup_pairs.
+    The simhash is a pure function of the text, so exact clones are
+    collapsed to one representative before hashing/banding and verified
+    pairs expand back afterwards (clone pairs at hamming 0; the round-4
+    soak lesson, see exact_groups). On a corpus with c clones per doc
+    this cuts candidate work by c² and, under the bucket cap, makes
+    populations count DISTINCT texts (a million clones can no longer
+    evict their block bucket).
 
     `max_bucket` caps the per-(block, value) bucket population used for
-    CANDIDATE GENERATION (the simhash analog of ngram_jaccard's df-cap):
-    a degenerate corpus where millions of docs share a block value would
-    otherwise produce O(bucket²) candidates on that block. With the cap,
-    candidate count is bounded by rows·blocks·max_bucket. A true near-dup
-    pair is missed only if ALL FOUR of its shared blocks are hot — at that
-    point the docs are near-identical boilerplate better handled by
-    exact_dedup first. None disables the cap (exact pigeonhole)."""
-    members = None
-    if collapse_exact:
-        members, df = exact_groups(df, text_col, id_col)
+    CANDIDATE GENERATION (`bucket_pairs`; the simhash analog of
+    ngram_jaccard's df-cap): a degenerate corpus where millions of docs
+    share a block value would otherwise produce O(bucket²) candidates on
+    that block. A true near-dup pair is missed only if ALL FOUR of its
+    shared blocks are hot — at that point the docs are near-identical
+    boilerplate better handled by exact_dedup first. None disables the
+    cap (exact pigeonhole). The returned frame's `hot_bucket_observation`
+    (None when uncapped) reports what the cap dropped."""
+    members, df = exact_groups(df, F.md5(F.col(text_col)), id_col)
     s = fan_out(df, divisor=2).select(
         F.col(id_col).alias("id"),
         simhash_udf()(F.col(text_col)).alias("sh"))
@@ -616,24 +592,13 @@ def simhash_pairs(df: DataFrame, text_col: str = "text",
                .select("id", "sh", F.explode("blk_arr").alias("b"))
                .select("id", "sh", F.col("b.blk").alias("blk"),
                        F.col("b.val").alias("val")))
-    if max_bucket is not None:
-        cool = (blocks.groupBy("blk", "val")
-                      .agg(F.count("*").alias("_n"))
-                      .where(F.col("_n") <= max_bucket)
-                      .select("blk", "val"))
-        blocks = blocks.join(cool, ["blk", "val"], "left_semi")
-    a, b = blocks.alias("a"), blocks.alias("b")
-    cand = (a.join(b, on=["blk", "val"])
-              .where(F.col("a.id") < F.col("b.id"))
-              .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-                      F.col("a.sh").alias("sh_a"), F.col("b.sh").alias("sh_b"))
-              .dropDuplicates(["id_a", "id_b"]))
+    cand, hot_obs = bucket_pairs(blocks, ["blk", "val"], max_bucket)
     ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).alias("hamming")
     out = cand.select("id_a", "id_b", ham).where(F.col("hamming") <= max_hamming)
-    if members is not None and expand:
-        out = expand_rep_pairs(
-            out, members,
-            [F.lit(0).cast("int").alias("hamming")])
+    clones = _rep_rows(members).select(
+        "_rep", F.lit(0).cast("int").alias("hamming"))
+    out = expand_rep_pairs(out, members, clones)
+    out.hot_bucket_observation = hot_obs
     return out
 
 
@@ -642,60 +607,50 @@ def simhash_pairs(df: DataFrame, text_col: str = "text",
 def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", n: int = 3,
                         threshold: float = 0.8,
-                        max_df: int | None = 100,
-                        collapse_exact: bool = True,
-                        expand: bool = True) -> DataFrame:
+                        max_df: int | None = 100) -> DataFrame:
     """Exact character-n-gram Jaccard for pairs sharing at least one shingle.
     Shuffles (shingle, id); candidate pairs deduped before the exact
     intersection/union computation on the shingle arrays.
 
-    `collapse_exact` (default ON — the round-4 soak lesson, see
-    exact_groups): Jaccard is a pure function of the two texts, so
-    exact clones collapse to one representative before shingling and
-    verified pairs expand back afterwards (clone pairs at jaccard 1.0).
-    This also makes `max_df` count DISTINCT TEXTS containing a gram —
-    the meaningful discriminativeness measure: on the sf1.0 soak corpus
-    (every doc ×10 exact clones) the uncollapsed df crossed the cap for
-    EVERY gram and the operator returned zero pairs; collapsed, df is
-    clone-invariant. `expand=False` returns representative pairs only
-    (full expansion is quadratic in clone-group size — see
-    verified_neardup_pairs).
+    Jaccard is a pure function of the two texts, so exact clones
+    collapse to one representative before shingling and verified pairs
+    expand back afterwards (clone pairs at jaccard 1.0; the round-4 soak
+    lesson, see exact_groups). This also makes `max_df` count DISTINCT
+    TEXTS containing a gram — the meaningful discriminativeness measure:
+    on the sf1.0 soak corpus (every doc ×10 exact clones) an uncollapsed
+    df crossed the cap for EVERY gram and the operator returned zero
+    pairs; collapsed, df is clone-invariant.
 
     `max_df` (DEFAULT ON at 100) is the scale guard: grams appearing in
     more than max_df documents are dropped from CANDIDATE GENERATION only
-    (the Jaccard is still computed on the full shingle sets). Ubiquitous
-    grams produce O(bucket²) candidate pairs — unpruned, the self-join is
-    quadratic in the corpus (measured 295 s vs 7.6 s at 5k docs), which is
-    why exact mode is opt-in (`max_df=None`), not the default. The recall
+    (`bucket_pairs` with the gram as the bucket; the Jaccard is still
+    computed on the full shingle sets). Ubiquitous grams produce
+    O(bucket²) candidate pairs — unpruned, the self-join is quadratic in
+    the corpus (measured 295 s vs 7.6 s at 5k docs), which is why exact
+    mode is opt-in (`max_df=None`), not the default. The recall
     trade-off: a near-dup pair is missed iff ALL its shared grams exceed
     max_df, which template-generated corpora (many mutually-similar docs
     sharing the same gram families) can hit — on such data prefer
     minhash_lsh_pairs, whose banding cost is O(rows·bands) regardless of
-    gram frequency. The DuckDB oracle mirrors the same df-pruning (and
-    the collapse), so the default stays value-hash-verified."""
-    members = None
-    if collapse_exact:
-        members, df = exact_groups(df, text_col, id_col)
+    gram frequency. The returned frame's `hot_bucket_observation` (None
+    when unpruned) reports how many grams were pruned
+    (`capped_buckets`) and the largest df seen (`max_bucket_rows`). The
+    DuckDB oracle mirrors the same df-pruning (and the collapse), so the
+    default stays value-hash-verified."""
+    members, df = exact_groups(df, F.md5(F.col(text_col)), id_col)
     sh = fan_out(df).select(F.col(id_col).alias("id"),
                             char_shingles(F.col(text_col), n).alias("sh"))
     exploded = sh.select("id", F.explode("sh").alias("g"))
-    if max_df is not None:
-        rare = (exploded.groupBy("g").agg(F.count("*").alias("_df"))
-                        .where(F.col("_df") <= max_df).select("g"))
-        exploded = exploded.join(rare, "g", "left_semi")
-    a, b = exploded.alias("a"), exploded.alias("b")
-    cand = (a.join(b, on="g").where(F.col("a.id") < F.col("b.id"))
-              .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-              .distinct())
+    cand, hot_obs = bucket_pairs(exploded, ["g"], max_df)
     pairs = (cand.join(sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
                  .join(sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size(F.array_union("sh_a", "sh_b"))
     jac = (inter / union).alias("jaccard")
     out = pairs.select("id_a", "id_b", jac).where(F.col("jaccard") >= threshold)
-    if members is not None and expand:
-        out = expand_rep_pairs(out, members,
-                               [F.lit(1.0).alias("jaccard")])
+    clones = _rep_rows(members).select("_rep", F.lit(1.0).alias("jaccard"))
+    out = expand_rep_pairs(out, members, clones)
+    out.hot_bucket_observation = hot_obs
     return out
 
 
@@ -760,30 +715,30 @@ def repeated_ngram_stats(docs: DataFrame, n: int = 8,
 def portable_grams_udf(shingle_n: int = 5):
     """Arrow UDF: text -> array<long> of the distinct portable Horner
     gram hashes — the EXACT gram sets `minhash_signature_udf` sketches
-    (same normalization, same `_gram_hashes` family), exposed as a
+    (same normalization, same `_horner_grams` family), exposed as a
     column so a verify stage can compute true Jaccard on them."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<long>")
     def _g(text: pd.Series) -> pd.Series:
-        norm = _norm_series(text)
         return pd.Series([g.tolist() for g in
-                          _gram_hashes(norm, shingle_n)])
+                          _horner_grams(_norm_series(text), shingle_n)])
 
     return _g
 
 
-def exact_groups(df: DataFrame, text_col: str = "text",
+def exact_groups(df: DataFrame, key: Column,
                  id_col: str = "doc_id") -> tuple[DataFrame, DataFrame]:
-    """Exact-duplicate collapse (the round-4 soak lesson, shared by the
-    pair-scoring operators): returns (members, rep_docs) where members
-    maps every id (`_m`) to its exact-duplicate group's min-id
-    representative (`_rep`, grouped by md5(text) — the shuffle key is
-    32 bytes, not the document), and rep_docs is df filtered to the
-    representatives. members is localCheckpointed: the expansion joins
-    reference it up to three times."""
-    members = df.select(F.col(id_col).alias("_m"),
-                        F.md5(F.col(text_col)).alias("_tk"))
+    """THE exact-duplicate collapse of the pair family (the round-4 soak
+    lesson): returns (members, reps) where members maps every id (`_m`)
+    to the min-id representative (`_rep`) of its group of equal `key`,
+    and reps is df filtered to the representatives. The key is
+    md5(text) for texts (the shuffle key is 32 bytes, not the document)
+    and the raw vector for embeddings (at dim 64 it is 256 B, narrower
+    than most texts; key on a strong hash first if dims grow huge).
+    members is localCheckpointed: the expansion joins reference it up
+    to three times."""
+    members = df.select(F.col(id_col).alias("_m"), key.alias("_tk"))
     reps = members.groupBy("_tk").agg(F.min("_m").alias("_rep"))
     members = (members.join(reps, "_tk").select("_m", "_rep")
                       .localCheckpoint(eager=False))
@@ -792,24 +747,40 @@ def exact_groups(df: DataFrame, text_col: str = "text",
     return members, rep_docs
 
 
+def _rep_rows(members: DataFrame) -> DataFrame:
+    """One row per exact-duplicate group (its representative's): the
+    text callers' rep-level frame for their constant self-scores."""
+    return members.where(F.col("_m") == F.col("_rep"))
+
+
 def expand_rep_pairs(pairs: DataFrame, members: DataFrame,
-                     unit_scores: list[Column]) -> DataFrame:
-    """Expand (id_a, id_b, scores…) pairs over exact-duplicate
-    REPRESENTATIVES back to member pairs: every score is a pure
-    function of the two texts, so cross-group member pairs inherit
-    their rep pair's scores verbatim (least/greatest restores the
-    canonical id_a < id_b), and within-group pairs (exact clones) get
-    the caller's `unit_scores` (hamming 0 / jaccard 1.0 / …)."""
-    score_cols = [c for c in pairs.columns if c not in ("id_a", "id_b")]
+                     self_scores: DataFrame) -> DataFrame:
+    """THE expansion of the pair family: (id_a, id_b, …) pairs over
+    exact-duplicate REPRESENTATIVES → member pairs, columns in `pairs`'
+    order. Every non-id column of `pairs` is a pure function of the two
+    texts/vectors, so cross-group member pairs inherit their rep pair's
+    values verbatim (least/greatest restores the canonical id_a < id_b).
+    Within-group pairs (exact clones) take the same columns from
+    `self_scores`, keyed by `_rep`, through an inner join: a group whose
+    rep has no row there emits no clone pairs — the vector callers gate
+    the rep's self-cosine on their threshold, as the direct computation
+    would; the text callers' scores are constants (hamming 0, jaccard
+    1.0, est_sim 1.0) over every rep. Mirrored in SQL by
+    duck_oracles._expand_sql."""
     ma = members.select(F.col("_rep").alias("id_a"), F.col("_m").alias("_a"))
     mb = members.select(F.col("_rep").alias("id_b"), F.col("_m").alias("_b"))
-    cross = (pairs.join(ma, "id_a").join(mb, "id_b")
-             .select(F.least("_a", "_b").alias("id_a"),
-                     F.greatest("_a", "_b").alias("id_b"), *score_cols))
-    within = (members.alias("x").join(members.alias("y"), "_rep")
-              .where(F.col("x._m") < F.col("y._m"))
-              .select(F.col("x._m").alias("id_a"),
-                      F.col("y._m").alias("id_b"), *unit_scores))
+    out = [F.least("_a", "_b").alias(c) if c == "id_a"
+           else F.greatest("_a", "_b").alias(c) if c == "id_b" else c
+           for c in pairs.columns]
+    cross = pairs.join(ma, "id_a").join(mb, "id_b").select(*out)
+    # the clone self-join reuses the cross branch's member sides: their
+    # exchange or broadcast is planned once for both branches. The
+    # coalesce keeps the optimizer from inferring `_b IS NOT NULL` into
+    # this mb side only, which would make the two plans differ.
+    within = (ma.join(mb, F.col("id_a") == F.col("id_b"))
+              .where(F.coalesce(F.col("_a") < F.col("_b"), F.lit(False)))
+              .join(self_scores.withColumnRenamed("_rep", "id_a"), "id_a")
+              .select(*out))
     return cross.unionByName(within)
 
 
@@ -818,8 +789,7 @@ def verified_neardup_pairs(df: DataFrame, text_col: str = "text",
                            num_hashes: int = 64, bands: int = 16,
                            est_threshold: float = 0.35,
                            exact_threshold: float = 0.5,
-                           max_bucket: int | None = 10_000,
-                           expand: bool = True) -> DataFrame:
+                           max_bucket: int | None = 10_000) -> DataFrame:
     """The CANDIDATE -> VERIFY near-dup composition: banded minhash at a
     LOOSE estimated threshold generates candidates (cheap, recall-
     oriented), then the TRUE Jaccard over the full portable gram sets
@@ -837,13 +807,15 @@ def verified_neardup_pairs(df: DataFrame, text_col: str = "text",
     straggler task). So: group by md5(text), verify ONCE per distinct
     text on the min-id representative, then expand verified rep pairs
     back to member pairs (identical est_sim/jaccard by construction)
-    and add within-group pairs at sim 1.0. `expand=False` returns rep
-    pairs only — the right call when clone groups are huge (a text
-    with a million copies expands to ~5·10^11 within-group pairs; no
-    engine should materialize that, collapse-then-count instead).
-    Under the hot-bucket cap the collapsed form is also the SAFER
-    semantics: bucket populations count distinct texts, so a million
-    clones can no longer evict their bucket.
+    and add within-group pairs at sim 1.0. The OUTPUT of that
+    expansion is itself quadratic in clone-group size (a text with a
+    million copies is ~5·10^11 within-group pairs): on such corpora
+    collapse-then-count (exact_dedup, minhash_dedup) instead. Under
+    the hot-bucket cap the collapsed form is also the SAFER semantics:
+    bucket populations count distinct texts, so a million clones can
+    no longer evict their bucket; the returned frame's
+    `hot_bucket_observation` is the candidate stage's (None when
+    uncapped).
 
     Scale: the verify joins attach one gram array per side to the
     candidate frame only (never all pairs); array_intersect/union on
@@ -852,7 +824,7 @@ def verified_neardup_pairs(df: DataFrame, text_col: str = "text",
     — an empty-vs-empty pair would divide 0/0. The estimated and exact
     thresholds are independent knobs: est low for recall, exact the
     real bar."""
-    members, rep_docs = exact_groups(df, text_col, id_col)
+    members, rep_docs = exact_groups(df, F.md5(F.col(text_col)), id_col)
     cands = minhash_lsh_pairs(rep_docs, text_col, id_col,
                               num_hashes=num_hashes,
                               bands=bands, shingle_n=shingle_n,
@@ -875,13 +847,13 @@ def verified_neardup_pairs(df: DataFrame, text_col: str = "text",
                      .select("id_a", "id_b",
                              F.round(F.col("sim"), 4).alias("est_sim"),
                              F.round(F.col("_j"), 4).alias("jaccard")))
-    if not expand:
-        return verified
     # exact clones are sim 1.0 / jaccard 1.0 (the direct computation
     # finds them too: identical signatures share every band)
-    return expand_rep_pairs(verified, members,
-                            [F.lit(1.0).alias("est_sim"),
-                             F.lit(1.0).alias("jaccard")])
+    clones = _rep_rows(members).select("_rep", F.lit(1.0).alias("est_sim"),
+                                       F.lit(1.0).alias("jaccard"))
+    out = expand_rep_pairs(verified, members, clones)
+    out.hot_bucket_observation = cands.hot_bucket_observation
+    return out
 
 
 # ------------------------------------------------- cross-doc substrings ----

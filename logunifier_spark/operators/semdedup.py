@@ -48,6 +48,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from logunifier_spark.operators.dedup import exact_groups, expand_rep_pairs
 from logunifier_spark.operators.kmeans import assign_np_udf, kmeans_centroids
 from logunifier_spark.operators.similarity import cosine, norm
 
@@ -71,8 +72,7 @@ def semdedup_pairs(emb: DataFrame, id_col: str = "vec_id",
                    vec_col: str = "embedding", k: int | None = None,
                    iters: int = 2, scale: int = 1000, threshold: float = 0.7,
                    max_cluster: int | None = None,
-                   collapse_exact: bool = True,
-                   expand: bool = True) -> DataFrame:
+                   collapse_exact: bool = True) -> DataFrame:
     """Within-cluster near-duplicate pairs: (cluster, id_a, id_b, cos)
     with cos >= threshold, cos rounded to 4 places (same float discipline
     as embedding_neardup — dot/norm in ordered double-precision folds).
@@ -96,13 +96,14 @@ def semdedup_pairs(emb: DataFrame, id_col: str = "vec_id",
         expanded output is identical to the uncollapsed run (within-
         group pairs get the rep's self-cosine from the same expression).
         With the collapse ON, `max_cluster` counts DISTINCT vectors per
-        cluster (the minhash hot-bucket cap rationale); `expand=False`
-        returns representative pairs only."""
+        cluster (the minhash hot-bucket cap rationale). The collapse and
+        the expansion are the pair family's shared steps in dedup.py."""
     members = None
     corpus = emb
     if collapse_exact:
-        from logunifier_spark.operators.similarity import vector_exact_groups
-        members, corpus = vector_exact_groups(emb, id_col, vec_col)
+        members, corpus = exact_groups(emb, F.col(vec_col), id_col)
+        # reps feed the auto_k count plus the pairing pass
+        corpus = corpus.localCheckpoint(eager=False)
     if k is None:
         k = auto_k(corpus.count())
     cents = kmeans_centroids(emb, k, iters, scale, id_col, vec_col)
@@ -137,24 +138,20 @@ def semdedup_pairs(emb: DataFrame, id_col: str = "vec_id",
                       F.col(f"a.{id_col}").alias("id_a"),
                       F.col(f"b.{id_col}").alias("id_b"),
                       F.round(cos, 4).alias("cos")))
-    if members is None or not expand:
+    if members is None:
         return pairs
-    # expansion via the ONE shared Spark spec (similarity.
-    # expand_rep_pairs_vec, mirrored in SQL by duck_oracles._expand_sql):
     # cross-group member pairs inherit the rep pair's cluster and
     # (already-rounded) cosine verbatim; within-group (exact clone) pairs
     # get the rep's SELF-cosine from the same expression, gated on the
     # same unrounded threshold, with the rep's (possibly cap-filtered)
     # cluster.
-    from logunifier_spark.operators.similarity import expand_rep_pairs_vec
     scos = cosine(F.col("_v"), F.col("_v"), F.col("_nrm"), F.col("_nrm"))
     selfcos = (assigned
                .select(F.col(id_col).alias("_rep"), "cluster",
                        scos.alias("_c"))
                .where(F.col("_c") >= threshold)
                .select("_rep", "cluster", F.round("_c", 4).alias("cos")))
-    return expand_rep_pairs_vec(pairs, members, selfcos,
-                                extra=("cluster",))
+    return expand_rep_pairs(pairs, members, selfcos)
 
 
 def semdedup(emb: DataFrame, id_col: str = "vec_id",

@@ -11,9 +11,10 @@
     drawn from the corpus, vectors assigned to nearest centroid (broadcast),
     queries probe the nprobe nearest centroids only.
   - embedding_neardup_pairs: all-pairs near-duplicate detection with a
-    BOUNDED default (exact-vector collapse + banded sign-bit LSH candidates
-    + exact cosine verify); the O(n²) cross join survives behind exact=True
-    as the correctness baseline.
+    BOUNDED default through the pair family's shared steps in dedup.py
+    (exact-vector collapse + capped banded sign-bit LSH candidates + exact
+    cosine verify + expansion); the O(n²) cross join survives behind
+    exact=True as the correctness baseline.
 
 One rule for the vector math: a vector column scored against a
 driver-held constant matrix (queries, hyperplanes, centroids) is a
@@ -372,59 +373,6 @@ def _band_buckets_udf(dim: int, n_bits: int, bands: int):
     return vector_udf(_keys, dim, ArrayType(LongType()))
 
 
-def vector_exact_groups(emb: DataFrame, id_col: str = "vec_id",
-                        vec_col: str = "embedding"
-                        ) -> tuple[DataFrame, DataFrame]:
-    """Exact-duplicate collapse for VECTORS (the dedup.exact_groups
-    pattern): returns (members, rep_vecs) where members maps every id
-    (`_m`) to its exact-clone group's min-id representative (`_rep`;
-    grouped on the raw vector — at dim 64 the key is 256 B, narrower
-    than most texts; key on a strong hash first if dims grow huge) and
-    rep_vecs is emb filtered to representatives. BOTH frames are
-    localCheckpointed: members feeds up to three expansion joins, and
-    rep_vecs feeds the size-gate count plus the pairing pass — without
-    the cut the groupBy collapse re-executes once per consumer
-    (measured ~3× at sf0.1)."""
-    members = emb.select(F.col(id_col).alias("_m"), F.col(vec_col).alias("_v"))
-    reps = members.groupBy("_v").agg(F.min("_m").alias("_rep"))
-    members = (members.join(reps, "_v").select("_m", "_rep")
-                      .localCheckpoint(eager=False))
-    rep_vecs = (emb.join(reps.select(F.col("_rep").alias(id_col)),
-                         id_col, "left_semi")
-                   .localCheckpoint(eager=False))
-    return members, rep_vecs
-
-
-def expand_rep_pairs_vec(pairs: DataFrame, members: DataFrame,
-                         selfcos: DataFrame,
-                         extra: tuple[str, ...] = ()) -> DataFrame:
-    """Rep-level near-dup pairs -> member-level pairs, the vector twin of
-    dedup.expand_rep_pairs (ONE Spark spec shared by embedding_neardup
-    and semdedup, mirrored in SQL by duck_oracles._expand_sql):
-
-      - `pairs` (*extra, id_a, id_b, cos): rep pairs; cross-group member
-        pairs inherit the rep pair's cos (and `extra` columns) verbatim —
-        cos is a pure function of the two vectors and identical vectors
-        share the rep's;
-      - `members` (_m, _rep): the exact-clone groups;
-      - `selfcos` (_rep, *extra, cos): the rep's SELF-cosine, already
-        computed by the same expression and gated on the same threshold —
-        within-group (exact clone) pairs take it verbatim (≈1.0;
-        degenerate near-zero vectors fall below the gate and drop,
-        exactly as the brute path would emit)."""
-    ma = members.select(F.col("_rep").alias("id_a"), F.col("_m").alias("_a"))
-    mb = members.select(F.col("_rep").alias("id_b"), F.col("_m").alias("_b"))
-    cross = (pairs.join(ma, "id_a").join(mb, "id_b")
-             .select(*extra, F.least("_a", "_b").alias("id_a"),
-                     F.greatest("_a", "_b").alias("id_b"), "cos"))
-    within = (members.alias("x").join(members.alias("y"), "_rep")
-              .where(F.col("x._m") < F.col("y._m"))
-              .join(selfcos, "_rep")
-              .select(*extra, F.col("x._m").alias("id_a"),
-                      F.col("y._m").alias("id_b"), "cos"))
-    return cross.unionByName(within)
-
-
 def embedding_neardup_pairs(emb: DataFrame, dim: int,
                             threshold: float = 0.45,
                             id_col: str = "vec_id",
@@ -433,7 +381,6 @@ def embedding_neardup_pairs(emb: DataFrame, dim: int,
                             bands: int | None = None,
                             miss_prob: float = 0.005,
                             collapse_exact: bool = True,
-                            expand: bool = True,
                             max_bucket: int | None = 100_000,
                             exact_max_reps: int = 4096) -> DataFrame:
     """All (id_a < id_b) pairs with cosine >= threshold, as
@@ -444,7 +391,7 @@ def embedding_neardup_pairs(emb: DataFrame, dim: int,
          min-id representative (cos is a pure function of the two
          vectors), then expand back; the round-4 soak lesson applied to
          embeddings (c clones per vector otherwise multiply candidates
-         by c²). `expand=False` returns rep pairs only.
+         by c²).
       2. banded sign-bit LSH candidates — `bands` bands of `n_bits`
          deterministic-hyperplane sign bits (ONE numpy Arrow matmul,
          exploded to (band_bucket, id) and self-joined), so candidate
@@ -468,8 +415,10 @@ def embedding_neardup_pairs(emb: DataFrame, dim: int,
     Scale shape: n_bits should grow ~log2(n / target_bucket_pop) as the
     corpus grows (bands re-derive automatically from the threshold);
     `max_bucket` drops hotter-than-cap band buckets from candidate
-    generation (with collapse ON, populations count DISTINCT vectors —
-    the minhash_lsh_pairs cap rationale, see dedup.py).
+    generation (`dedup.bucket_pairs`; with collapse ON, populations
+    count DISTINCT vectors — the minhash_lsh_pairs cap rationale). The
+    returned frame's `hot_bucket_observation` reports what it dropped;
+    it is None when uncapped or when the pairing takes the brute path.
 
     SIZE-ADAPTIVE exactness: when the collapsed corpus holds <=
     `exact_max_reps` distinct vectors (default 4096 → <= ~8.4M pair
@@ -481,7 +430,12 @@ def embedding_neardup_pairs(emb: DataFrame, dim: int,
     approximation is actually needed. The rep count is one narrow
     aggregate at plan-construction time (same pattern as unify()'s
     dedup probe — benches time construction + execution together)."""
-    from logunifier_spark.operators.dedup import fan_out
+    from logunifier_spark.operators.dedup import (
+        bucket_pairs,
+        exact_groups,
+        expand_rep_pairs,
+        fan_out,
+    )
 
     cos_ab = cosine(F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb"))
 
@@ -503,7 +457,11 @@ def embedding_neardup_pairs(emb: DataFrame, dim: int,
 
     members = None
     if collapse_exact and not exact:
-        members, corpus = vector_exact_groups(emb, id_col, vec_col)
+        members, corpus = exact_groups(emb, F.col(vec_col), id_col)
+        # reps feed the size-gate count plus the pairing pass: without
+        # the cut the groupBy collapse re-executes once per consumer
+        # (measured ~3× at sf0.1)
+        corpus = corpus.localCheckpoint(eager=False)
         # one aggregate answers both questions (rows vs distinct reps):
         # clone-free corpora skip the expansion joins AND the rep
         # semi-join entirely (corpus = the raw input)
@@ -519,12 +477,10 @@ def embedding_neardup_pairs(emb: DataFrame, dim: int,
 
     base = corpus.select(F.col(id_col).alias("_id"),
                          F.col(vec_col).alias("_v"))
-    if exact:
-        return _brute_pairs(base)
-
-    if n_reps is None:
+    hot_obs = None
+    if not exact and n_reps is None:
         n_reps = corpus.count()
-    if n_reps <= exact_max_reps:
+    if exact or n_reps <= exact_max_reps:
         pairs = _brute_pairs(base)
         sides = base.select("_id", "_v", norm(F.col("_v")).alias("_n"))
     else:
@@ -537,16 +493,9 @@ def embedding_neardup_pairs(emb: DataFrame, dim: int,
                      .withColumn("_bb", _band_buckets_udf(dim, n_bits, bands)(
                          F.col("_v")))
                      .localCheckpoint(eager=False))  # both join sides
-        banded = with_keys.select("_id", F.explode("_bb").alias("_k"))
-        if max_bucket is not None:
-            cool = (banded.groupBy("_k").agg(F.count("*").alias("_n"))
-                          .where(F.col("_n") <= max_bucket).select("_k"))
-            banded = banded.join(cool, "_k", "left_semi")
-        cand = (banded.alias("x").join(banded.alias("y"), "_k")
-                .where(F.col("x._id") < F.col("y._id"))
-                .select(F.col("x._id").alias("id_a"),
-                        F.col("y._id").alias("id_b"))
-                .dropDuplicates(["id_a", "id_b"]))
+        banded = with_keys.select(F.col("_id").alias("id"),
+                                  F.explode("_bb").alias("_k"))
+        cand, hot_obs = bucket_pairs(banded, ["_k"], max_bucket)
         sides = with_keys.select("_id", "_v", norm(F.col("_v")).alias("_n"))
         pairs = (cand
                  .join(sides.select(F.col("_id").alias("id_a"),
@@ -558,11 +507,12 @@ def embedding_neardup_pairs(emb: DataFrame, dim: int,
                  .withColumn("cos", cos_ab)
                  .where(F.col("cos") >= threshold)
                  .select("id_a", "id_b", "cos"))
-    if members is None or not expand:
-        return pairs
-    selfcos = (sides
-               .select(F.col("_id").alias("_rep"),
-                       cosine(F.col("_v"), F.col("_v"), F.col("_n"),
-                              F.col("_n")).alias("cos"))
-               .where(F.col("cos") >= threshold))
-    return expand_rep_pairs_vec(pairs, members, selfcos)
+    if members is not None:
+        selfcos = (sides
+                   .select(F.col("_id").alias("_rep"),
+                           cosine(F.col("_v"), F.col("_v"), F.col("_n"),
+                                  F.col("_n")).alias("cos"))
+                   .where(F.col("cos") >= threshold))
+        pairs = expand_rep_pairs(pairs, members, selfcos)
+    pairs.hot_bucket_observation = hot_obs
+    return pairs

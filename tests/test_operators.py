@@ -59,6 +59,111 @@ def test_minhash_cap_observable(spark, docs):
     assert (1, 2) in {(r["id_a"], r["id_b"]) for r in uncapped.collect()}
 
 
+def _last_job(spark):
+    return max([-1, *spark.sparkContext.statusTracker().getJobIdsForGroup()])
+
+
+@pytest.fixture(scope="module")
+def templated(spark):
+    """Adversarial corpus for the hot-bucket caps: 24 distinct texts from
+    two templates (many shared grams and simhash blocks), each with one
+    exact clone the collapse must not count twice."""
+    texts = [f"user {i % 6} logged in from host alpha{i % 4} port {i}"
+             if i % 2 else f"job {i % 3} finished in {i} ms on worker beta{i % 5}"
+             for i in range(24)]
+    rows = [(2 * i + c, t) for i, t in enumerate(texts) for c in range(2)]
+    return texts, spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _assert_cap_reported(spark, capped, uncapped, populations, cap):
+    """The cap reports exactly what it dropped, from the action's own
+    Observation (reading .get runs no job while candidate pairs survive
+    the cap), and uncapped runs report None."""
+    assert min(populations) <= cap < max(populations)  # some, not all, hot
+    capped.collect()
+    before = _last_job(spark)
+    got = capped.hot_bucket_observation.get
+    assert _last_job(spark) == before
+    assert got == {"capped_buckets": sum(n > cap for n in populations),
+                   "max_bucket_rows": max(populations)}
+    assert got["capped_buckets"] >= 1
+    assert uncapped.hot_bucket_observation is None
+
+
+def test_simhash_cap_observable(spark, templated):
+    from collections import Counter
+
+    from logunifier_spark.operators.dedup import (
+        SIMHASH_BLOCK_BITS, simhash_pairs, simhash_udf)
+    texts, df = templated
+    sh = [r["sh"] for r in spark.createDataFrame([(t,) for t in texts], "text string")
+          .select(simhash_udf()(F.col("text")).alias("sh")).collect()]
+    mask = (1 << SIMHASH_BLOCK_BITS) - 1
+    pops = Counter((k, (h >> (SIMHASH_BLOCK_BITS * k)) & mask)
+                   for h in sh for k in range(4))
+    # max_hamming 60 keeps every surviving candidate
+    _assert_cap_reported(spark, simhash_pairs(df, max_hamming=60, max_bucket=5),
+                         simhash_pairs(df, max_bucket=None),
+                         list(pops.values()), 5)
+
+
+def test_ngram_max_df_prune_observable(spark, templated):
+    from collections import Counter
+
+    from logunifier_spark.operators.dedup import ngram_jaccard_pairs
+    texts, df = templated
+    pops = Counter(g for t in texts
+                   for g in {t[i:i + 3] for i in range(len(t) - 2)})
+    _assert_cap_reported(spark, ngram_jaccard_pairs(df, threshold=0.0, max_df=12),
+                         ngram_jaccard_pairs(df, max_df=None),
+                         list(pops.values()), 12)
+
+
+def test_embedding_band_cap_observable(spark, vectors):
+    from collections import Counter
+
+    from logunifier_spark.operators.similarity import (
+        _band_buckets_udf, auto_bands, embedding_neardup_pairs)
+    keys = vectors.select(F.explode(_band_buckets_udf(
+        16, 6, auto_bands(0.45, 6))(F.col("embedding"))).alias("k")).collect()
+    pops = Counter(r["k"] for r in keys)
+    kw = dict(dim=16, threshold=0.45, exact_max_reps=0)
+    _assert_cap_reported(spark, embedding_neardup_pairs(vectors, max_bucket=4, **kw),
+                         embedding_neardup_pairs(vectors, max_bucket=None, **kw),
+                         list(pops.values()), 4)
+    # the brute path applies no cap
+    assert embedding_neardup_pairs(vectors, dim=16, threshold=0.45,
+                                   max_bucket=2).hot_bucket_observation is None
+
+
+def test_verified_neardups_cap_observable(spark, templated):
+    from logunifier_spark.operators.dedup import verified_neardup_pairs
+    _, df = templated
+    capped = verified_neardup_pairs(df, max_bucket=1)
+    capped.collect()
+    got = capped.hot_bucket_observation.get
+    assert got["capped_buckets"] >= 1 and got["max_bucket_rows"] >= 2
+    assert verified_neardup_pairs(
+        df, max_bucket=None).hot_bucket_observation is None
+
+
+def test_all_capped_goes_through_fallback(spark):
+    """Every gram is in all three texts: max_df=1 prunes every bucket,
+    AQE prunes the plan branch carrying the Observation once no
+    candidate survives, and .get recomputes the counts (jobs) instead
+    of crashing."""
+    from logunifier_spark.operators.dedup import ngram_jaccard_pairs
+    df = spark.createDataFrame(
+        [(1, "abcabc"), (2, "abcabcabc"), (3, "abcabcabcabc")],
+        "doc_id long, text string")
+    out = ngram_jaccard_pairs(df, threshold=0.0, max_df=1)
+    assert out.collect() == []
+    before = _last_job(spark)
+    assert out.hot_bucket_observation.get == {"capped_buckets": 3,
+                                              "max_bucket_rows": 3}
+    assert _last_job(spark) > before
+
+
 def test_simhash_near_dup(spark, docs):
     from logunifier_spark.operators.dedup import simhash_pairs, simhash_udf
     h = {r["doc_id"]: r["sh"] for r in
@@ -205,10 +310,6 @@ def test_embedding_neardup_clone_expansion(spark):
     assert {(0, 1), (0, 2), (1, 2)} <= ids      # clone pairs via expansion
     assert {(0, 3), (1, 3), (2, 3)} <= ids      # cross-group via rep pair
     assert not any(4 in p for p in ids)
-    # expand=False returns representative pairs only
-    reps = _pair_set(embedding_neardup_pairs(df, dim=16, threshold=0.9,
-                                             expand=False))
-    assert {(a, b) for a, b, _ in reps} == {(0, 3)}
 
 
 def test_embedding_neardup_max_bucket_cap(spark, vectors):

@@ -135,7 +135,7 @@ def soak_main() -> int:
         Path(__file__).resolve().parents[1] / "testdata_sf1")
     only = set(args[1:])
 
-    spark = get_spark(app_name="soak-oracle-check", master="local[32]")
+    spark = get_spark(app_name="soak-oracle-check")  # local[SPARK_GRAFT_CPUS]
     con = duckdb.connect()
     for t in entrymod.TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
