@@ -259,6 +259,23 @@ class _CapStats:
                     "max_bucket_rows": int(row["max_bucket_rows"] or 0)}
 
 
+def capped_counts(counts: DataFrame, cap: int) -> tuple[DataFrame, _CapStats]:
+    """THE observed cap: `counts` (key columns + `_n`, the rows per key)
+    → (the keys with `_n <= cap`, a `_CapStats` reporting how many keys
+    were capped and the largest `_n`). The Observation rides the count
+    aggregate the cap needs anyway: zero extra jobs."""
+    from pyspark.sql import Observation
+    # unique per call: Observation names are global to a plan, and a
+    # hard-coded name breaks any query composing two capped pair
+    # frames (DUPLICATED_METRICS_NAME on union/join)
+    obs = Observation(f"hot_buckets_{next(_OBS_SEQ)}")
+    observed = counts.observe(
+        obs,
+        F.sum((F.col("_n") > cap).cast("long")).alias("capped_buckets"),
+        F.max("_n").alias("max_bucket_rows"))
+    return observed.where(F.col("_n") <= cap), _CapStats(obs, counts, cap)
+
+
 def bucket_pairs(banded: DataFrame, keys: list[str],
                  cap: int | None) -> tuple[DataFrame, _CapStats | None]:
     """THE capped bucket self-join of the near-duplicate pair family:
@@ -278,19 +295,9 @@ def bucket_pairs(banded: DataFrame, keys: list[str],
     (see _CapStats for the no-survivor fallback)."""
     stats = None
     if cap is not None:
-        from pyspark.sql import Observation
-        raw_counts = banded.groupBy(*keys).agg(F.count("*").alias("_n"))
-        # unique per call: Observation names are global to a plan, and a
-        # hard-coded name breaks any query composing two capped pair
-        # frames (DUPLICATED_METRICS_NAME on union/join)
-        obs = Observation(f"hot_buckets_{next(_OBS_SEQ)}")
-        counts = raw_counts.observe(
-            obs,
-            F.sum((F.col("_n") > cap).cast("long")).alias("capped_buckets"),
-            F.max("_n").alias("max_bucket_rows"))
-        stats = _CapStats(obs, raw_counts, cap)
-        cool = counts.where(F.col("_n") <= cap).select(*keys)
-        banded = banded.join(cool, keys, "left_semi")
+        cool, stats = capped_counts(
+            banded.groupBy(*keys).agg(F.count("*").alias("_n")), cap)
+        banded = banded.join(cool.select(*keys), keys, "left_semi")
     payload = [c for c in banded.columns if c != "id" and c not in keys]
     a, b = banded.alias("a"), banded.alias("b")
     pairs = (a.join(b, on=keys)

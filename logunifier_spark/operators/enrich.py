@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from logunifier_spark.schema import LOKI_LABEL_COLUMNS
+from logunifier_spark.session import per_context
 
 # default pattern→labels dimension (deterministic; FIXTURES.md §2)
 DEFAULT_PATTERN_LABELS = [
@@ -46,19 +47,26 @@ def enrich_with_pattern_labels(df: DataFrame, pattern_labels: DataFrame) -> Data
         df["log_pattern_key"] == pattern_labels["pattern_key"],
         "left",
     ).drop(pattern_labels["pattern_key"])
-    return joined.withColumns({
+    return (joined.withColumns(_fill_columns())
+                  .drop("enr_service_type", "enr_org_name"))
+
+
+@per_context
+def _fill_columns() -> dict[str, Column]:
+    return {
         "service_type": F.coalesce(F.nullif(F.col("service_type"), F.lit("")),
                                    F.col("enr_service_type")),
         "org_name": F.coalesce(F.nullif(F.col("org_name"), F.lit("")),
                                F.col("enr_org_name")),
         "sink": F.coalesce(F.col("sink"), F.lit("loki_errors")),
-    }).drop("enr_service_type", "enr_org_name")
+    }
 
 
 def _bool_str(c: Column) -> Column:
     return F.when(c, F.lit("true")).otherwise(F.lit("false"))
 
 
+@per_context
 def loki_label_map() -> Column:
     """The 14-label Loki index set (lokishipper.go:284-306) + conditional
     error_type, as a map<string,string> column over the unified schema."""
@@ -166,6 +174,7 @@ def stream_key(label_map: Column) -> Column:
     )
 
 
+@per_context
 def stream_key_native() -> Column:
     """The same canonical stream key built directly from the unified scalar
     columns: the 14 label keys (+ conditional error_type) are compile-time

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from logunifier_spark.session import per_context
+
 DEFAULT_SALT_BUCKETS = 8
 
 
@@ -45,6 +47,12 @@ def with_routing(df: DataFrame, n_partitions: int = 32,
     here the tenant becomes a first-class partition key — pass it to
     write_sinks' partitionBy (or a per-tenant Iceberg table) so one
     tenant's volume can never skew another's files."""
+    return df.withColumns(_routing_columns(n_partitions, salt_buckets, tenant))
+
+
+@per_context
+def _routing_columns(n_partitions: int, salt_buckets: int,
+                     tenant: bool) -> dict[str, Column]:
     salt = salt_column(F.col("turn_idx"), salt_buckets)
     cols = {
         "salt": salt,
@@ -53,7 +61,7 @@ def with_routing(df: DataFrame, n_partitions: int = 32,
     }
     if tenant:
         cols["tenant"] = F.coalesce(F.col("org_name"), F.lit(""))
-    return df.withColumns(cols)
+    return cols
 
 
 def enforce_line_limit(df: DataFrame, max_line_size: int = 0,

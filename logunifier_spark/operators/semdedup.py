@@ -24,7 +24,8 @@ Spark shape, built for 10^12 rows:
   - `max_cluster` (opt-in) drops clusters larger than the cap from the
     pairing pass entirely — the count is one tiny agg over the
     assignment projection, and the filter is a broadcast semi-join on at
-    most k rows.
+    most k rows. The drop is reported like every pair-family cap
+    (`dedup.capped_counts`): the result's `hot_bucket_observation`.
 
 Cluster assignment is kmeans.py's integer numpy kernel and the pair
 cosine is similarity.py's Column fold (see those modules for why the
@@ -48,7 +49,11 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from logunifier_spark.operators.dedup import exact_groups, expand_rep_pairs
+from logunifier_spark.operators.dedup import (
+    capped_counts,
+    exact_groups,
+    expand_rep_pairs,
+)
 from logunifier_spark.operators.kmeans import assign_np_udf, kmeans_centroids
 from logunifier_spark.operators.similarity import cosine, norm
 
@@ -97,7 +102,12 @@ def semdedup_pairs(emb: DataFrame, id_col: str = "vec_id",
         group pairs get the rep's self-cosine from the same expression).
         With the collapse ON, `max_cluster` counts DISTINCT vectors per
         cluster (the minhash hot-bucket cap rationale). The collapse and
-        the expansion are the pair family's shared steps in dedup.py."""
+        the expansion are the pair family's shared steps in dedup.py.
+
+    The returned frame's `hot_bucket_observation` (None when
+    `max_cluster` is None) reports, after the first action on it, how
+    many clusters the cap dropped (`capped_buckets`) and the largest
+    cluster population (`max_bucket_rows`)."""
     members = None
     corpus = emb
     if collapse_exact:
@@ -118,12 +128,13 @@ def semdedup_pairs(emb: DataFrame, id_col: str = "vec_id",
                     assign_np_udf(cents, scale)(F.col("_v")), 1))
                 .select(id_col, "_v", norm(F.col("_v")).alias("_nrm"),
                         "cluster"))
+    hot_obs = None
     if max_cluster is not None:
-        small = (assigned.groupBy("cluster")
-                         .agg(F.count("*").alias("_n"))
-                         .where(F.col("_n") <= max_cluster)
-                         .select("cluster"))
-        assigned = assigned.join(F.broadcast(small), "cluster", "left_semi")
+        small, hot_obs = capped_counts(
+            assigned.groupBy("cluster").agg(F.count("*").alias("_n")),
+            max_cluster)
+        assigned = assigned.join(F.broadcast(small.select("cluster")),
+                                 "cluster", "left_semi")
     # alias-style self-join, NOT two renamed projections: both sides then
     # canonicalize to the SAME plan, so the shuffle-join path plans ONE
     # scan + one Exchange with a ReusedExchange on the probe side —
@@ -139,6 +150,7 @@ def semdedup_pairs(emb: DataFrame, id_col: str = "vec_id",
                       F.col(f"b.{id_col}").alias("id_b"),
                       F.round(cos, 4).alias("cos")))
     if members is None:
+        pairs.hot_bucket_observation = hot_obs
         return pairs
     # cross-group member pairs inherit the rep pair's cluster and
     # (already-rounded) cosine verbatim; within-group (exact clone) pairs
@@ -151,7 +163,9 @@ def semdedup_pairs(emb: DataFrame, id_col: str = "vec_id",
                        scos.alias("_c"))
                .where(F.col("_c") >= threshold)
                .select("_rep", "cluster", F.round("_c", 4).alias("cos")))
-    return expand_rep_pairs(pairs, members, selfcos)
+    out = expand_rep_pairs(pairs, members, selfcos)
+    out.hot_bucket_observation = hot_obs
+    return out
 
 
 def semdedup(emb: DataFrame, id_col: str = "vec_id",

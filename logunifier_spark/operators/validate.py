@@ -21,6 +21,7 @@ from logunifier_spark.functions.levels import (
     EMOJI_STACKTRACE,
     LEVEL_TO_EMOJI,
 )
+from logunifier_spark.session import per_context
 
 def _emoji_map() -> Column:
     # built lazily: F.lit needs an active SparkContext
@@ -34,6 +35,15 @@ def _unset(c: Column) -> Column:
 def validate_and_fix(df: DataFrame, fallback_ts_col: str = "ts") -> DataFrame:
     """Apply the 12 checks in reference order; accumulate messages; apply
     defaults; clear empty processError/validationError; set marker emojis."""
+    for cols in _validate_projections(fallback_ts_col):
+        df = df.withColumns(cols)
+    return df
+
+
+@per_context
+def _validate_projections(fallback_ts_col: str) -> tuple[dict[str, Column], ...]:
+    """The three projections of validate_and_fix, in order: checks +
+    defaults, the processError clear, the marker emojis."""
     checks: list[tuple[Column, str]] = [
         (_unset(F.col("log_ingress")), "Ingress is empty"),
         (_unset(F.col("org_name")), "No organisation name set"),
@@ -63,7 +73,7 @@ def validate_and_fix(df: DataFrame, fallback_ts_col: str = "ts") -> DataFrame:
     def dflt(c: str, v: str) -> Column:
         return F.coalesce(F.nullif(F.col(c), F.lit("")), F.lit(v)).alias(c)
 
-    out = df.withColumns({
+    defaults = {
         "validation_errors": validation,
         "log_ingress": dflt("log_ingress", "Empty"),
         "org_name": dflt("org_name", "NoOrg"),
@@ -79,15 +89,15 @@ def validate_and_fix(df: DataFrame, fallback_ts_col: str = "ts") -> DataFrame:
         "service_stack": dflt("service_stack", "NoStack"),
         "service_namespace": dflt("service_namespace", "NoNameSpace"),
         "host_name": dflt("host_name", "NoHost"),
-    })
+    }
 
     # clear empty processError (validate.go:70-77): nil when no reason
     no_proc = _unset(F.col("process_error_reason"))
-    out = out.withColumns({
+    clear = {
         "process_error_reason": F.when(~no_proc, F.col("process_error_reason")),
         "process_error_subject": F.when(~no_proc, F.col("process_error_subject")),
         "process_error_raw_data": F.when(~no_proc, F.col("process_error_raw_data")),
-    })
+    }
 
     # SetMarkerEmojis + SetMarkerApm (extensions.go:183-198)
     emoji = F.element_at(_emoji_map(), F.col("log_level"))
@@ -97,4 +107,4 @@ def validate_and_fix(df: DataFrame, fallback_ts_col: str = "ts") -> DataFrame:
                    F.concat(emoji, F.lit(" " + EMOJI_STACKTRACE))).otherwise(emoji)
     emoji = F.when(~_unset(F.col("trace_id")),
                    F.concat(emoji, F.lit(" " + EMOJI_APM))).otherwise(emoji)
-    return out.withColumn("log_level_emoji", emoji)
+    return defaults, clear, {"log_level_emoji": emoji}

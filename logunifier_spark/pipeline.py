@@ -16,6 +16,11 @@ One declarative logical plan (SURVEY.md §3.4):
 Catalyst sees a single plan: the scan prunes to the 6 input columns, every
 non-UDF stage is whole-stage-codegen, and the only exchanges are the ones
 the caller asks for (routing / aggregation).
+
+Each stage's Column expressions are built once per SparkContext
+(`session.per_context`): a repeat `unify` call pays Dataset analysis, not
+the thousands of py4j round-trips that building the expression trees
+costs.
 """
 
 from __future__ import annotations
@@ -33,6 +38,7 @@ from logunifier_spark.operators import route as route_ops
 from logunifier_spark.operators.parse import parse_turns
 from logunifier_spark.operators.validate import validate_and_fix
 from logunifier_spark.schema import UNIFIED_SCHEMA
+from logunifier_spark.session import per_context
 from logunifier_spark.sources.ecsjson import (
     INVALID_JSON_REASON,
     is_bad_ecs,
@@ -45,6 +51,8 @@ DEFAULT_SUBJECT = "ingress.logs.transcripts"
 ANSI_RE = ("[\\x1b\\x9b][\\[\\]()#;?]*(?:(?:(?:[a-zA-Z\\d]*(?:;[a-zA-Z\\d]*)*)?\\x07)"
            "|(?:(?:\\d{1,4}(?:;\\d{0,4})*)?[\\dA-PRZcf-ntqry=><~]))")
 
+
+@per_context
 def _pattern_key_map() -> Column:
     return F.create_map(*[F.lit(x) for kv in STRING_TO_PATTERN_KEY.items() for x in kv])
 
@@ -131,68 +139,61 @@ def _dedup_turns(df: DataFrame, keys: list[str] | None = None) -> DataFrame:
     # winners path, where the aggregate groups by the TRUE key columns
     # and passes it through intact (expected extra rows at 10^12 inputs:
     # n²/2^65 ≈ tens of thousands — noise).
-    kh = F.xxhash64(*[F.col(k) for k in keys])
-    dup_hashes = (df.select(kh.alias("_kh")).groupBy("_kh")
-                    .agg(F.count("*").alias("_n"))
-                    .where(F.col("_n") > 1).select("_kh"))
+    kh, n_rows, is_dup, winner = _dedup_columns(tuple(keys), tuple(df.columns))
+    dup_hashes = (df.select(kh).groupBy("_kh").agg(n_rows)
+                    .where(is_dup).select("_kh"))
     if _is_file_backed(df) and dup_hashes.isEmpty():
         return df
-    dfh = df.withColumn("_kh", kh)
+    dfh = df.withColumns({"_kh": kh})
     clean = dfh.join(F.broadcast(dup_hashes), "_kh", "left_anti")
     dups = dfh.join(F.broadcast(dup_hashes), "_kh", "left_semi")
-    others = [c for c in df.columns if c not in keys]
-    pick = F.xxhash64(*[F.col(c) for c in df.columns])
-    winners = (dups.groupBy(*keys)
-                   .agg(F.max_by(F.struct(*[F.col(c) for c in others]), pick)
-                         .alias("_s"))
+    winners = (dups.groupBy(*keys).agg(winner)
                    .select(*keys, "_s.*")
                    .select(*df.columns))
     return clean.select(*df.columns).unionByName(winners)
 
 
-def unify(
-    transcripts: DataFrame,
-    pattern_labels: DataFrame | None = None,
-    subject: str = DEFAULT_SUBJECT,
-    strip_ansi: bool = False,
-    dedup: bool = True,
-    fallback_level: Column | None = None,
-    overrides: dict | None = None,
-    dedup_keys: list[str] | None = None,
-) -> DataFrame:
-    """Transcripts (conv_id, turn_idx, role, text, tool, ts) → unified rows
-    (UNIFIED_SCHEMA [+ sink/loki_labels/stream_key when pattern_labels given]).
+@per_context
+def _dedup_columns(keys: tuple[str, ...],
+                   columns: tuple[str, ...]) -> tuple[Column, ...]:
+    """_dedup_turns' expressions for one key tuple and input schema: the
+    key hash `_kh`, the per-hash row count `_n`, the duplicate filter and
+    the max-payload-hash winner struct `_s`."""
+    others = [c for c in columns if c not in keys]
+    pick = F.xxhash64(*[F.col(c) for c in columns])
+    return (F.xxhash64(*[F.col(k) for k in keys]).alias("_kh"),
+            F.count("*").alias("_n"),
+            F.col("_n") > 1,
+            F.max_by(F.struct(*[F.col(c) for c in others]), pick).alias("_s"))
 
-    `fallback_level` is the level used when no extractor set one (the
-    reference's MetaLog fallback, PRIORITY-derived for journald;
-    default 'unknown'). `overrides` (name → Column over the input frame)
-    are applied after envelope assembly but BEFORE enrich/validate — the
-    journald metadata-override hook (journald.go:190-275).
 
-    `dedup_keys` overrides the duplicate-window key (default the stable
-    (conv_id, turn_idx) turn id) — journald uses a full 64-bit payload hash
-    so hash truncation can never merge distinct messages."""
-    df = transcripts
-    if dedup:
-        df = _dedup_turns(df, dedup_keys)
-
+@per_context
+def _key_text_columns(strip_ansi: bool) -> dict[str, Column]:
     text = F.col("text")
     if strip_ansi:
         text = F.regexp_replace(F.coalesce(text, F.lit("")), ANSI_RE, "")
+    return {"_text": text,
+            "log_pattern_key": resolve_pattern_key(F.col("tool"))}
 
-    df = df.withColumns({
-        "_text": text,
-        "log_pattern_key": resolve_pattern_key(F.col("tool")),
-    })
+
+@per_context
+def _parse_columns() -> dict[str, Column]:
     is_ecs = F.col("log_pattern_key") == "Ecs"
     # the envelope never reads _parsed on Ecs rows (ecs_or below), so their
     # text is not shipped to the Python worker
-    df = df.withColumns({
+    return {
         "_parsed": parse_turns(F.when(~is_ecs, F.col("_text")),
                                F.col("log_pattern_key")),
         "_j": F.when(is_ecs, parse_ecs_json(F.col("_text"))),
-    })
+    }
 
+
+@per_context
+def _envelope_columns(subject: str) -> dict[str, Column]:
+    """The unified envelope over `_parsed` / `_j`. The caller's fallback
+    level arrives as the `_fallback_level` column, so one memoized
+    envelope serves every caller."""
+    is_ecs = F.col("log_pattern_key") == "Ecs"
     j = F.col("_j")
     p = F.col("_parsed")
     # ecs rows: invalid JSON → pre-parse process error → Parse() early-exit
@@ -206,7 +207,7 @@ def unify(
         F.coalesce(F.element_at(_level_alias_map(), F.lower(_e(j, "log", "level"))),
                    F.lit("unknown")))
 
-    df = df.withColumns({
+    return {
         # id quirk preserved: reference never fills an empty id
         # (journald.go:191-193 / ecs.go:45-47 — inverted emptiness check);
         # when the input DID carry one it is replaced (deterministically here:
@@ -225,10 +226,7 @@ def unify(
         "tags": ecs_or(_e(j, "tags"), F.lit(None).cast("array<string>")),
         "labels": ecs_or(_e(j, "labels"), p["labels"]),
         "log_level": F.when(ecs_bad, F.lit("fatal")).otherwise(
-            ecs_or(ecs_level, F.coalesce(
-                p["level"],
-                fallback_level if fallback_level is not None
-                else F.lit("unknown")))),
+            ecs_or(ecs_level, F.coalesce(p["level"], F.col("_fallback_level")))),
         "log_level_emoji": F.lit(""),  # finalized by validate_and_fix
         "log_logger": ecs_or(_e(j, "log", "logger"), F.lit("")),
         "log_ingress": F.lit(subject),
@@ -266,7 +264,42 @@ def unify(
         "process_error_raw_data": F.col("_text"),
         "validation_errors": ecs_or(_e(j, "validationError", "errors"),
                                     F.lit(None).cast("string")),
+    }
+
+
+def unify(
+    transcripts: DataFrame,
+    pattern_labels: DataFrame | None = None,
+    subject: str = DEFAULT_SUBJECT,
+    strip_ansi: bool = False,
+    dedup: bool = True,
+    fallback_level: Column | None = None,
+    overrides: dict | None = None,
+    dedup_keys: list[str] | None = None,
+) -> DataFrame:
+    """Transcripts (conv_id, turn_idx, role, text, tool, ts) → unified rows
+    (UNIFIED_SCHEMA [+ sink/loki_labels/stream_key when pattern_labels given]).
+
+    `fallback_level` is the level used when no extractor set one (the
+    reference's MetaLog fallback, PRIORITY-derived for journald;
+    default 'unknown'). `overrides` (name → Column over the input frame)
+    are applied after envelope assembly but BEFORE enrich/validate — the
+    journald metadata-override hook (journald.go:190-275).
+
+    `dedup_keys` overrides the duplicate-window key (default the stable
+    (conv_id, turn_idx) turn id) — journald uses a full 64-bit payload hash
+    so hash truncation can never merge distinct messages."""
+    df = transcripts
+    if dedup:
+        df = _dedup_turns(df, dedup_keys)
+
+    df = df.withColumns({
+        **_key_text_columns(strip_ansi),
+        "_fallback_level": (F.lit("unknown") if fallback_level is None
+                            else fallback_level),
     })
+    df = df.withColumns(_parse_columns())
+    df = df.withColumns(_envelope_columns(subject))
 
     if overrides:
         df = df.withColumns(dict(overrides))
@@ -285,11 +318,13 @@ def unify(
     df = df.select(*keep)
 
     if pattern_labels is not None:
-        df = df.withColumn("loki_labels", enrich_ops.loki_label_map())
-        # static-key concat, NOT stream_key(loki_labels): byte-identical
-        # output, but stays inside whole-stage codegen (and lets Catalyst
-        # prune the map column entirely when the caller doesn't read it)
-        df = df.withColumn("stream_key", enrich_ops.stream_key_native())
+        df = df.withColumns({
+            "loki_labels": enrich_ops.loki_label_map(),
+            # static-key concat, NOT stream_key(loki_labels): byte-identical
+            # output, but stays inside whole-stage codegen (and lets Catalyst
+            # prune the map column entirely when the caller doesn't read it)
+            "stream_key": enrich_ops.stream_key_native(),
+        })
         df = route_ops.with_routing(df)
     return df
 

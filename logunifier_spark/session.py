@@ -7,11 +7,40 @@ local harness (override per cluster via spark-submit --conf)."""
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 import tempfile
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+
+def per_context(fn):
+    """Memoize a function that builds Column expressions, once per
+    SparkContext, keyed by the function and its (hashable) arguments.
+
+    Every Column-API call is a py4j round-trip plus PySpark's call-site
+    capture, so rebuilding the pipeline's expression trees costs thousands
+    of round-trips per `unify` call. Unresolved Column expressions hold no
+    session state (time zone, ANSI mode and the like resolve at analysis),
+    so one set serves every session of the context. A function may
+    be memoized only if its result depends on its arguments alone: never
+    one that closes over a DataFrame-bound column (`df["x"]`), a session
+    conf value or a Column passed in by the caller. The result is shared:
+    callers must not mutate it. Two threads that miss at once both build,
+    and either result is valid."""
+    @functools.wraps(fn)
+    def memoized(*args):
+        sc = SparkContext._active_spark_context  # noqa: SLF001
+        if sc is None:
+            return fn(*args)
+        memo = sc.__dict__.setdefault("_logunify_column_memo", {})
+        key = (fn, args)
+        if key not in memo:
+            memo[key] = fn(*args)
+        return memo[key]
+    return memoized
 
 
 def ship_package(spark: SparkSession) -> str:

@@ -55,7 +55,10 @@ def stream_unify(
     # resolve the enrich lookup ONCE: building it inside the batch
     # closure re-created the frame (py4j plan construction + a fresh
     # broadcast) on EVERY micro-batch — pure fixed cost at streaming's
-    # small batch sizes
+    # small batch sizes. unify's own Column expressions are memoized per
+    # SparkContext, so each batch's unify build pays Dataset analysis
+    # only: ~400 py4j round-trips and 0.25-0.4 s wall at local[1], where
+    # rebuilding the expressions cost ~7,900 and 1.3-1.5 s
     if pattern_labels is None:
         from logunifier_spark.operators.enrich import default_pattern_labels
         pattern_labels = default_pattern_labels(stream.sparkSession)
@@ -143,7 +146,9 @@ def suggest_max_files(query_or_progress, target_latency_s: float,
     Why a model, not proportion: the r4 sweep measured that 4x the batch
     size buys 2-3.5x the busy throughput — each micro-batch pays a
     fixed plan/broadcast/Arrow-worker setup cost (~2-3 s for the unify
-    pipeline) that large batches amortize. The right batch size is
+    pipeline in that sweep, before its Column expressions were memoized
+    per SparkContext; the memo took ~1 s of plan build out of it) that
+    large batches amortize. The right batch size is
     therefore "as large as the latency budget allows", and the budget
     line must account for the fixed intercept or small targets
     under-size and large targets over-size the batch.

@@ -181,6 +181,32 @@ def test_semdedup_max_cluster_prunes_hot_clusters(spark):
     assert want == set()
 
 
+def test_semdedup_max_cluster_cap_observable(spark):
+    # the cap reports exactly how many clusters it dropped and the largest
+    # population, from an Observation on its own cluster-count aggregate:
+    # reading it runs no job, and an uncapped run reports None
+    from collections import Counter
+
+    from logunifier_spark.operators.semdedup import semdedup_pairs
+    rows = _synth(n=150)
+    df = spark.createDataFrame(rows, SCHEMA)
+    pops = Counter(c for c, _ in _numpy_kmeans(rows, k=5, iters=2).values())
+    cap = 30
+    assert min(pops.values()) <= cap < max(pops.values())
+    kw = dict(k=5, iters=2, threshold=0.9)
+    capped = semdedup_pairs(df, max_cluster=cap, **kw)
+    got = {(int(r["cluster"]), int(r["id_a"]), int(r["id_b"]), float(r["cos"]))
+           for r in capped.collect()}
+    assert got == _python_semdedup(rows, max_cluster=cap, **kw) != set()
+    tracker = spark.sparkContext.statusTracker()
+    before = max([-1, *tracker.getJobIdsForGroup()])
+    stats = capped.hot_bucket_observation.get
+    assert max([-1, *tracker.getJobIdsForGroup()]) == before
+    assert stats == {"capped_buckets": sum(n > cap for n in pops.values()),
+                     "max_bucket_rows": max(pops.values())}
+    assert semdedup_pairs(df, **kw).hot_bucket_observation is None
+
+
 def test_semdedup_numpy_path_matches_python(spark):
     # k=20: many small clusters through the numpy assignment kernel and
     # the pairing pass

@@ -361,3 +361,108 @@ def test_to_ecs_struct_json_uses_proto_names(spark):
     # rawData is kept only on rows with a process error
     assert "rawData" not in n["processError"]
     assert bad["processError"]["rawData"] == "this is not json {"
+
+
+# ------------------------------------------- per-SparkContext Column memo ----
+
+def _frame(spark, rows, conv="conv1"):
+    return spark.createDataFrame(
+        [(conv, i, role, text, tool, datetime(2024, 1, 1, 0, 0, i))
+         for i, role, text, tool in rows], TRANSCRIPT_SCHEMA)
+
+
+def test_warm_unify_build_reuses_memoized_columns(spark, monkeypatch):
+    """A repeat unify build reuses the pipeline's memoized Column
+    expressions, so it pays py4j round-trips only for the DataFrame calls
+    (rebuilding the expression trees costs ~7,900). Garbage is collected
+    before the build and not during it, so the count repeats exactly."""
+    import gc
+
+    from py4j.clientserver import ClientServerConnection
+
+    df = _frame(spark, ROWS)
+    unify(df, pattern_labels=default_pattern_labels(spark))
+    sent = 0
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        nonlocal sent
+        sent += 1
+        return send(self, command)
+
+    gc.collect()
+    gc.disable()
+    try:
+        monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+        unify(df, pattern_labels=default_pattern_labels(spark))
+        monkeypatch.undo()
+    finally:
+        gc.enable()
+    assert 0 < sent < 1000
+
+
+def _json_rows(u):
+    return [r["j"] for r in u.select(F.to_json(F.struct("*")).alias("j")).collect()]
+
+
+def test_memoized_columns_in_two_subtrees(spark):
+    """Two unify outputs built from the same memoized PythonUDF / from_json
+    expressions, unioned and joined in one plan, equal the outputs
+    collected separately."""
+    labels = default_pattern_labels(spark)
+    # same (conv_id, turn_idx) keys, every key on a different extractor
+    shifted = [(i, role, text, tool) for (i, role, _, _), (_, _, text, tool)
+               in zip(ROWS, ROWS[1:] + ROWS[:1])]
+    ua = unify(_frame(spark, ROWS), pattern_labels=labels, dedup=False)
+    ub = unify(_frame(spark, shifted), pattern_labels=labels, dedup=False)
+    a, b = _json_rows(ua), _json_rows(ub)
+    assert sorted(_json_rows(ua.unionByName(ub))) == sorted(a + b)
+
+    def keyed(u):
+        return u.select("conv_id", "turn_idx",
+                        F.to_json(F.struct(*u.columns)).alias("j"))
+    joined = {(r["turn_idx"], r["ja"], r["jb"]) for r in
+              keyed(ua).withColumnRenamed("j", "ja")
+              .join(keyed(ub).withColumnRenamed("j", "jb"),
+                    ["conv_id", "turn_idx"]).collect()}
+    by_key_b = {r["turn_idx"]: r["j"] for r in keyed(ub).collect()}
+    assert joined == {(r["turn_idx"], r["j"], by_key_b[r["turn_idx"]])
+                      for r in keyed(ua).collect()}
+    assert len(joined) == len(ROWS)
+
+
+TZ_ROWS = [
+    (0, "user", '{"@timestamp":"2023-06-07T13:08:51","message":"naive"}', "ecs"),
+    (1, "user", '{"@timestamp":"2023-06-07T13:08:51+01:00","message":"offset"}', "ecs"),
+    (2, "user", "2023-03-29 20:50:13.931 [INF] Server is ready", "tslevelmsg"),
+    (3, "user", "no timestamp here", "tslevelmsg"),
+]
+
+
+def test_memoized_columns_carry_no_session_state(spark):
+    """Columns memoized in the UTC session resolve the time zone of the
+    session that analyzes them: a new session at America/New_York reads
+    the naive ECS @timestamp in New York time and renders every
+    timestamp there (values as computed without the memo)."""
+    def rows(session):
+        u = unify(_frame(session, TZ_ROWS, conv="c"),
+                  pattern_labels=default_pattern_labels(session), dedup=False)
+        return [tuple(r) for r in u.select(
+            "turn_idx", F.unix_micros("timestamp"),
+            F.col("timestamp").cast("string")).orderBy("turn_idx").collect()]
+
+    utc = rows(spark)  # warms the memo
+    ny = spark.newSession()
+    ny.conf.set("spark.sql.session.timeZone", "America/New_York")
+    assert rows(ny) == [
+        (0, 1686157731000000, "2023-06-07 13:08:51"),
+        (1, 1686139731000000, "2023-06-07 08:08:51"),
+        (2, 1680123013931000, "2023-03-29 16:50:13.931"),
+        (3, 1704067203000000, "2023-12-31 19:00:03"),
+    ]
+    assert utc == [
+        (0, 1686143331000000, "2023-06-07 13:08:51"),
+        (1, 1686139731000000, "2023-06-07 12:08:51"),
+        (2, 1680123013931000, "2023-03-29 20:50:13.931"),
+        (3, 1704067203000000, "2024-01-01 00:00:03"),
+    ]
