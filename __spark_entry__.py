@@ -1792,13 +1792,13 @@ def q_semdedup_pairs(spark, sf_dir):
 
 
 def q_dedup_turns(spark, sf_dir):
-    """M3: duplicate-window dedup — transcripts unioned with themselves
-    collapse back to one row per (conv_id, turn_idx) (JetStream 5-min
-    duplicate window, streamcfg.go:30)."""
+    """M3: duplicate-window dedup — file-backed transcripts unioned with
+    themselves collapse back to one row per (conv_id, turn_idx) through
+    unify's own dedup (JetStream 5-min duplicate window, streamcfg.go:30)."""
+    from logunifier_spark.pipeline import _dedup_turns
     t = _transcripts_from_events(spark, sf_dir)
-    doubled = t.unionByName(t)
-    return (doubled.dropDuplicates(["conv_id", "turn_idx"])
-                   .groupBy("conv_id").agg(F.count("*").alias("n_turns")))
+    return (_dedup_turns(t.unionByName(t), ["conv_id", "turn_idx"])
+            .groupBy("conv_id").agg(F.count("*").alias("n_turns")))
 
 
 def q_ann_ivf(spark, sf_dir):

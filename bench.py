@@ -73,12 +73,11 @@ def headline(spark, n_turns: int) -> float:
     labels = default_pattern_labels(spark)
 
     # plan CONSTRUCTION stays outside the timed window (round-1 semantics,
-    # keeps BENCH_r{N} comparable): for this in-memory input the adaptive
-    # dedup probe runs no job at construction, so what's excluded is pure
-    # driver-side py4j plan building (~0.5 s, independent of data size —
-    # negligible at any real scale but 20% of a 1M-turn run). File-backed
-    # pipelines DO pay a narrow probe job at construction; that cost is
-    # benchmarked where it belongs, in run_resumable/write_sinks flows.
+    # keeps BENCH_r{N} comparable): unify runs no Spark job at construction
+    # for any input (its dedup leaves the no-duplicates shortcut to AQE at
+    # run time), so what's excluded is pure driver-side plan building
+    # (independent of data size — negligible at any real scale but a
+    # visible share of a 1M-turn run).
     u = unify(t, pattern_labels=labels)
     # one pass; the aggregate consumes parse-DERIVED columns (log_level,
     # message, timestamp) — aggregating only on sink/log_pattern_key lets

@@ -428,8 +428,9 @@ def embedding_neardup_pairs(emb: DataFrame, dim: int,
     overhead; measured 3.8 s banded vs 1.2 s brute at 2k vectors,
     sf0.1) and exact, so the recall bound only ever applies where
     approximation is actually needed. The rep count is one narrow
-    aggregate at plan-construction time (same pattern as unify()'s
-    dedup probe — benches time construction + execution together)."""
+    aggregate at plan-construction time: it picks between two plan
+    shapes, which AQE cannot do at run time, so benches time
+    construction + execution together."""
     from logunifier_spark.operators.dedup import (
         bucket_pairs,
         exact_groups,

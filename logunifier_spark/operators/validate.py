@@ -35,15 +35,14 @@ def _unset(c: Column) -> Column:
 def validate_and_fix(df: DataFrame, fallback_ts_col: str = "ts") -> DataFrame:
     """Apply the 12 checks in reference order; accumulate messages; apply
     defaults; clear empty processError/validationError; set marker emojis."""
-    for cols in _validate_projections(fallback_ts_col):
-        df = df.withColumns(cols)
-    return df
+    return df.withColumns(_validate_projections(fallback_ts_col))
 
 
 @per_context
-def _validate_projections(fallback_ts_col: str) -> tuple[dict[str, Column], ...]:
-    """The three projections of validate_and_fix, in order: checks +
-    defaults, the processError clear, the marker emojis."""
+def _validate_projections(fallback_ts_col: str) -> dict[str, Column]:
+    """validate_and_fix's one projection: checks + defaults, the
+    processError clear and the marker emojis. Each reads only columns the
+    others do not write, so all three see the input row."""
     checks: list[tuple[Column, str]] = [
         (_unset(F.col("log_ingress")), "Ingress is empty"),
         (_unset(F.col("org_name")), "No organisation name set"),
@@ -107,4 +106,4 @@ def _validate_projections(fallback_ts_col: str) -> tuple[dict[str, Column], ...]
                    F.concat(emoji, F.lit(" " + EMOJI_STACKTRACE))).otherwise(emoji)
     emoji = F.when(~_unset(F.col("trace_id")),
                    F.concat(emoji, F.lit(" " + EMOJI_APM))).otherwise(emoji)
-    return defaults, clear, {"log_level_emoji": emoji}
+    return {**defaults, **clear, "log_level_emoji": emoji}

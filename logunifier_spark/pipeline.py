@@ -3,7 +3,7 @@
 One declarative logical plan (SURVEY.md §3.4):
 
     read transcripts
-      → distinct()                                     # M3 dedup window
+      → key-hash dedup (_dedup_turns)                  # M3 dedup window
       → pattern-key resolution (literal map, J1)
       → [optional] ANSI strip (P9)
       → pandas-UDF parse (P2-P11, vectorized grok/logfmt)
@@ -74,27 +74,6 @@ def _e(j: Column, *path: str) -> Column:
     return c
 
 
-_IN_MEMORY_LEAVES = {"Range", "LocalRelation", "OneRowRelation"}
-
-
-def _is_file_backed(df: DataFrame) -> bool:
-    """True iff the plan reads any external file/table source (parquet,
-    Iceberg, JDBC, ...) — the inputs whose re-scan is I/O-priced. Decided
-    from the LEAF NODE CLASSES of the optimized plan (a substring test on
-    the plan string falsely matches format names inside data literals);
-    purely in-memory sources (range, LocalRelation) regenerate cheaply."""
-    try:
-        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()  # noqa: SLF001
-        it = leaves.iterator()
-        while it.hasNext():
-            cls = it.next().getClass().getSimpleName().replace("$", "")
-            if cls not in _IN_MEMORY_LEAVES:
-                return True
-        return False
-    except Exception:  # noqa: BLE001 — conservative on exotic frontends
-        return True
-
-
 def _dedup_turns(df: DataFrame, keys: list[str] | None = None) -> DataFrame:
     """JetStream duplicate-window analog (streamcfg.go:30), keyed on the
     stable turn id, built for the rare-duplicate case.
@@ -112,18 +91,13 @@ def _dedup_turns(df: DataFrame, keys: list[str] | None = None) -> DataFrame:
       4. dedupe only the duplicate subset with a deterministic
          max-payload-hash winner.
 
-    Probe: for FILE-BACKED inputs an eager isEmpty probe of the dup-key
-    aggregate runs first and, when no key has duplicates (the common
-    case), returns the input untouched — one narrow column-pruned read
-    instead of the two full anti/semi scans. For in-memory inputs
-    (range/LocalRelation — benches, synthetics) the probe is a net LOSS
-    (measured +0.7 s/1M turns: a sequential job barrier vs cheap
-    regeneration), so they skip it and keep the fused single-job plan,
-    which is correct either way. The probe is deliberately NOT
-    localCheckpoint'ed: checkpoint blocks die with their executor, while
-    the duplicates-present path just recomputes the cheap aggregate inside
-    its joins with full lineage fault tolerance. NOTE: with the probe,
-    CONSTRUCTING a plan through unify() runs one narrow Spark job.
+    Building the plan runs no Spark job, whatever the input. When no key
+    has duplicates (the common case), AQE finds the broadcast side empty
+    at run time: its empty-relation propagation replaces the anti-join
+    with its left child and the semi-join branch with an empty relation,
+    so the scan runs once, unjoined. The Union keeps that empty input
+    when a Python UDF sits above it (unify's parse): the propagation does
+    not cross ArrowEvalPython.
 
     At 10^12 turns the full input never shuffles for dedup; only key
     triples do. If duplicates are pathologically common the broadcast is
@@ -142,8 +116,6 @@ def _dedup_turns(df: DataFrame, keys: list[str] | None = None) -> DataFrame:
     kh, n_rows, is_dup, winner = _dedup_columns(tuple(keys), tuple(df.columns))
     dup_hashes = (df.select(kh).groupBy("_kh").agg(n_rows)
                     .where(is_dup).select("_kh"))
-    if _is_file_backed(df) and dup_hashes.isEmpty():
-        return df
     dfh = df.withColumns({"_kh": kh})
     clean = dfh.join(F.broadcast(dup_hashes), "_kh", "left_anti")
     dups = dfh.join(F.broadcast(dup_hashes), "_kh", "left_semi")

@@ -466,3 +466,72 @@ def test_memoized_columns_carry_no_session_state(spark):
         (2, 1680123013931000, "2023-03-29 20:50:13.931"),
         (3, 1704067203000000, "2024-01-01 00:00:03"),
     ]
+
+
+# ------------------------------------------- dedup on file-backed input ----
+
+DUP_ROWS = ROWS + [
+    (1, "assistant", "level=info msg=\"sent twice, new text\"", "logfmt"),
+    (3, "system", "Invalid message", "tslevelmsg"),
+]
+
+
+@pytest.fixture(scope="module")
+def parquet_turns(spark, tmp_path_factory):
+    """{has_dups: (path, rows)}: the ROWS transcript written to parquet
+    without and with duplicate (conv_id, turn_idx) keys."""
+    out = {}
+    for has_dups, rows in ((False, ROWS), (True, DUP_ROWS)):
+        path = str(tmp_path_factory.mktemp("turns") / "t.parquet")
+        _frame(spark, rows).write.parquet(path)
+        out[has_dups] = (path, rows)
+    return out
+
+
+@pytest.mark.parametrize("has_dups", [False, True])
+def test_unify_build_runs_no_job(spark, parquet_turns, has_dups):
+    """Building unify over a parquet scan runs no Spark job: the dedup
+    decides at run time, not with an eager probe at construction. (The
+    scan is opened first: reading the parquet footers is a job of its
+    own.)"""
+    df = spark.read.parquet(parquet_turns[has_dups][0])
+    sc = spark.sparkContext
+    group = f"unify-build-{has_dups}"
+    sc.setJobGroup(group, "unify plan construction")
+    try:
+        unify(df, pattern_labels=default_pattern_labels(spark))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+@pytest.mark.parametrize("has_dups", [False, True])
+def test_file_backed_unify_equals_in_memory(spark, parquet_turns, has_dups):
+    """File-backed and in-memory input take one dedup plan and give the
+    same rows, duplicates or not."""
+    path, rows = parquet_turns[has_dups]
+    labels = default_pattern_labels(spark)
+    from_file = _json_rows(unify(spark.read.parquet(path), pattern_labels=labels))
+    in_memory = _json_rows(unify(_frame(spark, rows), pattern_labels=labels))
+    assert sorted(from_file) == sorted(in_memory)
+    assert len(from_file) == len(ROWS)
+
+
+def test_aqe_drops_empty_duplicate_branch(spark, parquet_turns):
+    """With no duplicate key, AQE's empty-relation propagation removes the
+    dedup's anti-join and semi-join from the final plan; with duplicates
+    both stay. This is the Spark behaviour that lets _dedup_turns build
+    one plan for every input."""
+    def final_plan(has_dups):
+        u = unify(spark.read.parquet(parquet_turns[has_dups][0]),
+                  pattern_labels=default_pattern_labels(spark))
+        u.collect()
+        adaptive = u._jdf.queryExecution().executedPlan()
+        assert adaptive.isFinalPlan()
+        return adaptive.executedPlan().toString()
+
+    clean = final_plan(False)
+    assert "LeftAnti" not in clean and "LeftSemi" not in clean, clean
+    dups = final_plan(True)
+    assert "LeftAnti" in dups and "LeftSemi" in dups, dups
