@@ -1109,7 +1109,7 @@ def q_normalize_text(spark, sf_dir):
     decomposed/precomposed suffixes appended per doc prove real
     composition (e+U+0301 -> é, A+U+030A -> Å; the precomposed family is
     the no-op control). Two genuinely independent NFC engines must
-    agree byte-for-byte: CPython unicodedata (Spark pandas UDF) vs
+    agree byte-for-byte: CPython unicodedata (Spark Arrow UDF) vs
     DuckDB's utf8proc nfc_normalize — the md5 column is the proof."""
     from logunifier_spark.operators.normalize import normalize_text
     d = _load(spark, sf_dir, "documents")

@@ -4,24 +4,12 @@ Sources:
   - level aliases        /root/reference/pkg/model/utils.go:58-86
   - level → emoji        /root/reference/pkg/model/utils.go:88-97
   - pattern-key strings  /root/reference/pkg/model/utils.go:49-56
-  - enum names           /root/reference/pkg/model/metalog.proto:16-31,
-                         ecs.proto:225-234
   - priority → level     /root/reference/internal/streams/ingress/journald/journald.go:309-333
   - facility → job type  /root/reference/internal/streams/ingress/journald/journald.go:366-428
   - marker emojis        /root/reference/pkg/model/utils.go:115-126
 """
 
 from __future__ import annotations
-
-LEVEL_UNKNOWN = "unknown"
-LEVEL_NOT_SET = "not_set"
-
-# canonical level -> numeric code (ecs.proto:225-234)
-LEVEL_CODES = {
-    "unknown": 0, "not_set": -1,
-    "trace": 100, "debug": 200, "info": 300,
-    "warn": 400, "error": 500, "fatal": 600,
-}
 
 # 25 alias rows + the 2 canonical non-levels (model/utils.go:58-86)
 STRING_TO_LEVEL = {
@@ -56,9 +44,6 @@ STRING_TO_PATTERN_KEY = {
     "envoy": "Envoy",
     "traefik": "Traefik",
 }
-PATTERN_KEY_DEFAULT = "Nop"
-PATTERN_KEYS = ["Unknown", "Nop", "LogFmt", "Ecs", "TsLevelMsg", "Envoy",
-                "Clf", "Traefik"]
 
 # journald PRIORITY -> level (journald.go:309-333); "" -> unknown,
 # any other value -> not_set; nomad-job rows -> not_set (handled by caller)
@@ -76,23 +61,6 @@ FACILITY_TO_JOBTYPE = {
     "16": "local-0", "17": "local-1", "18": "local-2", "19": "local-3",
     "20": "local-4", "21": "local-5", "22": "local-6", "23": "local-7",
 }
-
-# exact validation default strings + messages (validate.go:9-81), in order
-VALIDATION_RULES = [
-    # (field, default, message)
-    ("ingress", "Empty", "Ingress is empty"),
-    ("org_name", "NoOrg", "No organisation name set"),
-    ("service_name", "Empty", "Service name is empty"),
-    ("logger", "Empty", "No Logger set"),
-    ("service_type", "Empty", "Service type is empty"),
-    ("level", None, "Log level not found"),
-    ("timestamp", None, "Timestamp not found. Set to fallback"),
-    ("pattern_key", "NoPattern", "No pattern found"),
-    ("environment", "NoEnv", "No environment set"),
-    ("service_stack", "NoStack", "No stack set"),
-    ("service_namespace", "NoNameSpace", "No namespace set"),
-    ("host_name", "NoHost", "No host name set"),
-]
 
 MSG_UNPARSEABLE = ("Can't parse a MetaLog with process errors. "
                    "See the ProcessError Raw message for further debugging")

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from logunifier_spark.operators.kernels import fan_out
 from logunifier_spark.operators.textstats import ASCII_WS
 
 
@@ -64,11 +65,10 @@ def contaminated_ids(train: DataFrame, bench: DataFrame, n: int = 8,
     """(id_col, n_hits) for every training doc sharing >= 1 word n-gram
     with the benchmark; n_hits = distinct shared grams. The benchmark gram
     set is broadcast, so the training side is probed without a shuffle."""
-    from logunifier_spark.operators.dedup import fan_out
     bench_grams = (_gram_rows(bench, n, text_col, id_col)
                    .select("gram").distinct())
-    # a one-file corpus scans as ONE task and the broadcast probe inherits
-    # it; fan_out is a no-op once the input has >= session parallelism
+    # a small corpus scans as fewer tasks than cores, and the broadcast
+    # probe inherits them
     train_grams = _gram_rows(fan_out(train), n, text_col, id_col)
     hits = train_grams.join(F.broadcast(bench_grams), "gram")
     return hits.groupBy(id_col).agg(

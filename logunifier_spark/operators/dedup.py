@@ -19,8 +19,9 @@ keep-set or duplicate-pair frame. Designed for 100 TB shapes:
 
 Joins/aggregations/banding are native Spark SQL expressions (xxhash64,
 explode, hash joins). The minhash/simhash signature computations are
-Arrow-vectorized numpy pandas UDFs (zero per-row Python in the hot loops) —
-measured 5-50× faster than the equivalent Catalyst higher-order-function
+numpy kernels in `arrow_udf`s, one call per Arrow batch with the output
+built directly as an Arrow array (zero per-row Python in the hot loops)
+— measured 5-50× faster than the equivalent Catalyst higher-order-function
 expression trees, which re-expand per downstream reference.
 """
 
@@ -30,24 +31,15 @@ import itertools
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import ArrayType, LongType
 
+from logunifier_spark.operators.kernels import _input_bytes_estimate, fan_out
 from logunifier_spark.operators.textstats import ASCII_WS
-
-def fan_out(df: DataFrame, divisor: int = 1) -> DataFrame:
-    """Small corpora (one parquet file) scan as ONE task, so a pandas-UDF
-    stage runs on one core no matter the cluster size. Fan the input out to
-    the session's parallelism when it arrives under-partitioned (divisor=2
-    for Arrow-UDF stages: each task pins a JVM thread AND a python worker,
-    so cores/2 tasks saturate a box). At production scale the input already
-    has >= this many partitions and this is a no-op — the check costs one
-    plan analysis, no job."""
-    sc = df.sparkSession.sparkContext
-    target = max(sc.defaultParallelism // divisor, 1)
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
+from logunifier_spark.session import observation_or
 
 
 # ---------------------------------------------------------------- exact ----
@@ -94,6 +86,16 @@ _MINHASH_P = 2_147_483_647  # Mersenne prime 2^31 - 1: the portable field
 # Horner bases for the portable gram hashes (two independent-ish families)
 _GRAM_BASE_1 = 131
 _GRAM_BASE_2 = 137
+
+_LONGS = to_arrow_type(ArrayType(LongType()))
+
+
+def _long_lists(offsets: np.ndarray, flat: np.ndarray) -> pa.Array:
+    """An array<long> UDF result built in Arrow: row i is
+    flat[offsets[i]:offsets[i + 1]]."""
+    return pa.ListArray.from_arrays(
+        pa.array(offsets.astype(np.int32)), pa.array(flat, type=pa.int64()),
+        type=_LONGS)
 
 
 def _norm_series(text: pd.Series) -> pd.Series:
@@ -149,12 +151,13 @@ def _horner_grams(norm_u32, shingle_n: int, bases=(_GRAM_BASE_1,)) -> list:
     return grams_per_row
 
 
-def _ragged_grams(text: pd.Series, shingle_n: int, bases=(_GRAM_BASE_1,)):
+def _ragged_grams(text: pa.Array, shingle_n: int, bases=(_GRAM_BASE_1,)):
     """The gram keys of a batch as one ragged array for the sketch UDFs'
     per-row `np.ufunc.reduceat`: (lens, flat, offsets) — each row's gram
     count, all keys concatenated, and each row's start in `flat`. Every
     row has >= 1 gram (`_horner_grams` pads), so no offset repeats."""
-    grams_per_row = _horner_grams(_norm_series(text), shingle_n, bases)
+    grams_per_row = _horner_grams(_norm_series(text.to_pandas()), shingle_n,
+                                  bases)
     lens = np.fromiter(map(len, grams_per_row), dtype=np.int64,
                        count=len(grams_per_row))
     offsets = np.zeros(len(lens), dtype=np.int64)
@@ -176,14 +179,11 @@ def minhash_signature_udf(num_hashes: int = 64, shingle_n: int = 5):
     Python-UDF argument breaks ExtractPythonUDFs (leftover nullability
     variants → INTERNAL_ERROR 'Cannot generate code'), and inlining the
     normalization into a transform lambda re-runs the regex per gram."""
-    from pyspark.sql.functions import pandas_udf
-
     a = np.arange(num_hashes, dtype=np.int64) * 2 + 1
     b = ((np.arange(num_hashes, dtype=np.int64) + 7) * 1_000_003) % _MINHASH_P
     p = np.int64(_MINHASH_P)
 
-    @pandas_udf("array<long>")
-    def _sig(text: pd.Series) -> pd.Series:
+    def _sig(text: pa.Array) -> pa.Array:
         lens, flat, offsets = _ragged_grams(text, shingle_n)
         out = np.full((len(lens), num_hashes), p, dtype=np.int64)
         if len(lens):
@@ -191,21 +191,10 @@ def minhash_signature_udf(num_hashes: int = 64, shingle_n: int = 5):
             for i in range(num_hashes):
                 row = (flat * a[i] + b[i]) % p
                 out[:, i] = np.minimum.reduceat(row, offsets)
-        return pd.Series(list(out))
+        return _long_lists(np.arange(0, out.size + 1, num_hashes),
+                           out.ravel())
 
-    return _sig
-
-
-def _input_bytes_estimate(df: DataFrame) -> int:
-    """Catalyst's size estimate of the optimized plan (file sources report
-    real on-disk bytes; unknown sources report defaultSizeInBytes ≈ 2^63,
-    which conservatively disables any small-input fast path)."""
-    try:
-        # py4j converts the scala BigInt to a Python int directly
-        return int(df._jdf.queryExecution().optimizedPlan()  # noqa: SLF001
-                     .stats().sizeInBytes())
-    except Exception:  # noqa: BLE001
-        return 1 << 62
+    return F.arrow_udf(_sig, returnType=ArrayType(LongType()))
 
 
 # Two-stage auto-broadcast gate for the signature table. The broadcast
@@ -240,23 +229,15 @@ class _CapStats:
 
     @property
     def get(self) -> dict:
-        try:
-            return dict(self._obs.get)
-        except Exception as e:  # narrow: ONLY the Spark 4.1 schemaless-row
-            # assert (Py4JJavaError: PythonSQLUtils.toPyRow AssertionError).
-            # Any other failure of the first action (job abort, OOM,
-            # analysis error) must surface, not trigger a silent recompute
-            # that could mask it (ADVICE r4).
-            msg = str(e)
-            if not (type(e).__name__ == "Py4JJavaError"
-                    and "toPyRow" in msg and "AssertionError" in msg):
-                raise
-            row = self._counts.agg(
-                F.sum((F.col("_n") > self._mb).cast("long"))
-                 .alias("capped_buckets"),
-                F.max("_n").alias("max_bucket_rows")).first()
-            return {"capped_buckets": int(row["capped_buckets"] or 0),
-                    "max_bucket_rows": int(row["max_bucket_rows"] or 0)}
+        return dict(observation_or(self._obs, self._recount))
+
+    def _recount(self) -> dict:
+        row = self._counts.agg(
+            F.sum((F.col("_n") > self._mb).cast("long"))
+             .alias("capped_buckets"),
+            F.max("_n").alias("max_bucket_rows")).first()
+        return {"capped_buckets": int(row["capped_buckets"] or 0),
+                "max_bucket_rows": int(row["max_bucket_rows"] or 0)}
 
 
 def capped_counts(counts: DataFrame, cap: int) -> tuple[DataFrame, _CapStats]:
@@ -339,7 +320,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     shuffled twice carrying an attached signature per row. At billions of
     docs the gate keeps the shuffled join."""
     rows_per_band = num_hashes // bands
-    sig = (fan_out(df, divisor=2)
+    sig = (fan_out(df)
            .select(F.col(id_col).alias("id"),
                    minhash_signature_udf(num_hashes, shingle_n)(
                        F.col(text_col)).alias("sig")))
@@ -535,12 +516,9 @@ def simhash_udf(shingle_n: int = 4):
     A Catalyst version (bit extraction via binary-string ops per gram per
     bit, ~64× gram-count string allocations per row) measured minutes at a
     few thousand docs; this is a handful of numpy passes."""
-    from pyspark.sql.functions import pandas_udf
-
     half = SIMHASH_BITS // 2
 
-    @pandas_udf("long")
-    def _sim(text: pd.Series) -> pd.Series:
+    def _sim(text: pa.Array) -> pa.Array:
         lens, flat, offsets = _ragged_grams(
             text, shingle_n, (_GRAM_BASE_1, _GRAM_BASE_2))
         out = np.zeros(len(lens), dtype=np.int64)
@@ -552,9 +530,9 @@ def simhash_udf(shingle_n: int = 4):
                                        offsets)
                 # majority vote: bit set iff ones*2 > gram count
                 out |= (ones * 2 > lens).astype(np.int64) << np.int64(i)
-        return pd.Series(out)
+        return pa.array(out, type=pa.int64())
 
-    return _sim
+    return F.arrow_udf(_sim, returnType=LongType())
 
 
 def simhash_pairs(df: DataFrame, text_col: str = "text",
@@ -582,7 +560,7 @@ def simhash_pairs(df: DataFrame, text_col: str = "text",
     cap (exact pigeonhole). The returned frame's `hot_bucket_observation`
     (None when uncapped) reports what the cap dropped."""
     members, df = exact_groups(df, F.md5(F.col(text_col)), id_col)
-    s = fan_out(df, divisor=2).select(
+    s = fan_out(df).select(
         F.col(id_col).alias("id"),
         simhash_udf()(F.col(text_col)).alias("sh"))
     n_blocks = SIMHASH_BITS // SIMHASH_BLOCK_BITS
@@ -724,14 +702,11 @@ def portable_grams_udf(shingle_n: int = 5):
     gram hashes — the EXACT gram sets `minhash_signature_udf` sketches
     (same normalization, same `_horner_grams` family), exposed as a
     column so a verify stage can compute true Jaccard on them."""
-    from pyspark.sql.functions import pandas_udf
+    def _g(text: pa.Array) -> pa.Array:
+        _, flat, offsets = _ragged_grams(text, shingle_n)
+        return _long_lists(np.append(offsets, flat.size), flat)
 
-    @pandas_udf("array<long>")
-    def _g(text: pd.Series) -> pd.Series:
-        return pd.Series([g.tolist() for g in
-                          _horner_grams(_norm_series(text), shingle_n)])
-
-    return _g
+    return F.arrow_udf(_g, returnType=ArrayType(LongType()))
 
 
 def exact_groups(df: DataFrame, key: Column,

@@ -1,7 +1,12 @@
-"""The one Arrow reader for vector kernels: a vector column scored
-against a driver-held constant matrix (query battery, hyperplanes,
-centroids, codebooks, sign matrix) runs as ONE numpy kernel per Arrow
-batch through `vector_udf`.
+"""Python-UDF stages. Every scalar Python UDF in the package is an
+`arrow_udf`, and `fan_out` sizes the stage that runs it.
+
+`fan_out` repartitions an input too small to give every core a task.
+It reads the optimized plan's size estimate, so it runs no job.
+
+A vector column scored against a driver-held constant matrix (query
+battery, hyperplanes, centroids, codebooks, sign matrix) runs as ONE
+numpy kernel per Arrow batch through `vector_udf`.
 
 `read_vectors` turns the Arrow `list<float>` column into a float64
 (n_valid, dim) matrix without a per-row Python loop (filter, flatten,
@@ -26,9 +31,41 @@ from typing import Callable
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import DataType
+
+
+def _input_bytes_estimate(df: DataFrame) -> int:
+    """Catalyst's size estimate of the optimized plan (file sources report
+    real on-disk bytes; unknown sources report defaultSizeInBytes ≈ 2^63,
+    which conservatively disables any small-input fast path)."""
+    try:
+        # py4j converts the scala BigInt to a Python int directly
+        return int(df._jdf.queryExecution().optimizedPlan()  # noqa: SLF001
+                     .stats().sizeInBytes())
+    except Exception:  # noqa: BLE001
+        return 1 << 62
+
+
+def fan_out(df: DataFrame) -> DataFrame:
+    """`df` repartitioned to the session's parallelism when it is too
+    small to give every core a task, else `df` unchanged.
+
+    A file scan splits at `spark.sql.files.maxPartitionBytes`, so an
+    input estimated under parallelism × that size scans as fewer tasks
+    than there are cores (one, for a one-file corpus), and a Python-UDF
+    stage over it runs on that many cores. The decision reads the
+    optimized plan's size estimate: no job, whatever the input's plan.
+    At production scale the input is larger and this is a no-op."""
+    spark = df.sparkSession
+    target = spark.sparkContext.defaultParallelism
+    split = (spark._jsparkSession.sessionState()  # noqa: SLF001
+             .conf().filesMaxPartitionBytes())
+    if _input_bytes_estimate(df) < target * split:
+        return df.repartition(target)
+    return df
 
 
 def read_vectors(v: pa.Array, dim: int) -> tuple[np.ndarray, np.ndarray]:

@@ -42,7 +42,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
-from logunifier_spark.operators.kernels import vector_udf
+from logunifier_spark.operators.kernels import fan_out, vector_udf
 
 
 def quantize(vec: Column, scale: int = 1000) -> Column:
@@ -107,11 +107,9 @@ def kmeans_centroids(corpus: DataFrame, k: int = 8, iters: int = 2,
     centroid literals; the update is posexplode -> groupBy (cluster, pos)
     -> sum/count (map-side combined to k*dim rows) -> driver floor-div.
     A cluster that captures no rows keeps its previous centroid."""
-    # fan_out: a one-file corpus scans as ONE task, serializing the
-    # per-iteration distance projections; a no-op once the input has >=
-    # session-parallelism partitions. Assignment is row-local and the
-    # update sums are integers, so the result is partitioning-invariant.
-    from logunifier_spark.operators.dedup import fan_out
+    # fan_out: a small corpus scans as fewer tasks than cores, serializing
+    # the per-iteration distance projections. Assignment is row-local and
+    # the update sums are integers, so the result is partitioning-invariant.
     q = fan_out(corpus).select(F.col(vec_col),
                                quantize(F.col(vec_col), scale).alias("_q"))
     cents = seed_centroids(corpus, k, id_col, vec_col, scale)
@@ -149,7 +147,6 @@ def kmeans_fixed_point(corpus: DataFrame, k: int = 8, iters: int = 2,
     cents = kmeans_centroids(corpus, k, iters, scale, id_col, vec_col)
     # fan_out: the Arrow UDF stage otherwise serializes onto one task
     # for a one-file corpus (same rationale as the training passes)
-    from logunifier_spark.operators.dedup import fan_out
     near_df = fan_out(corpus).select(
         F.col(id_col),
         assign_np_udf(cents, scale)(F.col(vec_col)).alias("_nc"))

@@ -9,7 +9,7 @@ silently treats them as different documents unless the corpus is
 canonicalized first, so NFC belongs at the FRONT of the funnel
 (curate.py), before any hashing.
 
-Engine shape: NFC itself is a pandas UDF over Arrow batches calling
+Engine shape: NFC itself is an `arrow_udf` over Arrow batches calling
 CPython's `unicodedata.normalize` (the interpreter's C implementation of
 UAX #15). There is no JVM-side NFC in Spark SQL's function set, and
 re-implementing the composition tables in SQL would be both slow and a
@@ -30,19 +30,21 @@ from __future__ import annotations
 
 import unicodedata
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import StringType
 
 from logunifier_spark.operators.textstats import ASCII_WS
 
 
-@pandas_udf("string")
-def nfc_udf(s: pd.Series) -> pd.Series:
-    """NFC-normalize a string series (nulls pass through)."""
-    return s.map(lambda x: unicodedata.normalize("NFC", x)
-                 if x is not None else None)
+def _nfc(s: pa.Array) -> pa.Array:
+    """NFC-normalize a string array (nulls pass through)."""
+    return pa.array([unicodedata.normalize("NFC", x) if x is not None
+                     else None for x in s.to_pylist()], type=s.type)
+
+
+nfc_udf = F.arrow_udf(_nfc, returnType=StringType())
 
 
 def normalize_text(df: DataFrame, text_col: str = "text",

@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
-from logunifier_spark.operators.kernels import vector_udf
+from logunifier_spark.operators.kernels import fan_out, vector_udf
 from logunifier_spark.operators.kmeans import quantize
 
 _LONGS = ArrayType(LongType())
@@ -98,7 +98,6 @@ def pq_codebooks(corpus: DataFrame, dim: int, m: int = 8, k: int = 16,
     d = dim // m
     full = _seed_full(corpus, k, scale, id_col, vec_col)
     books = [[fs[j * d:(j + 1) * d] for fs in full] for j in range(m)]
-    from logunifier_spark.operators.dedup import fan_out
     q = fan_out(corpus).select(F.col(vec_col),
                                quantize(F.col(vec_col), scale).alias("_q"))
     for _ in range(iters):

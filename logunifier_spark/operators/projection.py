@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
-from logunifier_spark.operators.kernels import vector_udf
+from logunifier_spark.operators.kernels import fan_out, vector_udf
 
 RP_MULT = 2_654_435_761
 RP_OFF = 12_345
@@ -71,7 +71,6 @@ def rp_project(emb: DataFrame, dim: int, r: int = 16,
     vector in long format — comp is the 0-based output component,
     val_fp the exact fixed-point int64 component, val = val_fp /
     2^scale_bits (exact double). Row-local map, zero shuffles."""
-    from logunifier_spark.operators.dedup import fan_out
     scale = float(1 << scale_bits)
     signs = rp_sign_matrix(dim, r)  # (r, dim)
 
@@ -80,7 +79,7 @@ def rp_project(emb: DataFrame, dim: int, r: int = 16,
         terms = np.floor(v[:, None, :] * signs[None, :, :] * scale)
         return terms.astype(np.int64).sum(axis=2)  # (n, r) exact int64
 
-    e = fan_out(emb, divisor=2).select(
+    e = fan_out(emb).select(
         F.col(id_col), vector_udf(_project, dim, ArrayType(LongType()))(
             F.col(vec_col)).alias("_proj"))
     return (e.select(id_col, F.posexplode("_proj").alias("comp", "val_fp"))

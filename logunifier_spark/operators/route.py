@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from logunifier_spark.session import per_context
+from logunifier_spark.session import observation_or, per_context
 
 DEFAULT_SALT_BUCKETS = 8
 
@@ -198,23 +198,12 @@ def write_sinks(df: DataFrame, base_path: str, mode: str = "overwrite",
        .partitionBy("sink", "route_partition")
        .format(file_format)
        .save(base_path))
-    try:
-        written = set(obs.get["sinks"])
-    except Exception as e:
-        # Spark 4.1 bug (minimal repro: observed write of an EMPTY
-        # DataFrame): a zero-row write schedules no task that executes
-        # the CollectMetrics node, Observation.getRow hands back a
-        # schemaless row, and PythonSQLUtils.toPyRow asserts. The write
-        # itself succeeded — recompute the sink set from df directly
-        # (normally the empty set; one column-pruned job). Listing the
-        # output instead would misreport earlier appends as ours. Catch
-        # ONLY that assert; a real failure must surface (ADVICE r4).
-        msg = str(e)
-        if not (type(e).__name__ == "Py4JJavaError"
-                and "toPyRow" in msg and "AssertionError" in msg):
-            raise
-        written = {r["sink"]
-                   for r in df.select("sink").distinct().collect()}
+    # A zero-row write runs no task that observes (observation_or); the
+    # write itself succeeded, so the sink set is recomputed from df
+    # (normally empty; one column-pruned job). Listing the output instead
+    # would misreport earlier appends as ours.
+    written = set(observation_or(obs, lambda: {"sinks": [
+        r["sink"] for r in df.select("sink").distinct().collect()]})["sinks"])
     listed = _list_sink_dirs(df.sparkSession, base_path)
     return {s: p for s, p in sorted(listed.items()) if s in written}
 

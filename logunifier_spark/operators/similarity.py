@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, IntegerType, LongType
 from pyspark.sql.window import Window
 
-from logunifier_spark.operators.kernels import vector_udf
+from logunifier_spark.operators.kernels import fan_out, vector_udf
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -113,7 +113,6 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     rule (NULL, wrong dimension, NULL or NaN element) get a NULL score
     array and are DROPPED from the output — not ranked last, as a NULL
     score in the rank window would be."""
-    from logunifier_spark.operators.dedup import fan_out
     qid_type = queries.schema[qid_col].dataType
     qrows = sorted(queries.select(qid_col, vec_col)
                           .where(F.col(qid_col).isNotNull() &
@@ -187,7 +186,6 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 10,
     """Approximate top-k: join on hyperplane buckets with 1-bit probing.
     Returns (qid, vec_id, score, rank) over the candidate set, scored by
     the `cosine` fold on the joined pairs."""
-    from logunifier_spark.operators.dedup import fan_out
     c = fan_out(corpus).select(
         F.col(id_col), F.col(vec_col).alias("_cv"),
         hyperplane_bucket(F.col(vec_col), dim, n_bits).alias("bucket"))
@@ -278,7 +276,6 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     nearest cells. The only shuffle in the plan is the cell join itself,
     keyed on cid — the corpus is touched once, never multiplied.
     Candidates are scored by the `cosine` fold on the joined pairs."""
-    from logunifier_spark.operators.dedup import fan_out
     cents = ivf_centroids(corpus, n_centroids, id_col, vec_col)
     if not cents:  # empty corpus: no cells; the exact path's empty frame
         return brute_force_topk(corpus, queries, k, id_col, vec_col, qid_col)
@@ -435,7 +432,6 @@ def embedding_neardup_pairs(emb: DataFrame, dim: int,
         bucket_pairs,
         exact_groups,
         expand_rep_pairs,
-        fan_out,
     )
 
     cos_ab = cosine(F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb"))

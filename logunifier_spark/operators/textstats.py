@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 # Canonical tokenization whitespace: an EXPLICIT ASCII class, identical
 # across the three regex engines that must agree for the value-hash gate —
-# Java regex (Spark native), Python re (pandas UDFs), RE2 (DuckDB oracles).
+# Java regex (Spark native), Python re (Arrow UDFs), RE2 (DuckDB oracles).
 # A bare `\s` is engine-specific: Java's is exactly this set, Python's is
 # Unicode-wide (matches NBSP etc.), RE2's lacks \x0B — so a document with
 # non-ASCII whitespace would tokenize differently per engine and silently

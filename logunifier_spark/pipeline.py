@@ -6,7 +6,7 @@ One declarative logical plan (SURVEY.md §3.4):
       → key-hash dedup (_dedup_turns)                  # M3 dedup window
       → pattern-key resolution (literal map, J1)
       → [optional] ANSI strip (P9)
-      → pandas-UDF parse (P2-P11, vectorized grok/logfmt)
+      → Arrow-UDF parse (P2-P11, vectorized grok/logfmt)
         + native from_json branch for native-ECS rows (P15)
       → envelope assembly (P1/P14/P16 analogs, exact fallback semantics)
       → validate-and-fix (P17, exact strings) + emoji markers (P10)

@@ -43,6 +43,26 @@ def per_context(fn):
     return memoized
 
 
+def observation_or(obs, recompute) -> dict:
+    """`obs.get`, or `recompute()` when the observed plan ran no task.
+
+    Spark 4.1 bug: when no task executes a CollectMetrics node (a
+    zero-row write, or AQE pruning the observed branch as empty),
+    `Observation.get` receives a schemaless row and
+    `PythonSQLUtils.toPyRow` asserts. Only that failure (a Py4JJavaError
+    naming `toPyRow` and `AssertionError`) falls back: any other failure
+    of the observed action (job abort, OOM, analysis error) must surface,
+    not be masked by a silent recompute."""
+    try:
+        return obs.get
+    except Exception as e:
+        msg = str(e)
+        if not (type(e).__name__ == "Py4JJavaError"
+                and "toPyRow" in msg and "AssertionError" in msg):
+            raise
+        return recompute()
+
+
 def ship_package(spark: SparkSession) -> str:
     """Make `logunifier_spark` importable on every executor regardless of the
     driver's cwd — the programmatic equivalent of `spark-submit --py-files`.

@@ -34,7 +34,7 @@ Go's runtime-specific error string, with level `fatal` (the unify()
 ecs-unparseable convention).
 
 All native from_json + column expressions; ts/level extraction is the
-shared pandas-UDF parse bank.
+shared Arrow-UDF parse bank.
 """
 
 from __future__ import annotations
@@ -120,7 +120,7 @@ def docker_to_ecs(df: DataFrame, json_col: str = "raw",
     })
     # ts/level via the live TsLevelMsg bank (see module docstring); keep the
     # UDF argument a plain projected column — struct-field expressions as
-    # pandas-UDF args break ExtractPythonUDFs
+    # Python-UDF args break ExtractPythonUDFs
     df = df.withColumn("_parsed",
                        parse_turns(F.col("_msg"), F.lit("TsLevelMsg")))
 

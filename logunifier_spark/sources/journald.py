@@ -16,7 +16,7 @@ Re-creates /root/reference/internal/streams/ingress/journald/journald.go:
     :190-275).
 
 Everything is from_json + native column expressions; the text parse itself
-is the shared pandas-UDF bank.
+is the shared Arrow-UDF bank.
 """
 
 from __future__ import annotations

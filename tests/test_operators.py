@@ -1908,3 +1908,97 @@ def test_winnow_fingerprints_long_doc_exact_decode(spark):
     assert got == want
     h40 = {h % (1 << 40) for h in hs}
     assert all(r["fp"] in h40 for r in rows)
+
+
+# ------------------------------------------- Python-UDF stages (kernels) ----
+
+def _jobs_in_group(spark, group, build):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "plan construction")
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_fan_out_over_collapsed_reps_runs_no_job(spark, docs):
+    """fan_out decides from the plan's size estimate: over the collapse's
+    reps (an aggregate and a semi-join, not a bare scan) it runs no job."""
+    from logunifier_spark.operators.dedup import exact_groups
+    from logunifier_spark.operators.kernels import fan_out
+    _, reps = exact_groups(docs, F.md5(F.col("text")), "doc_id")
+    out, jobs = _jobs_in_group(spark, "fan-out-reps", lambda: fan_out(reps))
+    assert jobs == []
+    assert sorted(r["doc_id"] for r in out.collect()) == [1, 3, 4, 5]
+
+
+def test_fan_out_sizes_from_plan(spark, docs, tmp_path):
+    """A small parquet input comes back with one partition per core; an
+    input past parallelism × the file split size comes back unchanged,
+    and neither decision runs a job."""
+    from logunifier_spark.operators.kernels import fan_out
+    path = str(tmp_path / "docs.parquet")
+    docs.coalesce(1).write.parquet(path)
+    small = spark.read.parquet(path)
+    assert small.rdd.getNumPartitions() == 1
+    out, jobs = _jobs_in_group(spark, "fan-out-small", lambda: fan_out(small))
+    assert jobs == []
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    big = spark.range(10**10)
+    out, jobs = _jobs_in_group(spark, "fan-out-big", lambda: fan_out(big))
+    assert jobs == [] and out is big
+
+
+HOSTILE_TEXTS = [None, "", "ab", "Ab  C", "\U0001d518\U0001d52b\U0001d526",
+                 "e\u0301 caf\u00e9 \U0001f600\U0001f600 x",
+                 "the quick brown fox jumps over the lazy dog"]
+
+
+def _expected_grams(texts, n, bases):
+    import pandas as pd
+
+    from logunifier_spark.operators.dedup import _horner_grams, _norm_series
+    return [[int(g) for g in gs]
+            for gs in _horner_grams(_norm_series(pd.Series(texts, dtype=object)),
+                                    n, bases)]
+
+
+def test_text_udfs_on_hostile_input(spark):
+    """The four text UDFs on NULL, empty, shorter-than-shingle, non-BMP
+    and combining-mark text, each value recomputed in plain Python from
+    the gram family (or `unicodedata`) on the same strings, plus an empty
+    frame through each. NULL text hashes as "" (one zero-padded gram)."""
+    import unicodedata
+
+    from logunifier_spark.operators.dedup import (
+        _GRAM_BASE_1, _GRAM_BASE_2, _MINHASH_P, SIMHASH_BITS,
+        minhash_signature_udf, portable_grams_udf, simhash_udf)
+    from logunifier_spark.operators.normalize import nfc_udf
+    k = 8
+    df = spark.createDataFrame(list(enumerate(HOSTILE_TEXTS)),
+                               "i int, text string")
+    udfs = {"sig": minhash_signature_udf(k, 5), "sh": simhash_udf(4),
+            "grams": portable_grams_udf(5), "nfc": nfc_udf}
+    rows = sorted(df.select("i", *[u(F.col("text")).alias(c)
+                                   for c, u in udfs.items()]).collect())
+    grams5 = _expected_grams(HOSTILE_TEXTS, 5, (_GRAM_BASE_1,))
+    pairs4 = _expected_grams(HOSTILE_TEXTS, 4, (_GRAM_BASE_1, _GRAM_BASE_2))
+    assert [r["i"] for r in rows] == list(range(len(HOSTILE_TEXTS)))
+    for r, text, g5, g4 in zip(rows, HOSTILE_TEXTS, grams5, pairs4):
+        assert r["grams"] == g5
+        assert r["sig"] == [min((g * (2 * i + 1) + ((i + 7) * 1_000_003)
+                                 % _MINHASH_P) % _MINHASH_P for g in g5)
+                            for i in range(k)]
+        half = SIMHASH_BITS // 2
+        want = 0
+        for i in range(SIMHASH_BITS):
+            src = 31 + i if i < half else i - half
+            if 2 * sum((g >> src) & 1 for g in g4) > len(g4):
+                want |= 1 << i
+        assert r["sh"] == want
+        assert r["nfc"] == (None if text is None
+                            else unicodedata.normalize("NFC", text))
+    empty = spark.createDataFrame([], "text string")
+    assert empty.select(*[u(F.col("text")) for u in udfs.values()]).collect() == []
