@@ -575,7 +575,8 @@ def q_kmv_users(spark, sf_dir):
     engine-internal sketch no SQL oracle can reproduce), the KMV
     estimate is a pure deterministic function of the value set — the
     DuckDB oracle recomputes it with a single global ranking while the
-    operator uses a salted two-level top-k, and the results must agree
+    operator ranks per event type through grouped_top_k (a partial
+    WindowGroupLimit before the shuffle), and the results must agree
     bit-for-bit."""
     from logunifier_spark.operators.stats import kmv_distinct
     e = _load(spark, sf_dir, "events")
@@ -675,10 +676,10 @@ def q_stratified_sample(spark, sf_dir):
     """Exact per-group quota sampling
     (operators/sampling.py::stratified_sample): the 20 smallest
     portable-hash docs per language — deterministic under any
-    partitioning (a rate gate can't hit an exact count). Salted
-    two-level top-k bounds every sort partition at ~group/fan rows
-    (same survival argument as kmv_distinct); the oracle uses one
-    global window — a different evaluation strategy."""
+    partitioning (a rate gate can't hit an exact count). The quota is
+    grouped_top_k's window filter, whose partial WindowGroupLimit keeps
+    20 rows per language in every map partition before the shuffle; the
+    oracle uses one global window — a different evaluation strategy."""
     from logunifier_spark.operators.sampling import stratified_sample
     d = _load(spark, sf_dir, "documents")
     s = stratified_sample(d, "lang", n=20)
@@ -713,7 +714,7 @@ def q_skew_report(spark, sf_dir):
     salted_join (north-rule skew lever). Key synthesized half-hot on
     purpose; shares in exact integer ppm (rows*1e6 DIV total — float
     shares drift between engines). One count aggregate to the distinct
-    key frame + the salted two-level top-k."""
+    key frame + grouped_top_k's global form (TakeOrderedAndProject)."""
     from logunifier_spark.operators.join import skew_report
     e = _load(spark, sf_dir, "events")
     key = (F.when(F.pmod(F.col("event_id"), F.lit(2)) == 0, F.lit("hot"))
@@ -801,9 +802,11 @@ def q_heavy_hitters(spark, sf_dir):
     """Per-language heavy-hitter terms
     (operators/stats.py::grouped_top_k over the token-count frame): the
     vocabulary-pruning / stopword-discovery rollup. One token-stream
-    shuffle with map-side combine down to (lang, term) counts, then the
-    skew-safe salted two-level top-k (no single sort partition holds a
-    language's whole vocabulary); oracle = one global window."""
+    shuffle with map-side combine down to (lang, term) counts, then a
+    row_number window filter whose partial WindowGroupLimit keeps 8
+    terms per language in every map partition before the shuffle (no
+    sort ever holds a language's whole vocabulary); oracle = one global
+    window."""
     from logunifier_spark.operators.stats import grouped_top_k
     from logunifier_spark.operators.textstats import ASCII_WS
     from logunifier_spark.operators.tfidf import TERM_RE
@@ -913,8 +916,8 @@ def q_ann_ivfpq(spark, sf_dir):
 def q_inverted_index(spark, sf_dir):
     """Inverted-index build (operators/bm25.py::inverted_index): one
     (term, doc) pass, TRUE df before the cap, posting lists capped at
-    the 30 smallest ids via the salted two-level top-k (a stopword's
-    full list is the corpus itself), serialized as a comma-joined
+    the 30 smallest ids via grouped_top_k (a stopword's full list is
+    the corpus itself), serialized as a comma-joined
     string for cross-engine hashability."""
     from logunifier_spark.operators.bm25 import inverted_index
     d = _load(spark, sf_dir, "documents")
@@ -1027,8 +1030,8 @@ def q_weighted_sample(spark, sf_dir):
     (operators/sampling.py::weighted_sample, Efraimidis-Spirakis): the
     50 docs with the largest ln(u)/weight, weight = n_chars — inclusion
     proportional to length, keep-set a pure function of (id, weight).
-    Salted two-level top-k; oracle = one global ranking with the
-    bit-identical key expression."""
+    grouped_top_k's global form (TakeOrderedAndProject); oracle = one
+    global ranking with the bit-identical key expression."""
     from logunifier_spark.operators.sampling import weighted_sample
     d = _load(spark, sf_dir, "documents")
     out = weighted_sample(d, n=50, weight_col="n_chars")
@@ -2843,7 +2846,7 @@ def oracle_sql() -> dict[str, str]:
             FROM r WHERE rank <= 15
         """,
         # bit-identical E-S key: exact ints -> one division -> ln ->
-        # one division; global window vs the operator's salted top-k
+        # one division; global window vs the operator's TakeOrdered top-k
         "weighted_sample": """
             WITH d AS (
               SELECT doc_id, source, n_chars,
@@ -3132,7 +3135,7 @@ def oracle_sql() -> dict[str, str]:
             FROM w GROUP BY 1
         """,
         # portable-hash mirror of sampling._portable_hash (salt 0);
-        # oracle = one global window vs the operator's salted top-k
+        # oracle = one global window vs the operator's window-filter top-k
         "stratified_sample": """
             WITH h AS (
               SELECT doc_id, lang, source, n_chars,

@@ -853,10 +853,9 @@ FROM agg
 def kmv_users_sql(k: int = 64) -> str:
     """(event_type, est_distinct, exact) of stats.kmv_distinct over
     events.user_id — same 48-bit md5-prefix hash (bit-identical in both
-    engines), but a single GLOBAL top-k ranking per group instead of the
-    operator's salted two-level scheme: an independent evaluation
-    strategy whose result must agree exactly because the estimate is a
-    pure function of the distinct hash set."""
+    engines), ranked per group in DuckDB: the result must agree exactly
+    with the operator's because the estimate is a pure function of the
+    distinct hash set."""
     numer = (k - 1) * (1 << 48)
     return f"""
 WITH h AS (

@@ -35,9 +35,10 @@ correctly-rounded division of two exactly-representable integers.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from logunifier_spark.operators.stats import grouped_top_k
 from logunifier_spark.operators.textstats import ASCII_WS
 from logunifier_spark.operators.tfidf import TERM_RE
 
@@ -107,9 +108,8 @@ def bm25_topk(docs: DataFrame, queries: list[tuple[str, str]],
                   .select("query_id", F.col(id_col), contrib.alias("_c"))
                   .groupBy("query_id", id_col)
                   .agg(F.sum("_c").alias("_s")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("_s"), F.asc(id_col))
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .where(F.col("rank") <= top_k)
+    return (grouped_top_k(scored, "query_id", "_s", k=top_k,
+                          tiebreak=[id_col])
                   .select("query_id", F.col(id_col), "rank",
                           F.round(F.col("_s").cast("double")
                                   / F.lit(float(BM25_QUANT)),
@@ -131,19 +131,19 @@ def inverted_index(docs: DataFrame, id_col: str = "doc_id",
     aggregation buffer for one key, and every real engine stores such
     terms differently (skip lists / bitmaps) or stops them entirely. df
     is always the TRUE document frequency (computed before the cap).
-    The cap runs through the salted two-level top-k (stats.grouped_top_k
-    with ascending ids via rank on -id... here directly: level-1 window
-    per (term, salt) bounds any sort partition at ~df/fan rows).
+    The cap is `stats.grouped_top_k` ascending on the id: its partial
+    WindowGroupLimit keeps max_postings ids per term in every map
+    partition before the shuffle, so a stopword never reaches one sort
+    whole (for max_postings ≤ 1,000, Spark's
+    windowGroupLimitThreshold default).
 
     Postings serialize as a string, not array<bigint>: a string column
     is directly hashable/comparable across engines and keeps this
     oracle-able; consumers split on ','."""
-    from logunifier_spark.operators.stats import grouped_top_k
     d = (_terms(docs, id_col, text_col)
          .groupBy("term", id_col).agg(F.count("*").alias("tf")))
     d = d.localCheckpoint(eager=False)
     dfreq = d.groupBy("term").agg(F.count("*").alias("df"))
-    # smallest max_postings ids per term via the shared salted top-k
     kept = grouped_top_k(d, "term", id_col, k=max_postings,
                          ascending=True).drop("rank")
     posts = (kept.groupBy("term")

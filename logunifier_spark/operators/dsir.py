@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from logunifier_spark.operators.stats import kmv_hash
+from logunifier_spark.operators.stats import grouped_top_k, kmv_hash
 
 QUANT = 10**6
 
@@ -101,16 +101,11 @@ def dsir_topk(raw: DataFrame, target: DataFrame, k: int,
               text_col: str = "text", id_col: str = "doc_id",
               buckets: int = 4096) -> DataFrame:
     """The k most target-like raw documents: (id_col, n_bigrams, logw,
-    rank 1..k), ties broken by id. orderBy().limit(k) plans as
-    TakeOrdered — a per-partition heap + driver merge, no global sort
-    partition at any corpus size."""
-    from pyspark.sql import Window
+    rank 1..k), ties broken by id: the global form of
+    `stats.grouped_top_k` (TakeOrdered — a per-partition heap + driver
+    merge, no global sort partition at any corpus size)."""
     w = dsir_logweights(raw, target, text_col, id_col, buckets)
-    top = w.orderBy(F.desc("logw"), F.asc(id_col)).limit(k)
-    # bounded on purpose: rank runs AFTER .limit(k), <= k rows
-    rank = F.row_number().over(
-        Window.orderBy(F.desc("logw"), F.asc(id_col)))
-    return top.withColumn("rank", rank)
+    return grouped_top_k(w, [], "logw", k=k, tiebreak=[id_col])
 
 
 def source_drift(docs: DataFrame, group_col: str = "source",

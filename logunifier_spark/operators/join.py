@@ -21,8 +21,10 @@ shuffle retries non-idempotent."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from logunifier_spark.operators.stats import grouped_top_k
 
 DEFAULT_JOIN_SALTS = 16
 
@@ -77,8 +79,8 @@ def salted_join(big: DataFrame, dim: DataFrame, on: list[str] | str,
     return b.join(d, keys + ["_join_salt"], how).drop("_join_salt")
 
 
-def skew_report(df: DataFrame, keys: list[str] | str, top: int = 10,
-                fan: int = 16) -> DataFrame:
+def skew_report(df: DataFrame, keys: list[str] | str,
+                top: int = 10) -> DataFrame:
     """Join/shuffle-key skew diagnostics: the `top` hottest key values
     with (keys..., rows BIGINT, share_ppm BIGINT, rank INT) — share_ppm
     is the key's parts-per-million of total rows in exact integer math
@@ -89,27 +91,16 @@ def skew_report(df: DataFrame, keys: list[str] | str, top: int = 10,
     is the right plan; flat shares mean plain hash/AQE is fine.
 
     Scale: one map-side-combinable count aggregate reduces the input to
-    the distinct-key frame; the top-k survives the salted two-level
-    ranking (stats.kmv_distinct's survival argument — level 1 ranks
-    within (hash-of-key mod fan) so no sort partition holds more than
-    ~distinct/fan key rows), and the scalar total rides as a driver
-    literal from the same pass (one extra metadata-cheap agg job, no
-    second scan of the raw table)."""
+    the distinct-key frame; the top keys come from the global form of
+    `stats.grouped_top_k` (TakeOrderedAndProject: a per-partition heap,
+    no shuffle), and the scalar total rides as a driver literal from the
+    same pass (one extra metadata-cheap agg job, no second scan of the
+    raw table)."""
     keys = [keys] if isinstance(keys, str) else list(keys)
     counts = df.groupBy(*keys).agg(F.count("*").alias("rows"))
     counts = counts.localCheckpoint(eager=False)
     total = counts.agg(F.sum("rows")).collect()[0][0] or 0
-    salt = F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(fan))
-    w1 = (Window.partitionBy(salt).orderBy(F.desc("rows"),
-                                           *[F.asc(k) for k in keys]))
-    lvl1 = (counts.withColumn("_rn", F.row_number().over(w1))
-                  .where(F.col("_rn") <= top).drop("_rn"))
-    # unpartitioned on purpose (WindowExec warns): level 1 already pruned
-    # the input to <= fan*top rows, so this global rank is a one-task sort
-    # of a few hundred rows — bounded at any input scale
-    w2 = Window.orderBy(F.desc("rows"), *[F.asc(k) for k in keys])
-    return (lvl1.withColumn("rank", F.row_number().over(w2))
-                .where(F.col("rank") <= top)
+    return (grouped_top_k(counts, [], "rows", k=top, tiebreak=keys)
                 .select(*keys, "rows",
                         # integer DIV: '/' is double division and
                         # double->bigint CAST rounds in DuckDB but

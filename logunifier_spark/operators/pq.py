@@ -37,12 +37,13 @@ one tiny shuffle, exactly like kmeans.py, but m models at once.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
 from logunifier_spark.operators.kernels import fan_out, vector_udf
 from logunifier_spark.operators.kmeans import quantize
+from logunifier_spark.operators.stats import grouped_top_k
 
 _LONGS = ArrayType(LongType())
 
@@ -255,6 +256,5 @@ def ivfpq_topk(corpus: DataFrame, queries: DataFrame, dim: int,
                for j in range(m)), F.lit(0).cast("long"))
     scored = cand.select(F.col(qid_col), F.col(id_col),
                          adc.alias("adc"))
-    w = Window.partitionBy(qid_col).orderBy(F.asc("adc"), F.asc(id_col))
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .where(F.col("rank") <= topk))
+    return grouped_top_k(scored, qid_col, "adc", k=topk, tiebreak=[id_col],
+                         ascending=True)

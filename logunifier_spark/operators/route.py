@@ -7,7 +7,7 @@ deterministic hash of (stream_key, conv_id, salt) and write one table per
 sink.
 
 Skew design (north-rule requirement): hot conversations are spread across
-`salt_buckets` shuffle partitions via `pmod(xxhash64(turn_idx), K)` — a pure
+SALT_BUCKETS shuffle partitions via `pmod(xxhash64(turn_idx), K)` — a pure
 column expression, so the partitioner is deterministic and reproducible
 across runs and cluster sizes. At 10^12 turns a single hot conv_id would
 otherwise pin a whole executor; the salt bounds any conversation's share of
@@ -22,22 +22,22 @@ from pyspark.sql import functions as F
 
 from logunifier_spark.session import observation_or, per_context
 
-DEFAULT_SALT_BUCKETS = 8
+SALT_BUCKETS = 8
+ROUTE_PARTITIONS = 32
 
 
-def salt_column(turn_idx: Column, buckets: int = DEFAULT_SALT_BUCKETS) -> Column:
-    return F.pmod(F.xxhash64(turn_idx), F.lit(buckets))
+def salt_column(turn_idx: Column) -> Column:
+    return F.pmod(F.xxhash64(turn_idx), F.lit(SALT_BUCKETS))
 
 
-def route_partition(stream_key: Column, conv_id: Column, salt: Column,
-                    n_partitions: int) -> Column:
+def route_partition(stream_key: Column, conv_id: Column,
+                    salt: Column) -> Column:
     """Deterministic route partition id (stable across runs/cluster sizes)."""
-    return F.pmod(F.xxhash64(stream_key, conv_id, salt), F.lit(n_partitions))
+    return F.pmod(F.xxhash64(stream_key, conv_id, salt),
+                  F.lit(ROUTE_PARTITIONS))
 
 
-def with_routing(df: DataFrame, n_partitions: int = 32,
-                 salt_buckets: int = DEFAULT_SALT_BUCKETS,
-                 tenant: bool = False) -> DataFrame:
+def with_routing(df: DataFrame, tenant: bool = False) -> DataFrame:
     """Attach salt + route_partition columns (expects stream_key, conv_id,
     turn_idx present).
 
@@ -47,17 +47,16 @@ def with_routing(df: DataFrame, n_partitions: int = 32,
     here the tenant becomes a first-class partition key — pass it to
     write_sinks' partitionBy (or a per-tenant Iceberg table) so one
     tenant's volume can never skew another's files."""
-    return df.withColumns(_routing_columns(n_partitions, salt_buckets, tenant))
+    return df.withColumns(_routing_columns(tenant))
 
 
 @per_context
-def _routing_columns(n_partitions: int, salt_buckets: int,
-                     tenant: bool) -> dict[str, Column]:
-    salt = salt_column(F.col("turn_idx"), salt_buckets)
+def _routing_columns(tenant: bool) -> dict[str, Column]:
+    salt = salt_column(F.col("turn_idx"))
     cols = {
         "salt": salt,
-        "route_partition": route_partition(F.col("stream_key"), F.col("conv_id"),
-                                           salt, n_partitions),
+        "route_partition": route_partition(F.col("stream_key"),
+                                           F.col("conv_id"), salt),
     }
     if tenant:
         cols["tenant"] = F.coalesce(F.col("org_name"), F.lit(""))

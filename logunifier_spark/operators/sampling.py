@@ -16,6 +16,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from logunifier_spark.operators.stats import grouped_top_k
+
 # odd multiplier -> bijective on [0, 2^31); the id's hash is uniform-ish
 # and engine-portable (no xxhash64 in DuckDB). THE canonical copy of the
 # portable-hash constant — similarity.py imports it.
@@ -69,30 +71,22 @@ def mixture_sample(df: DataFrame, rates: dict[str, float],
 
 
 def stratified_sample(df: DataFrame, keys: list[str] | str, n: int,
-                      id_col: str = "doc_id", salt: int = 0,
-                      fan: int = 16) -> DataFrame:
+                      id_col: str = "doc_id", salt: int = 0) -> DataFrame:
     """Exact per-group quota sampling: for each group of `keys`, keep
     the `n` rows with the smallest (portable_hash(id, salt), id) —
     deterministic across runs, partitionings, and cluster sizes (rate
     gates can't hit an exact count; this is the balanced-evaluation-set
     / per-language-quota shape). Groups smaller than n keep every row.
 
-    Scale: the naive window (one sort partition per group) serializes a
-    hot group, so the quota survives the same SALTED two-level top-k as
-    kmv_distinct — level 1 ranks within (keys, hash mod fan), bounding
-    every sort partition at ~group/fan rows, and each of the global n
-    smallest is provably among its own salt bucket's n smallest; level 2
-    ranks the <= fan*n survivors. Raise `fan` for billion-row groups."""
+    Scale: one projection and `stats.grouped_top_k`, whose partial
+    WindowGroupLimit keeps n rows per group in every map partition
+    before the shuffle, so a hot group never reaches one sort whole."""
     keys = [keys] if isinstance(keys, str) else list(keys)
     off = (salt * 0x9E3779B1) % _MOD
     keyed = df.withColumn("_h", _portable_hash(F.col(id_col), off))
-    w1 = (Window.partitionBy(*keys, F.pmod(F.col("_h"), F.lit(fan)))
-                .orderBy("_h", id_col))
-    lvl1 = (keyed.withColumn("_rn", F.row_number().over(w1))
-                 .where(F.col("_rn") <= n).drop("_rn"))
-    w2 = Window.partitionBy(*keys).orderBy("_h", id_col)
-    return (lvl1.withColumn("_rn", F.row_number().over(w2))
-                .where(F.col("_rn") <= n).drop("_rn", "_h"))
+    return (grouped_top_k(keyed, keys, "_h", k=n, tiebreak=[id_col],
+                          ascending=True)
+            .drop("rank", "_h"))
 
 
 def epoch_shuffle(df: DataFrame, id_col: str = "doc_id", epoch: int = 0,
@@ -117,12 +111,15 @@ def epoch_shuffle(df: DataFrame, id_col: str = "doc_id", epoch: int = 0,
       - the hash is uniform on [0, 2^31), so range buckets are balanced
         without sampling (no range-partitioner scan like orderBy runs).
     The OUTPUT is independent of n_shards (it only sets the parallelism
-    of the sort), so the default adapts to the input scan — unlike
+    of the sort), so the default adapts to the cluster
+    (defaultParallelism, at least 64) — unlike
     pack_sequences, where shard identity is part of the result.
 
     Returns (id, pos), pos BIGINT in [0, n_rows)."""
     if n_shards is None:
-        n_shards = max(64, df.rdd.getNumPartitions())
+        # read from the context, not df.rdd: getNumPartitions runs the
+        # input's AQE stages while the plan is built
+        n_shards = max(64, df.sparkSession.sparkContext.defaultParallelism)
     off = (epoch * 0x9E3779B1) % _MOD
     h = _portable_hash(F.col(id_col), off)
     width = -(-_MOD // n_shards)  # ceil; double-div floor below is exact
@@ -238,8 +235,7 @@ def mixture_weights(df: DataFrame, source_col: str = "source",
 
 
 def weighted_sample(df: DataFrame, n: int, weight_col: str,
-                    id_col: str = "doc_id", salt: int = 0,
-                    fan: int = 16) -> DataFrame:
+                    id_col: str = "doc_id", salt: int = 0) -> DataFrame:
     """Deterministic weighted sampling WITHOUT replacement
     (Efraimidis-Spirakis 2006): keep the n rows with the largest
     ln(u)/w, where u = (portable_hash(id, salt)+1) / (2^31+1) in (0,1)
@@ -258,10 +254,8 @@ def weighted_sample(df: DataFrame, n: int, weight_col: str,
     the key is bit-identical on any engine. Rows with null/non-positive
     weight are excluded (their key is undefined).
 
-    Scale: pure projection + the salted two-level top-k (no single
-    sort partition holds the corpus; same survival argument as
-    stratified_sample, pointed at a DESC ranking)."""
-    from logunifier_spark.operators.stats import grouped_top_k
+    Scale: pure projection + the global form of `stats.grouped_top_k`
+    (TakeOrderedAndProject: a per-partition heap of n rows, no shuffle)."""
     off = (salt * 0x9E3779B1) % _MOD
     u = ((_portable_hash(F.col(id_col), off) + F.lit(1)).cast("double")
          / F.lit(float(_MOD + 1)))
@@ -269,9 +263,7 @@ def weighted_sample(df: DataFrame, n: int, weight_col: str,
     d = (df.where(F.col(weight_col).isNotNull()
                   & (F.col(weight_col).cast("double") > 0))
            .withColumn("_k", key))
-    # global (keys=[]) salted top-k — the one shared implementation of
-    # the two-level survival argument (stats.grouped_top_k)
-    return (grouped_top_k(d, [], "_k", k=n, tiebreak=[id_col], fan=fan)
+    return (grouped_top_k(d, [], "_k", k=n, tiebreak=[id_col])
             .drop("rank", "_k"))
 
 

@@ -32,9 +32,9 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, IntegerType, LongType
-from pyspark.sql.window import Window
 
 from logunifier_spark.operators.kernels import fan_out, vector_udf
+from logunifier_spark.operators.stats import grouped_top_k
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -142,9 +142,7 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
                .select(F.element_at(qid_arr, F.col("_p") + 1)
                         .cast(qid_type).alias(qid_col),
                        F.col(id_col), F.col("score")))
-    w = Window.partitionBy(qid_col).orderBy(F.desc("score"), F.asc(id_col))
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .where(F.col("rank") <= k))
+    return grouped_top_k(scored, qid_col, "score", k=k, tiebreak=[id_col])
 
 
 # --------------------------------------------------- random-hyperplane LSH --
@@ -199,10 +197,8 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 10,
     scored = (c.join(q, on="bucket")
                 .select(qid_col, id_col,
                         cosine(F.col("_cv"), F.col("_qv")).alias("score")))
-    w = Window.partitionBy(qid_col).orderBy(F.desc("score"), F.asc(id_col))
-    return (scored.dropDuplicates([qid_col, id_col])
-                  .withColumn("rank", F.row_number().over(w))
-                  .where(F.col("rank") <= k))
+    return grouped_top_k(scored.dropDuplicates([qid_col, id_col]), qid_col,
+                         "score", k=k, tiebreak=[id_col])
 
 
 # ------------------------------------------------------------------- IVF ---
@@ -291,9 +287,7 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     scored = (assigned.join(F.broadcast(q), on="cid")
                       .select(qid_col, id_col,
                               cosine(F.col("_cv"), F.col("_qv")).alias("score")))
-    w = Window.partitionBy(qid_col).orderBy(F.desc("score"), F.asc(id_col))
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .where(F.col("rank") <= k))
+    return grouped_top_k(scored, qid_col, "score", k=k, tiebreak=[id_col])
 
 
 # ------------------------------------------------------- index evaluation --

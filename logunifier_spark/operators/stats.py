@@ -212,7 +212,7 @@ def kmv_hash(col: Column) -> Column:
 
 
 def kmv_distinct(df: DataFrame, keys: list[str] | str, col: str,
-                 k: int = 128, fan: int = 16) -> DataFrame:
+                 k: int = 128) -> DataFrame:
     """Per-`keys` distinct-count estimate of `col` via a KMV sketch:
     (keys…, est_distinct BIGINT, exact BOOLEAN). `exact` is true when
     the group had fewer than k distinct hashes (the returned value is
@@ -220,16 +220,13 @@ def kmv_distinct(df: DataFrame, keys: list[str] | str, col: str,
     are absent.
 
     Scale shape: one shuffle produces the distinct (keys, hash) frame
-    (map-side partial distinct); the k smallest survive a SALTED
-    two-level top-k — level 1 ranks within (keys, hash mod fan), so no
-    single sort partition ever holds more than ~distinct/fan rows of a
-    hot group, and the global top-k provably survives (each of the k
-    smallest is among its own salt bucket's k smallest); level 2 ranks
-    the ≤ fan·k survivors per group. Raise `fan` when single groups
-    hold billions of distinct values. The final reduction is one hash
-    aggregate; the (k-1)·M numerator stays < 2^63 for k ≤ 2^14, and
-    h_k ≥ k-1 ≥ 1 (distinct non-negative hashes), so the integer
-    division is safe."""
+    (map-side partial distinct); the k smallest hashes per group come
+    from `grouped_top_k`, whose partial WindowGroupLimit prunes every
+    map partition to k rows per group before the second shuffle, so a
+    hot group ships at most k rows per partition. The final reduction
+    is one hash aggregate; the (k-1)·M numerator stays < 2^63 for
+    k ≤ 2^14, and h_k ≥ k-1 ≥ 1 (distinct non-negative hashes), so the
+    integer division is safe."""
     keys = [keys] if isinstance(keys, str) else list(keys)
     if not (2 <= k <= 1 << 14):
         raise ValueError(f"k must be in [2, 16384], got {k}")
@@ -241,17 +238,10 @@ def kmv_distinct(df: DataFrame, keys: list[str] | str, col: str,
     d = (df.where(F.col(col).isNotNull())
            .select(*keys, kmv_hash(F.col(col)).alias("_h"))
            .distinct())
-    w1 = (Window.partitionBy(*keys, F.pmod(F.col("_h"), F.lit(fan)))
-                .orderBy("_h"))
-    lvl1 = d.withColumn("_rn", F.row_number().over(w1)) \
-            .where(F.col("_rn") <= k).drop("_rn")
-    w2 = Window.partitionBy(*keys).orderBy("_h")
-    lvl2 = lvl1.withColumn("_rn", F.row_number().over(w2)) \
-               .where(F.col("_rn") <= k)
-    agg = (lvl2.groupBy(*keys)
-               .agg(F.count("*").alias("_n"),
-                    F.max(F.when(F.col("_rn") == k, F.col("_h")))
-                     .alias("_hk")))
+    agg = (grouped_top_k(d, keys, "_h", k=k, ascending=True)
+           .groupBy(*keys)
+           .agg(F.count("*").alias("_n"),
+                F.max(F.when(F.col("rank") == k, F.col("_h"))).alias("_hk")))
     numer = (k - 1) * KMV_SPACE
     est = F.when(F.col("_n") < k, F.col("_n")) \
            .otherwise(F.expr(f"CAST({numer} DIV _hk AS BIGINT)"))
@@ -295,30 +285,35 @@ def group_histogram(df: DataFrame, keys: list[str] | str, col: str,
 def grouped_top_k(df: DataFrame, keys: list[str] | str,
                   order_col: str, k: int = 10,
                   tiebreak: list[str] | None = None,
-                  fan: int = 16, ascending: bool = False) -> DataFrame:
+                  ascending: bool = False) -> DataFrame:
     """Per-group top-k rows by `order_col` DESC (ASC with
-    `ascending=True` — e.g. smallest ids/keys; keys=[] gives a GLOBAL
-    top-k whose level-2 window runs over <= fan*k rows only; ties
-    broken by
-    `tiebreak` ascending — pass columns forming a total order for a
-    deterministic result), with `rank` added. The skew-safe grouped
-    top-k: level 1 ranks within (keys, xxhash64(order+tiebreak) mod fan)
-    so no single sort partition holds a hot group's full row set; each
-    true top-k row is in its own salt bucket's top-k, so level 2 over
-    the <= fan*k survivors is exact (kmv_distinct's survival argument,
-    pointed at a DESC ranking)."""
+    `ascending=True`), ties broken by `tiebreak` ascending (pass columns
+    that complete a total order for a deterministic result), with
+    `rank` INT 1..k added. The one top-k of `operators/`.
+
+    Grouped (`keys` non-empty): a `row_number() <= k` window filter.
+    Spark plans it as WindowGroupLimit Partial → Exchange →
+    WindowGroupLimit Final: every map partition keeps only its top k
+    per group before the shuffle, so a hot group ships at most k rows
+    per map partition, in one shuffle. The partial limit fires only for
+    k ≤ spark.sql.optimizer.windowGroupLimitThreshold (1,000 by
+    default); above it a group is sorted whole. Program callers pass
+    k ≤ 64.
+
+    `keys=[]` (one global top-k): orderBy().limit(k) plans as
+    TakeOrderedAndProject at any k (a per-partition heap and a merge,
+    no shuffle), and `rank` numbers the ≤ k rows it returns."""
     keys = [keys] if isinstance(keys, str) else list(keys)
-    tiebreak = list(tiebreak or [])
     head = F.asc(order_col) if ascending else F.desc(order_col)
-    order = [head] + [F.asc(c) for c in tiebreak]
-    salt = F.pmod(F.xxhash64(F.col(order_col),
-                             *[F.col(c) for c in tiebreak]), F.lit(fan))
-    w1 = Window.partitionBy(*keys, salt).orderBy(*order)
-    lvl1 = (df.withColumn("_rn", F.row_number().over(w1))
-              .where(F.col("_rn") <= k).drop("_rn"))
-    w2 = Window.partitionBy(*keys).orderBy(*order)
-    return (lvl1.withColumn("rank", F.row_number().over(w2))
-                .where(F.col("rank") <= k))
+    order = [head] + [F.asc(c) for c in tiebreak or []]
+    if not keys:
+        # unpartitioned on purpose (WindowExec warns): it sees <= k rows
+        return (df.orderBy(*order).limit(k)
+                  .withColumn("rank",
+                              F.row_number().over(Window.orderBy(*order))))
+    w = Window.partitionBy(*keys).orderBy(*order)
+    return (df.withColumn("rank", F.row_number().over(w))
+              .where(F.col("rank") <= k))
 
 
 def range_bounds(df: DataFrame, col: str, parts: int,

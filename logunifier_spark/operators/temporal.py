@@ -49,6 +49,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampNTZType, TimestampType
 
+from logunifier_spark.operators.stats import grouped_top_k
+
 _SIDE = "_asof_side"
 _PAYLOAD = "_asof_payload"
 
@@ -291,12 +293,4 @@ def session_paths(df: DataFrame, key: list[str] | str,
                   F.slice(F.transform(collected, lambda e: e["s"]),
                           1, max_len), ">").alias("path")))
     counts = paths.groupBy("path").agg(F.count("*").alias("n_sessions"))
-    # TakeOrdered bounds the global top-k (no full sort partition);
-    # the rank window then runs over <= k rows only — an unpartitioned
-    # window over the full distinct-path frame would move it all to one
-    # task
-    top = counts.orderBy(F.desc("n_sessions"), F.asc("path")).limit(k)
-    # unpartitioned on purpose (WindowExec warns): runs AFTER .limit(k),
-    # so the one-task sort holds <= k rows — bounded at any input scale
-    w = Window.orderBy(F.desc("n_sessions"), F.asc("path"))
-    return top.withColumn("rank", F.row_number().over(w))
+    return grouped_top_k(counts, [], "n_sessions", k=k, tiebreak=["path"])

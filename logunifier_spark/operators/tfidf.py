@@ -35,8 +35,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
+from logunifier_spark.operators.stats import grouped_top_k
 from logunifier_spark.operators.textstats import ASCII_WS
 
 TERM_RE = "^[a-z]{2,}$"
@@ -71,9 +71,7 @@ def tfidf_top_terms(docs: DataFrame, text_col: str = "text",
                     F.col("tf") * F.log(F.lit(float(n_docs + 1))
                                         / (F.col("df") + F.lit(1))
                                         .cast("double"))))
-    w = Window.partitionBy(id_col).orderBy(F.desc("score"), F.asc("term"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .where(F.col("rank") <= k)
+    return (grouped_top_k(scored, id_col, "score", k=k, tiebreak=["term"])
                   .select(F.col(id_col), "term", "tf", "df", "rank",
                           F.round("score", 6).alias("score")))
 

@@ -140,11 +140,8 @@ def _dedup_columns(keys: tuple[str, ...],
 
 
 @per_context
-def _key_text_columns(strip_ansi: bool) -> dict[str, Column]:
-    text = F.col("text")
-    if strip_ansi:
-        text = F.regexp_replace(F.coalesce(text, F.lit("")), ANSI_RE, "")
-    return {"_text": text,
+def _key_text_columns() -> dict[str, Column]:
+    return {"_text": F.col("text"),
             "log_pattern_key": resolve_pattern_key(F.col("tool"))}
 
 
@@ -243,7 +240,6 @@ def unify(
     transcripts: DataFrame,
     pattern_labels: DataFrame | None = None,
     subject: str = DEFAULT_SUBJECT,
-    strip_ansi: bool = False,
     dedup: bool = True,
     fallback_level: Column | None = None,
     overrides: dict | None = None,
@@ -266,7 +262,7 @@ def unify(
         df = _dedup_turns(df, dedup_keys)
 
     df = df.withColumns({
-        **_key_text_columns(strip_ansi),
+        **_key_text_columns(),
         "_fallback_level": (F.lit("unknown") if fallback_level is None
                             else fallback_level),
     })

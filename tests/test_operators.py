@@ -860,6 +860,24 @@ def test_epoch_shuffle_matches_python_and_is_shard_invariant(spark):
     assert sorted(other.values()) == list(range(len(ids)))
 
 
+def test_epoch_shuffle_default_shards_build_no_extra_job(spark):
+    """The n_shards default comes from the context, not from the input's
+    partition count: over an aggregate (whose AQE stages
+    getNumPartitions would run) the default builds with no more jobs
+    than an explicit n_shards."""
+    from logunifier_spark.operators.sampling import epoch_shuffle
+    agg = (spark.range(0, 500, 1, 4)
+           .groupBy((F.col("id") % 50).alias("doc_id"))
+           .agg(F.count("*").alias("n")))
+    default, jobs_default = _jobs_in_group(
+        spark, "epoch-default", lambda: epoch_shuffle(agg))
+    explicit, jobs_explicit = _jobs_in_group(
+        spark, "epoch-explicit", lambda: epoch_shuffle(agg, n_shards=8))
+    assert len(jobs_default) <= len(jobs_explicit), (jobs_default,
+                                                     jobs_explicit)
+    assert sorted(default.collect()) == sorted(explicit.collect())
+
+
 def test_rollup_report_levels_and_cents(spark):
     import pytest as _pytest
     from pyspark.sql import functions as F
@@ -997,11 +1015,11 @@ def test_stratified_sample_exact_quota_and_invariance(spark):
     sizes = {r["grp"]: r["n"] for r in
              out.groupBy("grp").agg(F.count("*").alias("n")).collect()}
     assert sizes == {"g0": 50, "g1": 50, "g2": 3}   # small group keeps all
-    # partitioning/fan invariance: same keep-set regardless of layout
+    # partitioning invariance: same keep-set regardless of layout
     a = {r["doc_id"] for r in out.collect()}
     b = {r["doc_id"] for r in
          stratified_sample(df.repartition(7), "grp", n=50,
-                           id_col="doc_id", fan=3).collect()}
+                           id_col="doc_id").collect()}
     assert a == b
     # salt re-windows the quota
     c = {r["doc_id"] for r in
@@ -1074,15 +1092,15 @@ def test_skew_report_shares_and_ranks(spark):
         F.when(F.col("id") < 60, F.lit("hot"))
          .when(F.col("id") < 90, F.lit("warm"))
          .otherwise(F.concat(F.lit("c"), F.col("id"))).alias("k"))
-    out = skew_report(df, "k", top=3, fan=4).collect()
+    out = skew_report(df, "k", top=3).collect()
     by_rank = {r["rank"]: r for r in out}
     assert len(out) == 3
     assert (by_rank[1]["k"], by_rank[1]["rows"], by_rank[1]["share_ppm"]) \
         == ("hot", 60, 600000)
     assert (by_rank[2]["k"], by_rank[2]["rows"]) == ("warm", 30)
     assert by_rank[3]["rows"] == 1 and by_rank[3]["k"] == "c90"  # tie->asc
-    # invariant under partitioning/fan
-    out2 = skew_report(df.repartition(5), "k", top=3, fan=2).collect()
+    # invariant under partitioning
+    out2 = skew_report(df.repartition(5), "k", top=3).collect()
     assert sorted(map(tuple, out2)) == sorted(map(tuple, out))
 
 
@@ -1167,7 +1185,7 @@ def test_zorder_key_interleave(spark):
         zorder_key([F.col("x"), F.col("y")], bits=31)
 
 
-def test_grouped_top_k_exact_and_salt_invariant(spark):
+def test_grouped_top_k_exact_and_partitioning_invariant(spark):
     from pyspark.sql import functions as F  # noqa: F811
     from logunifier_spark.operators.stats import grouped_top_k
     rows = [("a", "t1", 5), ("a", "t2", 5), ("a", "t3", 9), ("a", "t4", 1),
@@ -1179,8 +1197,66 @@ def test_grouped_top_k_exact_and_salt_invariant(spark):
                         ("b", 1, "x"), ("b", 2, "y")}
     out2 = [(r["g"], r["rank"], r["term"]) for r in
             grouped_top_k(df.repartition(5), "g", "n", k=2,
-                          tiebreak=["term"], fan=3).collect()]
+                          tiebreak=["term"]).collect()]
     assert set(out2) == set(out)
+
+
+def _final_plan(df):
+    """The final AQE plan of `df` after a collect, as a string."""
+    df.collect()
+    adaptive = df._jdf.queryExecution().executedPlan()
+    assert adaptive.isFinalPlan()
+    return adaptive.executedPlan().toString()
+
+
+def test_grouped_top_k_plans_one_shuffle(spark, tmp_path):
+    """Over a parquet scan the grouped top-k is one shuffle with a partial
+    WindowGroupLimit below it (every map partition is cut to k rows per
+    group before the exchange); the global form is one TakeOrdered with
+    no shuffle."""
+    from logunifier_spark.operators.stats import grouped_top_k
+    path = str(tmp_path / "t.parquet")
+    spark.range(0, 2000, 1, 4).select(
+        (F.col("id") % 3).alias("g"),
+        ((F.col("id") * 7919) % 1009).alias("v"), "id").write.parquet(path)
+    df = spark.read.parquet(path)
+    grouped = _final_plan(grouped_top_k(df, "g", "v", k=5, tiebreak=["id"]))
+    assert grouped.count("ShuffleQueryStage") == 1, grouped
+    below = grouped[grouped.index("ShuffleQueryStage"):]
+    assert "WindowGroupLimit" in below and ", Partial" in below, grouped
+    top = _final_plan(grouped_top_k(df, [], "v", k=5, tiebreak=["id"]))
+    assert "TakeOrderedAndProject" in top, top
+    assert "ShuffleQueryStage" not in top and "Exchange" not in top, top
+
+
+@pytest.mark.parametrize("k", [5, 64])
+def test_top_k_hot_group_equals_python_sort(spark, k):
+    """One key holds every row, spread over 8 partitions: grouped_top_k,
+    kmv_distinct and stratified_sample each equal a Python sort."""
+    import hashlib
+    from logunifier_spark.operators.sampling import stratified_sample
+    from logunifier_spark.operators.stats import grouped_top_k, kmv_distinct
+    n = 4000
+    df = spark.range(0, n, 1, 8).select(
+        F.lit("hot").alias("g"), "id",
+        ((F.col("id") * 7919) % 1009).alias("v"))
+    rows = [(i, (i * 7919) % 1009) for i in range(n)]
+
+    top = grouped_top_k(df, "g", "v", k=k, tiebreak=["id"]).collect()
+    want = sorted(rows, key=lambda r: (-r[1], r[0]))[:k]
+    assert sorted((r["rank"], r["id"]) for r in top) == \
+        [(i + 1, r[0]) for i, r in enumerate(want)]
+
+    hashes = sorted({int(hashlib.md5(str(v).encode()).hexdigest()[:12], 16)
+                     for _, v in rows})
+    (est,) = kmv_distinct(df, "g", "v", k=k).collect()
+    assert (est["est_distinct"], est["exact"]) == \
+        ((k - 1) * (1 << 48) // hashes[k - 1], False)
+
+    kept = stratified_sample(df, "g", n=k, id_col="id").collect()
+    ph = lambda i: (i % 2**31) * 2_654_435_761 % 2**31  # noqa: E731
+    assert sorted(r["id"] for r in kept) == \
+        sorted(sorted(range(n), key=lambda i: (ph(i), i))[:k])
 
 
 def test_blocklist_suffix_semantics(spark):
@@ -1415,11 +1491,11 @@ def test_weighted_sample_properties(spark):
     # 200 heavy rows carry ~53% of total weight; they must dominate the
     # sample far beyond their 10% population share
     assert heavy > 35
-    # invariance under partitioning and fan
+    # invariance under partitioning
     a = sorted(r["doc_id"] for r in rows)
     b = sorted(r["doc_id"] for r in
-               weighted_sample(df.repartition(7), n=100, weight_col="w",
-                               fan=3).collect())
+               weighted_sample(df.repartition(7), n=100,
+                               weight_col="w").collect())
     assert a == b
     # non-positive / null weights are excluded
     df2 = df.withColumn("w", F.when(F.col("doc_id") < 1000, F.lit(-1.0)))

@@ -180,10 +180,17 @@ def test_validation_error_exact_string(unified):
 
 
 def test_strip_ansi(spark):
+    """A coloured TsLevelMsg line parses once journald's per-row
+    STRIP_ANSI label has stripped its escapes."""
+    import json
+    from logunifier_spark.pipeline import unify_journald
     text = "\x1b[90m2023-03-30T16:32:12Z\x1b[0m \x1b[31mDBG\x1b[0m Nothing to validate after 10s "
-    df = spark.createDataFrame(
-        [("c", 0, "tool", text, "tslevelmsg", BASE_TS)], TRANSCRIPT_SCHEMA)
-    r = unify(df, strip_ansi=True).collect()[0]
+    payload = {"COM_GITHUB_LOGUNIFIER_APPLICATION_PATTERN_KEY": "tslevelmsg",
+               "COM_GITHUB_LOGUNIFIER_APPLICATION_STRIP_ANSI": "true",
+               "PRIORITY": "6", "__REALTIME_TIMESTAMP": "1680193932000000",
+               "host": "worker-01", "message": text}
+    df = spark.createDataFrame([(json.dumps(payload),)], "raw string")
+    r = unify_journald(df).collect()[0]
     assert r["message"] == "Nothing to validate after 10s "
     assert r["log_level"] == "debug"
 
@@ -270,9 +277,9 @@ def test_hot_conversation_salt_spreads_partitions(spark):
     u = unify(df, pattern_labels=default_pattern_labels(spark))
     parts = [r["route_partition"] for r in
              u.select("route_partition").distinct().collect()]
-    from logunifier_spark.operators.route import DEFAULT_SALT_BUCKETS
+    from logunifier_spark.operators.route import SALT_BUCKETS
     assert len(parts) > 1                      # not pinned to one partition
-    assert len(parts) <= DEFAULT_SALT_BUCKETS  # bounded by the salt domain
+    assert len(parts) <= SALT_BUCKETS          # bounded by the salt domain
     # deterministic: same input → same partition ids
     u2 = unify(df, pattern_labels=default_pattern_labels(spark))
     parts2 = {r["route_partition"] for r in

@@ -419,15 +419,15 @@ def test_kmv_exact_below_k_and_estimate_above(spark):
                      "g", "v")
 
 
-def test_kmv_is_partitioning_and_fan_invariant(spark):
+def test_kmv_is_partitioning_invariant(spark):
     from pyspark.sql import functions as F
     from logunifier_spark.operators.stats import kmv_distinct
     df = spark.range(3_000).select(
         F.lit("x").alias("g"), (F.col("id") % 991).alias("v"))
     base = kmv_distinct(df, "g", "v", k=32).collect()[0]["est_distinct"]
     for variant in (kmv_distinct(df.repartition(13), "g", "v", k=32),
-                    kmv_distinct(df, "g", "v", k=32, fan=3),
-                    kmv_distinct(df, "g", "v", k=32, fan=64)):
+                    kmv_distinct(df.repartition(1), "g", "v", k=32),
+                    kmv_distinct(df.repartition(64, "v"), "g", "v", k=32)):
         assert variant.collect()[0]["est_distinct"] == base
 
 
